@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): one JSON line with per-query
   * wall-clock seconds on SPARK_GRAFT_SF_DIR.
   *
@@ -14,23 +12,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString
-    )
-    // engine config from ONE shared definition (GraftSession.engineConfs)
-    // so the benched engine ≡ the verified engine; the TIMING
-    // methodology below (warm-up, 3 warm passes, median, noop sink,
-    // one JSON line) is unchanged from r2.
-    val spark = GraftSession.engineConfs
-      .foldLeft(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    // the tested engine (GraftSession.local), so the benched engine ≡
+    // the verified engine; the TIMING methodology below (warm-up, 3
+    // warm passes, median, noop sink, one JSON line) is unchanged from r2.
+    val spark = GraftSession.local(GraftSession.envCores())
     // ERROR, not WARN: r4's driver tail was flooded by repeated
     // WindowExec/JoinReorder WARN lines on stderr, which can push the
     // one JSON stdout line out of the bounded capture window.
@@ -54,12 +39,7 @@ object Bench {
     }
 
     // warm-up: session, parquet footers
-    // SPARK_GRAFT_ONLY: optional comma-separated name filter for
-    // focused local iteration (the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val names = SparkEntry.queries.keys.toSeq.sorted.filter(SparkEntry.selected)
     val t = Tables(spark, sfDir)
     Seq(t.lineitem, t.orders, t.customer, t.events, t.documents, t.embeddings)
       .foreach(_.count())

@@ -67,23 +67,11 @@ object BenchAB {
     // the true median (even counts would read the upper middle)
     require(samples >= 1, s"SPARK_GRAFT_AB_SAMPLES must be >= 1: $samples")
     require(samples % 2 == 1, s"use an odd sample count for a true median: $samples")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString
-    )
     // NOTE: both arms share THIS session, so session-level config
     // (incl. engineConfs' filesystem/committer choices) applies to
     // both — the A/B isolates CODE differences between the trees;
     // session-config deltas only show in full Bench-vs-Bench runs.
-    val spark = GraftSession.engineConfs
-      .foldLeft(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val spark = GraftSession.local(GraftSession.envCores())
     spark.sparkContext.setLogLevel("ERROR")
 
     val loader = graftFirstLoader(otherDir)
@@ -97,10 +85,8 @@ object BenchAB {
       .asInstanceOf[Map[String, (SparkSession, String) => DataFrame]]
     val curQueries = SparkEntry.queries
 
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = (curQueries.keySet & otherQueries.keySet).toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+      .filter(SparkEntry.selected)
 
     // Failures are logged by name (once per query/arm) and excluded
     // from totals as -1; only NonFatal is caught so a JVM-fatal error

@@ -16,13 +16,7 @@ object Explain {
     val names =
       if (args.length > 1) args.drop(1).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val spark = GraftSession.engineConfs
-      .foldLeft(
-        SparkSession.builder()
-          .master("local[4]")
-          .config("spark.sql.shuffle.partitions", 4)
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val spark = GraftSession.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_EXECUTED: comma-separated names whose section should
     // show the EXECUTED final plan (run to completion, then print the

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Cluster-install entry point: the idiomatic way to ship this
   * library's Catalyst extensions to every session on a cluster is the
@@ -12,96 +11,28 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`),
-  * which registers the as-of join planner strategy and the fixed-arity
-  * codegen expressions as SQL functions at session build time — no
-  * per-session `ensureRegistered` calls, and SQL-only users
-  * (thriftserver, notebooks) get the `graft_*` functions without
-  * touching the Scala API.
+  * (or `withExtensions(new GraftExtensions)` on a session builder,
+  * which is how [[GraftSession.local]] builds every session this repo
+  * runs). At session build time it installs the as-of join planner
+  * strategy, the `EditDistancePrefilter` optimizer rule, and every
+  * fixed-arity function of [[plans.FunctionCatalog]], so SQL-only
+  * users (thriftserver, notebooks) get the `graft_*` functions
+  * without touching the Scala API.
   *
   * The Scala entry points (`plans.AsOfJoin.joinAsOf`,
-  * `plans.CosineSimilarity(spark, ...)`) remain self-registering for
-  * sessions built without the conf; both paths are idempotent.
-  * `MinHashBands`/`HyperplaneBands` take sketch-shape parameters
-  * (k, bands, tables, planes, dims) baked into the expression at
-  * plan-build time and stay behind their parameterized Scala
-  * constructors.
+  * `plans.CosineSimilarity(spark, ...)`) stay self-registering for
+  * sessions built without the extensions; both paths register the
+  * same catalog entry and are idempotent. The sketch UDAFs register
+  * through the udf registry instead
+  * ([[GraftSession.registerSketchUdafs]]).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  import GraftExtensions._
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectPlannerStrategy(_ => plans.AsOfJoinStrategy)
     ext.injectOptimizerRule(_ => plans.EditDistancePrefilter)
-    ext.injectFunction(
-      binaryOf(
-        plans.CosineSimilarity.FUNC_NAME,
-        "cosine similarity of two float vectors (codegen, sequential-order sums)",
-        plans.CosineSimilarity(_, _)
-      )
-    )
-    ext.injectFunction(
-      unaryOf(
-        plans.ShingleHashes.FUNC_NAME,
-        "per-shingle portable 32-bit hashes of normalized text",
-        plans.ShingleHashes(_)
-      )
-    )
-    ext.injectFunction(
-      unaryOf(
-        plans.SimHash32.FUNC_NAME,
-        "32-bit SimHash sketch of normalized text",
-        plans.SimHash32(_)
-      )
-    )
-    ext.injectFunction(
-      unaryOf(
-        plans.RollingFingerprint.FUNC_NAME,
-        "rolling polynomial fingerprint of normalized text",
-        plans.RollingFingerprint(_)
-      )
-    )
-    ext.injectFunction(
-      unaryOf(
-        plans.ShingleExplode.FUNC_NAME,
-        "table function: one row per distinct shingle hash of normalized text",
-        plans.ShingleExplode(_)
-      )
-    )
+    plans.FunctionCatalog.entries.foreach { e =>
+      ext.injectFunction((FunctionIdentifier(e.name), e.info, e.builder _))
+    }
   }
-}
-
-object GraftExtensions {
-
-  private type FunctionDescription =
-    (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
-
-  private def unaryOf(
-      name: String,
-      usage: String,
-      build: Expression => Expression
-  ): FunctionDescription =
-    (
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft", name, usage),
-      (args: Seq[Expression]) => {
-        require(args.length == 1, s"$name takes 1 argument")
-        build(args.head)
-      }
-    )
-
-  private def binaryOf(
-      name: String,
-      usage: String,
-      build: (Expression, Expression) => Expression
-  ): FunctionDescription =
-    (
-      FunctionIdentifier(name),
-      new ExpressionInfo("graft", name, usage),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, s"$name takes 2 arguments")
-        build(args(0), args(1))
-      }
-    )
 }

@@ -2,20 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine: the only place the repo
+  * builds a `SparkSession`. Every main (Bench, Verify, BenchAB,
+  * Scale10x, Explain, tools.JobProfile), the benchmark harness and the
+  * test specs call [[GraftSession.local]], so the engine that is
+  * benched and verified is the engine that is tested.
   *
-  * Local-mode defaults are tuned for the test harness (local[32],
-  * 32 shuffle partitions — NOT the 200 default, which would produce
-  * 6× more tasks than cores on tiny data). On a real cluster the same
-  * builder settings apply except `master`, and shuffle partitions are
-  * governed by AQE coalescing (`spark.sql.adaptive.*` on below), which
-  * is the 100 TB-scale posture: start high, let AQE coalesce.
+  * Local-mode defaults: one shuffle partition per core (NOT the 200
+  * default, which would produce many more tasks than cores on tiny
+  * data). On a real cluster the same settings apply except `master`,
+  * and shuffle partitions are governed by AQE coalescing — Spark's
+  * defaults (`spark.sql.adaptive.enabled`, `.coalescePartitions` and
+  * `.skewJoin` all on, pinned by `GraftSessionSpec`), which is the
+  * 100 TB-scale posture: start high, let AQE coalesce.
   */
 object GraftSession {
 
-  /** Engine configs shared by EVERY session the repo builds (queries,
-    * Verify, Bench, tools, specs) — one definition so the benchmarked,
-    * verified, and profiled engines cannot drift apart:
+  /** Engine configs of every session [[local]] builds:
     *
     *   - session timezone / parquet timestamp handling: fixture
     *     timestamps — older generations wrote TIMESTAMP(NANOS) (read
@@ -51,34 +54,37 @@ object GraftSession {
     "spark.ui.enabled" -> "false"
   )
 
+  /** A `local[cores]` session with [[engineConfs]], the
+    * [[GraftExtensions]] (as-of planner strategy, `EditDistancePrefilter`,
+    * every [[plans.FunctionCatalog]] function) and the sketch UDAFs. */
   def local(cores: Int = 32): SparkSession = {
-    val spark = engineConfs
-      .foldLeft(
-        SparkSession
-          .builder()
-          .master(s"local[$cores]")
-          .appName("graft")
-          .config("spark.sql.shuffle.partitions", cores.toString)
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-          .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      ) { case (b, (k, v)) => b.config(k, v) }
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .appName("graft")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config(engineConfs)
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     registerSketchUdafs(spark)
-    // optimizer extension (idempotent): bounded-levenshtein predicates
-    // gain the automatic length-band prefilter
-    if (!spark.experimental.extraOptimizations.contains(plans.EditDistancePrefilter))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ plans.EditDistancePrefilter
     spark
   }
 
+  /** The core count the mains pass to [[local]]: `SPARK_GRAFT_CPUS`,
+    * else `default`. */
+  def envCores(
+      default: Int = math.min(32, Runtime.getRuntime.availableProcessors())
+  ): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map { v =>
+      v.toIntOption.getOrElse(sys.error(s"SPARK_GRAFT_CPUS is not an integer: '$v'"))
+    }.getOrElse(default)
+
   /** Register the mergeable sketch Aggregators as SQL UDAFs so
     * SQL-only users can call them alongside the `graft_*` expression
-    * functions (`GraftExtensions` covers the codegen Expressions;
-    * UDAFs register per-session through the udf registry — this is
-    * idempotent, call it on any externally-built session):
+    * functions ([[GraftExtensions]] covers the codegen Expressions;
+    * UDAFs register per-session through the udf registry — [[local]]
+    * calls this; it is idempotent, call it on any externally-built
+    * session):
     *
     *   SELECT graft_hll_distinct(h)  FROM t GROUP BY g   -- DOUBLE
     *   SELECT graft_bloom(h)         FROM t GROUP BY g   -- ARRAY<LONG>

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale-linearity measurement: run the headline pipelines against a
@@ -49,18 +48,8 @@ object Scale10x {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("bench_history/r10_scale10x.json")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString
-    )
-    val spark = GraftSession.engineConfs
-      .foldLeft(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.adaptive.enabled", "true")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val cpus = GraftSession.envCores()
+    val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val metrics = new Metrics
     spark.sparkContext.addSparkListener(metrics)
@@ -74,13 +63,13 @@ object Scale10x {
       spark.read
         .format("graft-docs")
         .option("rows", d1 * mult)
-        .option("partitions", cpus.toInt)
+        .option("partitions", cpus)
         .option("seed", 7)
         .load()
         .write
         .parquet(s"$dir/documents.parquet")
       spark
-        .range(0, e1 * mult, 1, cpus.toInt)
+        .range(0, e1 * mult, 1, cpus)
         .select(
           col("id").as("vec_id"),
           transform(
@@ -292,7 +281,7 @@ object Scale10x {
       val docs = spark.read
         .format("graft-docs")
         .option("rows", rows)
-        .option("partitions", cpus.toInt)
+        .option("partitions", cpus)
         .option("seed", 11)
         .load()
         .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))
@@ -344,7 +333,7 @@ object Scale10x {
       val docs = spark.read
         .format("graft-docs")
         .option("rows", rows)
-        .option("partitions", cpus.toInt)
+        .option("partitions", cpus)
         .option("seed", 17)
         .load()
         .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))
@@ -401,7 +390,7 @@ object Scale10x {
       val docs = spark.read
         .format("graft-docs")
         .option("rows", rows)
-        .option("partitions", cpus.toInt)
+        .option("partitions", cpus)
         .option("seed", 13)
         .load()
         .select(col("doc_id"), col("n_chars").cast("long").as("n_chars"))

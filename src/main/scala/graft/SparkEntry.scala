@@ -2,7 +2,31 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** One family object's named query builders and their DuckDB oracles. */
+trait QueryFamily {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracle: Map[String, String]
+}
+
+/** The union of `families`, built once. A name declared by two families
+  * fails construction instead of silently shadowing the other query.
+  */
+final class QueryRegistry(families: Seq[QueryFamily]) {
+
+  private def union[V](maps: Seq[Map[String, V]], what: String): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity).collect {
+      case (name, uses) if uses.size > 1 => name
+    }
+    require(dups.isEmpty, s"duplicate $what name(s): ${dups.toSeq.sorted.mkString(", ")}")
+    maps.foldLeft(Map.empty[String, V])(_ ++ _)
+  }
+
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    union(families.map(_.queries), "query")
+  val oracleSql: Map[String, String] = union(families.map(_.oracle), "oracle")
+}
+
+/** Driver contract — see SURVEY.md §7.
   *
   * `queries` is the full operator surface (one entry per implemented
   * operator from SURVEY.md §2 plus the mandated extensions); `oracleSql`
@@ -15,47 +39,32 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     ops.Relational.queries("q07_revenue_by_nation")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ops.Relational.queries ++ ops.Relational2.queries ++
-      ops.Relational3.queries ++ ops.Relational4.queries ++
-      ops.Relational5.queries ++ ops.Relational6.queries ++
-      ops.Relational7.queries ++ ops.Relational8.queries ++
-      ops.Relational9.queries ++ ops.Relational10.queries ++
-      ops.Relational11.queries ++
-      ops.BenchAggs.queries ++ cdc.CdcQueries.queries ++
-      ops.TextQueries.queries ++ ops.TextQueries2.queries ++
-      ops.TextQueries3.queries ++
-      ops.DedupQueries.queries ++ ops.DedupQueries2.queries ++
-      ops.DedupQueries3.queries ++ ops.DedupQueries4.queries ++
-      ops.SimilarityQueries.queries ++ ops.SimilarityQueries2.queries ++
-      ops.SimilarityQueries3.queries ++
-      ops.StreamQueries.queries ++
-      ops.PrivacyQueries.queries ++
-      ops.TimeSeriesQueries.queries ++
-      ops.MediaQueries.queries ++
-      ops.MiscQueries.queries ++
-      ops.StorageQueries.queries ++ ops.StorageQueries2.queries ++
-      ops.StorageQueries3.queries
+  private val registry = new QueryRegistry(
+    Seq(
+      ops.Relational, ops.Relational2, ops.Relational3, ops.Relational4,
+      ops.Relational5, ops.Relational6, ops.Relational7, ops.Relational8,
+      ops.Relational9, ops.Relational10, ops.Relational11,
+      ops.BenchAggs, cdc.CdcQueries,
+      ops.TextQueries, ops.TextQueries2, ops.TextQueries3,
+      ops.DedupQueries, ops.DedupQueries2, ops.DedupQueries3, ops.DedupQueries4,
+      ops.SimilarityQueries, ops.SimilarityQueries2, ops.SimilarityQueries3,
+      ops.StreamQueries, ops.PrivacyQueries, ops.TimeSeriesQueries,
+      ops.MediaQueries, ops.MiscQueries,
+      ops.StorageQueries, ops.StorageQueries2, ops.StorageQueries3
+    )
+  )
 
-  def oracleSql: Map[String, String] =
-    ops.Relational.oracle ++ ops.Relational2.oracle ++
-      ops.Relational3.oracle ++ ops.Relational4.oracle ++
-      ops.Relational5.oracle ++ ops.Relational6.oracle ++
-      ops.Relational7.oracle ++ ops.Relational8.oracle ++
-      ops.Relational9.oracle ++ ops.Relational10.oracle ++
-      ops.Relational11.oracle ++
-      ops.BenchAggs.oracle ++ cdc.CdcQueries.oracle ++
-      ops.TextQueries.oracle ++ ops.TextQueries2.oracle ++
-      ops.TextQueries3.oracle ++
-      ops.DedupQueries.oracle ++ ops.DedupQueries2.oracle ++
-      ops.DedupQueries3.oracle ++ ops.DedupQueries4.oracle ++
-      ops.SimilarityQueries.oracle ++ ops.SimilarityQueries2.oracle ++
-      ops.SimilarityQueries3.oracle ++
-      ops.StreamQueries.oracle ++
-      ops.PrivacyQueries.oracle ++
-      ops.TimeSeriesQueries.oracle ++
-      ops.MediaQueries.oracle ++
-      ops.MiscQueries.oracle ++
-      ops.StorageQueries.oracle ++ ops.StorageQueries2.oracle ++
-      ops.StorageQueries3.oracle
+  def queries: Map[String, (SparkSession, String) => DataFrame] = registry.queries
+
+  def oracleSql: Map[String, String] = registry.oracleSql
+
+  /** `SPARK_GRAFT_ONLY`: optional comma-separated query-name filter for
+    * focused local iteration (the driver never sets it); unset selects
+    * every name. Shared by Bench, Verify and BenchAB.
+    */
+  val selected: String => Boolean = {
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    name => only.forall(_.contains(name))
+  }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * ⇒ U, `error` ⇒ D; payload = (event_type, value); ordering =
   * (ts, event_id).
   */
-object CdcQueries {
+object CdcQueries extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -12,7 +12,7 @@ import Qx._
   * comparison. Reference sites: unified_performance_test.sh:179-208,
   * 470-593; test_warm_performance.sh:64-88; compare_services.sh:115-148.
   */
-object BenchAggs {
+object BenchAggs extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * including MinHash+LSH and SimHash, whose DuckDB mirrors regenerate
   * the same signatures from the same portable-hash formulas.
   */
-object DedupQueries {
+object DedupQueries extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * training data" substring discipline, re-expressed as dataframe
   * passes instead of a suffix array.
   */
-object DedupQueries2 {
+object DedupQueries2 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

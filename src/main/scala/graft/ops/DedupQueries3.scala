@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * n-gram eval-overlap scrub (dedup10/14 catch verbatim leakage;
   * paraphrased eval items only show up in embedding space).
   */
-object DedupQueries3 {
+object DedupQueries3 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

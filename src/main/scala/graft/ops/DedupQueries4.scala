@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * dedup35→WeightedHdr, q37→ApproxNtile) applied to semantic
   * decontamination.
   */
-object DedupQueries4 {
+object DedupQueries4 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

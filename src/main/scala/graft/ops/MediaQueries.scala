@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * structure pass (shot-boundary detection, VAD-style segmenting)
   * that turns a flat frame sequence into editable units.
   */
-object MediaQueries {
+object MediaQueries extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Diagnostics, metrics-document, and multimodal-plumbing queries. */
-object MiscQueries {
+object MiscQueries extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * quasi-identifier groups (Sweeney 1997; Machanavajjhala et al.
   * 2007) and the generalization ladder that repairs violations.
   */
-object PrivacyQueries {
+object PrivacyQueries extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -13,7 +13,7 @@ import Qx._
   * skew/coalescing at scale. Every query has a DuckDB oracle in
   * [[oracle]] with identical column names and deterministic ordering.
   */
-object Relational {
+object Relational extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

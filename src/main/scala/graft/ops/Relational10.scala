@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * runs constantly (latency/size distributions without a global sort;
   * bin-packing cold small files into target-sized rewrites).
   */
-object Relational10 {
+object Relational10 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

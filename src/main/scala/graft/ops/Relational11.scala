@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * skew before paying for it, and the bitmap-style segment-overlap
   * count behind every "users who did A and B but not C" question.
   */
-object Relational11 {
+object Relational11 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

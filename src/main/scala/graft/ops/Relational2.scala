@@ -11,7 +11,7 @@ import Qx._
   * window functions (Spark has no native as-of operator — SURVEY.md
   * §2.3/§7.3 "compose built-ins first").
   */
-object Relational2 {
+object Relational2 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -10,7 +10,7 @@ import Qx._
   * analogue of PairJoins — no nested-loop, shuffle on the time cell),
   * and multimodal frame sampling.
   */
-object Relational3 {
+object Relational3 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

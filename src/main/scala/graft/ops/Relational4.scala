@@ -12,7 +12,7 @@ import Qx._
   * doubles in partition order and are not reproducible across
   * partitionings; these are).
   */
-object Relational4 {
+object Relational4 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -16,7 +16,7 @@ import Qx._
   * partition order; every window order and final ORDER BY carries a
   * unique-key tiebreak.
   */
-object Relational5 {
+object Relational5 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -9,7 +9,7 @@ import Qx._
 /** Sixth batch: the rank-function family, multiset (ALL) set
   * operations, unpivot/melt, regexp_extract_all, and date arithmetic.
   */
-object Relational6 {
+object Relational6 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

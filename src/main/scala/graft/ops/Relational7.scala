@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
   * trend fits — the profiling step before choosing partition widths,
   * salting factors, or curriculum bands over a new corpus.
   */
-object Relational7 {
+object Relational7 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * bucket-expansion interval-lookup join — the non-equi→equi rewrite
   * that keeps dimension-band joins off nested-loop plans at scale.
   */
-object Relational8 {
+object Relational8 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

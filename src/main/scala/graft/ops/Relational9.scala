@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * hot join key melting one reducer; gap-based session assignment
   * over an event stream replayed as a table).
   */
-object Relational9 {
+object Relational9 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.DecimalType
   * pairs — all with exact DuckDB mirrors (double-cast sequential dot
   * products; hyperplanes derived from the portable hash).
   */
-object SimilarityQueries {
+object SimilarityQueries extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

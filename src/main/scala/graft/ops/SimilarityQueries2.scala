@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * affordable: M·log2(K) bits per vector (here 4·3 = 12 bits vs
   * 64·32 fp32 bits) and the scan touches codes, not floats.
   */
-object SimilarityQueries2 {
+object SimilarityQueries2 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * quality on the shortlist — the binary-passage-retrieval pattern
   * (Yamada et al. 2021, BPR).
   */
-object SimilarityQueries3 {
+object SimilarityQueries3 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

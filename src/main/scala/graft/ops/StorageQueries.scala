@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * ANALYTICAL store once versions are kept instead of overwritten —
   * the Delta/Iceberg read surface re-expressed at its minimum.
   */
-object StorageQueries {
+object StorageQueries extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

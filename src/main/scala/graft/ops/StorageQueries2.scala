@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * emits ONLY fixture-derivable columns so the DuckDB oracle gates the
   * whole path.
   */
-object StorageQueries2 {
+object StorageQueries2 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

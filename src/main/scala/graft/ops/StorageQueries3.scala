@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * mechanism end to end, and emits ONLY fixture-derivable columns so
   * the DuckDB oracle gates the whole path.
   */
-object StorageQueries3 {
+object StorageQueries3 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

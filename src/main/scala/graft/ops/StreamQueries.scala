@@ -12,7 +12,7 @@ import Qx._
   * itself is exercised in CdcStreamSpec/WindowedStreamSpec with
   * MemoryStream).
   */
-object StreamQueries {
+object StreamQueries extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

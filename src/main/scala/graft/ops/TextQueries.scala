@@ -11,7 +11,7 @@ import org.apache.spark.sql.types.DecimalType
   * mirroring the expression tree exactly (same tokenization, same
   * double-arithmetic order).
   */
-object TextQueries {
+object TextQueries extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

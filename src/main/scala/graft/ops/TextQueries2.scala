@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * WHICH corpus slices feed a training run, on top of the per-doc
   * quality metrics in [[TextQueries]].
   */
-object TextQueries2 {
+object TextQueries2 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

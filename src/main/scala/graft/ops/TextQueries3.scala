@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * training-run-facing transforms between a curated corpus and an
   * actual training job.
   */
-object TextQueries3 {
+object TextQueries3 extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

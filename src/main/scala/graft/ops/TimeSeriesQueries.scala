@@ -16,7 +16,7 @@ import org.apache.spark.sql.types._
   * sufficient statistics stay exact at any row count and under any
   * partitioning.
   */
-object TimeSeriesQueries {
+object TimeSeriesQueries extends graft.QueryFamily {
 
   type Q = (SparkSession, String) => DataFrame
 

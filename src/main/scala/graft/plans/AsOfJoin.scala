@@ -40,8 +40,10 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
   *     in memory instead of a window buffer, and the right side can
   *     be orders of magnitude smaller than the unioned stream.
   *
-  * Registered via `spark.experimental.extraStrategies` (the public
-  * extension point for planner strategies); the logical node flows
+  * Installed by `GraftExtensions` at session build; on a session
+  * built without it, `joinAsOf` adds it to
+  * `spark.experimental.extraStrategies` (the public extension point
+  * for planner strategies). The logical node flows
   * through analyzer/optimizer untouched (opaque binary node) and the
   * strategy lowers it to [[AsOfJoinExec]].
   *
@@ -342,7 +344,7 @@ object AsOfJoin {
   ): DataFrame = {
     require(!(forward && nearest), "pick ONE direction: forward or nearest")
     val spark = classicDf(left).sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
+    if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
       spark.experimental.extraStrategies =
         spark.experimental.extraStrategies :+ AsOfJoinStrategy
 

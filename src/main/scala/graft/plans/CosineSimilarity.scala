@@ -97,13 +97,9 @@ object CosineSimilarity {
 
   val FUNC_NAME = "graft_cosine_similarity"
 
-  /** Idempotent session registration; returns a Column-level handle. */
+  /** Idempotent: registers this kernel's [[FunctionCatalog]] entry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FUNC_NAME,
-      exprs => CosineSimilarity(exprs(0), exprs(1)),
-      "internal"
-    )
+    FunctionCatalog.register(spark, FUNC_NAME)
 
   def apply(spark: SparkSession, a: Column, b: Column): Column = {
     register(spark)

@@ -35,9 +35,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     already present (hand-written or from a prior pass) skips the
   *     rewrite, so the fixpoint batch terminates.
   *
-  * Registered per-session via `experimental.extraOptimizations`
-  * (GraftSession) and cluster-wide via
-  * `GraftExtensions.injectOptimizerRule`.
+  * Installed by `GraftExtensions.injectOptimizerRule`, so every
+  * `GraftSession.local` session and every cluster session built with
+  * the extensions conf has it.
   */
 object EditDistancePrefilter extends Rule[LogicalPlan] {
 

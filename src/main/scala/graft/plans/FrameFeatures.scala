@@ -92,9 +92,9 @@ object FrameFeatures {
     containsNull = false
   )
 
-  /** One pass: decode the codepoints (Spark's own first-byte width
-    * table keeps char counting identical to numChars), accumulate
-    * prefix sums, then answer every frame's (flen, fsum) in O(1).
+  /** One pass: decode the codepoints ([[Utf8Cursor]] keeps char
+    * counting identical to numChars), accumulate prefix sums, then
+    * answer every frame's (flen, fsum) in O(1).
     */
   def compute(s: UTF8String, chunk: Int): ArrayData = {
     val lb = s.numBytes()
@@ -106,23 +106,8 @@ object FrameFeatures {
     var byteOff = 0
     var ci = 0
     while (ci < lc && byteOff < lb) {
-      val b0 = s.getByte(byteOff) & 0xff
-      val len = UTF8String.numBytesForFirstByte(s.getByte(byteOff))
-      val safeLen = if (byteOff + len > lb) 1 else len
-      val cp = safeLen match {
-        case 1 => b0
-        case 2 =>
-          ((b0 & 0x1f) << 6) | (s.getByte(byteOff + 1) & 0x3f)
-        case 3 =>
-          ((b0 & 0x0f) << 12) |
-            ((s.getByte(byteOff + 1) & 0x3f) << 6) |
-            (s.getByte(byteOff + 2) & 0x3f)
-        case _ =>
-          ((b0 & 0x07) << 18) |
-            ((s.getByte(byteOff + 1) & 0x3f) << 12) |
-            ((s.getByte(byteOff + 2) & 0x3f) << 6) |
-            (s.getByte(byteOff + 3) & 0x3f)
-      }
+      val len = Utf8Cursor.width(s, byteOff)
+      val cp = Utf8Cursor.codePoint(s, byteOff, len)
       cps(ci) = cp
       pre(ci + 1) = pre(ci) + cp
       byteOff += len
@@ -161,13 +146,9 @@ object FrameFeatures {
     new GenericArrayData(out)
   }
 
-  /** Idempotent session registration; returns a Column-level handle. */
+  /** Idempotent: registers this kernel's [[FunctionCatalog]] entry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FUNC_NAME,
-      exprs => FrameFeatures(exprs(0), exprs(1)),
-      "internal"
-    )
+    FunctionCatalog.register(spark, FUNC_NAME)
 
   def apply(spark: SparkSession, text: Column, chunk: Column): Column = {
     register(spark)

@@ -83,11 +83,7 @@ object RollingFingerprint {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FUNC_NAME,
-      exprs => RollingFingerprint(exprs.head),
-      "internal"
-    )
+    FunctionCatalog.register(spark, FUNC_NAME)
 
   def apply(spark: SparkSession, text: Column): Column = {
     register(spark)

@@ -64,11 +64,7 @@ object ShingleExplode {
   val FUNC_NAME = "graft_shingle_explode"
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FUNC_NAME,
-      exprs => ShingleExplode(exprs.head),
-      "internal"
-    )
+    FunctionCatalog.register(spark, FUNC_NAME)
 
   def apply(spark: SparkSession, text: Column): Column = {
     register(spark)

@@ -107,11 +107,7 @@ object ShingleHashes {
   }
 
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FUNC_NAME,
-      exprs => ShingleHashes(exprs.head),
-      "internal"
-    )
+    FunctionCatalog.register(spark, FUNC_NAME)
 
   def apply(spark: SparkSession, text: Column): Column = {
     register(spark)

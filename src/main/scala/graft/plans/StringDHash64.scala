@@ -75,28 +75,11 @@ object StringDHash64 {
     var t = 0
     val nb = s.numBytes()
     while (t <= 64 && byteOff < nb) {
-      val b0 = s.getByte(byteOff) & 0xff
-      // Spark's own first-byte width table, so cpIdx counts exactly
-      // what numChars() counted (incl. degenerate byte sequences)
-      val len = UTF8String.numBytesForFirstByte(s.getByte(byteOff))
+      // cpIdx counts exactly what numChars() counted
+      val len = Utf8Cursor.width(s, byteOff)
       // target codepoint index for sample t: ⌊t·(n−1)/64⌋
       if ((t.toLong * (n - 1).toLong) / 64L == cpIdx.toLong) {
-        // memory-safety guard for truncated trailing sequences: never
-        // read past numBytes (valid UTF-8 never hits this)
-        val cp = (if (byteOff + len > nb) 1 else len) match {
-          case 1 => b0
-          case 2 =>
-            ((b0 & 0x1f) << 6) | (s.getByte(byteOff + 1) & 0x3f)
-          case 3 =>
-            ((b0 & 0x0f) << 12) |
-              ((s.getByte(byteOff + 1) & 0x3f) << 6) |
-              (s.getByte(byteOff + 2) & 0x3f)
-          case _ =>
-            ((b0 & 0x07) << 18) |
-              ((s.getByte(byteOff + 1) & 0x3f) << 12) |
-              ((s.getByte(byteOff + 2) & 0x3f) << 6) |
-              (s.getByte(byteOff + 3) & 0x3f)
-        }
+        val cp = Utf8Cursor.codePoint(s, byteOff, len)
         while (t <= 64 && (t.toLong * (n - 1).toLong) / 64L == cpIdx.toLong) {
           vals(t) = cp
           t += 1
@@ -114,13 +97,9 @@ object StringDHash64 {
     acc
   }
 
-  /** Idempotent session registration; returns a Column-level handle. */
+  /** Idempotent: registers this kernel's [[FunctionCatalog]] entry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FUNC_NAME,
-      exprs => StringDHash64(exprs(0)),
-      "internal"
-    )
+    FunctionCatalog.register(spark, FUNC_NAME)
 
   def apply(spark: SparkSession, text: Column): Column = {
     register(spark)

@@ -231,11 +231,7 @@ object SimHash32 {
   val FUNC_NAME = "graft_simhash32"
 
   def apply(spark: SparkSession, text: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FUNC_NAME,
-      exprs => SimHash32(exprs.head),
-      "internal"
-    )
+    FunctionCatalog.register(spark, FUNC_NAME)
     call_function(FUNC_NAME, text)
   }
 }
@@ -270,11 +266,7 @@ object SimHash64 {
   val FUNC_NAME = "graft_simhash64"
 
   def apply(spark: SparkSession, text: Column): Column = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FUNC_NAME,
-      exprs => SimHash64(exprs.head),
-      "internal"
-    )
+    FunctionCatalog.register(spark, FUNC_NAME)
     call_function(FUNC_NAME, text)
   }
 }

@@ -111,13 +111,9 @@ object VideoFrameDHash {
 
   val FUNC_NAME = "graft_video_dhash"
 
-  /** Idempotent session registration; returns a Column-level handle. */
+  /** Idempotent: registers this kernel's [[FunctionCatalog]] entry. */
   def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FUNC_NAME,
-      exprs => VideoFrameDHash(exprs(0), exprs(1), exprs(2)),
-      "internal"
-    )
+    FunctionCatalog.register(spark, FUNC_NAME)
 
   def apply(
       spark: SparkSession,

@@ -92,13 +92,9 @@ object Compaction {
     // sequentially, so the file fan-out must stay spread across the
     // cluster — an AQE-coalesced exchange (tiny bytes, many bins)
     // would serialize hundreds of file writes into one task. User
-    // repartition counts are exempt from AQE coalescing; the default
-    // scales with the cluster (defaultParallelism), overridable for
-    // a production OPTIMIZE via spark.graft.compact.writeTasks.
-    val writeTasks = spark.conf
-      .getOption("spark.graft.compact.writeTasks")
-      .map(_.toInt)
-      .getOrElse(spark.sparkContext.defaultParallelism)
+    // repartition counts are exempt from AQE coalescing; the count
+    // scales with the cluster (defaultParallelism).
+    val writeTasks = spark.sparkContext.defaultParallelism
     ManifestStore.tagForStage(df, path, ManifestStore.MAIN)
       // the real columns stay in the data; the write partitions on
       // duplicates (the ManifestStore layout contract)

@@ -170,8 +170,10 @@ object DeletionVectors {
       idCol: String
   ): DataFrame = {
     val live = liveIds(snap, table, idCol)
-    val maxRecords = snap.spark.conf
-      .get(BROADCAST_MAX_RECORDS_KEY, BROADCAST_MAX_RECORDS.toString).toLong
+    val raw = snap.spark.conf
+      .get(BROADCAST_MAX_RECORDS_KEY, BROADCAST_MAX_RECORDS.toString)
+    val maxRecords = raw.toLongOption.getOrElse(throw new IllegalArgumentException(
+      s"$BROADCAST_MAX_RECORDS_KEY must be a whole number of records, got '$raw'"))
     if (pileRecords(snap, table) <= maxRecords) broadcast(live)
     else live
   }

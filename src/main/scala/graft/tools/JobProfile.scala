@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Diagnostic main (NOT part of the driver contract): run one or more
   * declared queries with a listener that attributes wall-clock to
@@ -18,19 +17,7 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString
-    )
-    val spark = graft.GraftSession.engineConfs
-      .foldLeft(
-        SparkSession.builder()
-          .master(s"local[$cpus]")
-          .config("spark.sql.shuffle.partitions", cpus)
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      ) { case (b, (k, v)) => b.config(k, v) }
-      .getOrCreate()
+    val spark = graft.GraftSession.local(graft.GraftSession.envCores())
     spark.sparkContext.setLogLevel("ERROR")
 
     final case class J(id: Int, start: Long, var end: Long, site: String,

@@ -33,13 +33,15 @@ class EditDistancePrefilterSpec extends SparkSpec {
     )
   }
 
-  /** run thunk with the rule removed, restore after */
+  /** run thunk with the rule excluded, restore after */
   private def withoutRule[T](body: => T): T = {
-    val orig = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations =
-      orig.filterNot(_ == EditDistancePrefilter)
-    try body
-    finally spark.experimental.extraOptimizations = orig
+    val key = "spark.sql.optimizer.excludedRules"
+    spark.conf.set(key, EditDistancePrefilter.ruleName)
+    try {
+      assert(!optimizedOf(pairs.filter(levenshtein(col("a"), col("b")) <= 2))
+        .contains("abs((length("), "rule still active")
+      body
+    } finally spark.conf.unset(key)
   }
 
   test("guard appears in the optimized plan and results are unchanged") {

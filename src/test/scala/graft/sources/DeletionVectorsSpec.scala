@@ -230,6 +230,23 @@ class DeletionVectorsSpec extends SparkSpec {
     } finally Scratch.deleteRecursively(root)
   }
 
+  test("a malformed broadcast ceiling fails naming its conf key") {
+    val root = Scratch.tempDir("graft-dv-badconf")
+    try {
+      ManifestStore.write(docs, root, Seq("source"))
+      DeletionVectors.delete(spark, root, ManifestStore.MAIN, "doc_id",
+        docs.filter(pmod(col("doc_id"), lit(97)) === 0).select("doc_id"))
+      val snap = ManifestStore.snapshot(spark, root)
+      spark.conf.set(DeletionVectors.BROADCAST_MAX_RECORDS_KEY, "abc")
+      try {
+        val e = intercept[IllegalArgumentException](DeletionVectors.read(snap))
+        assert(e.getMessage.contains(DeletionVectors.BROADCAST_MAX_RECORDS_KEY))
+        assert(e.getMessage.contains("'abc'"))
+      } finally
+        spark.conf.unset(DeletionVectors.BROADCAST_MAX_RECORDS_KEY)
+    } finally Scratch.deleteRecursively(root)
+  }
+
   test("readForIds reduces latest-wins over ONLY the probed ids' " +
     "records: a delete+revive pile answers point lookups exactly") {
     val root = Scratch.tempDir("graft-dv-pointslice")
