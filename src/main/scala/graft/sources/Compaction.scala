@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Small-file compaction — the OPTIMIZE action that executes q86's
   * bin-pack plan against a [[PartitionedStore]] instead of only
@@ -69,7 +70,9 @@ object Compaction {
     * the FULL (partitionCol, binCol) key — a bin's rows land whole in
     * one task (hash placement never splits a key; AQE coalescing only
     * merges whole partitions), and the dynamic-partition writer emits
-    * one file per directory per task, so one file per bin, exact. One
+    * one file per directory per task (the write pins
+    * `maxRecordsPerFile` to 0, so no session cap splits a bin), so one
+    * file per bin, exact. One
     * pass over `df`, one shuffle, no per-bin task. The files land in
     * an unreferenced staging dir and publish through ONE atomic
     * [[ManifestStore]] commit:
@@ -103,6 +106,9 @@ object Compaction {
       .repartition(writeTasks, col(partitionCol), col(binCol))
       .write
       .partitionBy(s"__p_$partitionCol", s"__bin_$binCol")
+      // no per-file record cap, whatever the session sets: a capped
+      // writer would split a bin across several files
+      .option("maxRecordsPerFile", 0L)
       .mode("overwrite")
       .parquet(staging)
     ManifestStore.commit(spark, path, Seq(ManifestStore.Staged(
@@ -143,11 +149,15 @@ object Compaction {
     // the plan's binning supersedes whatever binning rides the store
     // (a planted store carries bin = its ingest file; a previously
     // compacted store carries the last plan's bins)
-    val store = snap.read().drop("bin")
+    val store = snap.read().drop("bin").as("s")
     val planSlim =
-      binPlan.select((partitionCol +: keyCols :+ "bin").map(col): _*)
+      binPlan.select((partitionCol +: keyCols :+ "bin").map(col): _*).as("p")
+    // null-safe: a null partition value is a partition like any other
+    // (the writer's __HIVE_DEFAULT_PARTITION__ directory)
+    def same(c: String) = col(s"s.$c") <=> col(s"p.$c")
     val frame = store
-      .join(broadcast(planSlim), partitionCol +: keyCols)
+      .join(broadcast(planSlim), (partitionCol +: keyCols).map(same).reduce(_ && _))
+      .select(col("s.*"), col("p.bin"))
       .localCheckpoint(true)
     try {
       // expected rows of the touched partitions, from the MANIFEST's
@@ -157,6 +167,10 @@ object Compaction {
       // of a foreign spec (post-evolvePartitionSpec generations) keyed
       // on other columns can hold touched rows the metadata cannot
       // attribute, so a mixed-spec table falls back to the exact scan.
+      // The lookup matches the values' string casts against the
+      // manifest's directory strings, which agree only for non-null,
+      // non-empty strings and integers (the writer renders null and ""
+      // as __HIVE_DEFAULT_PARTITION__); any other value takes the scan.
       val touchedVals = planSlim
         .select(col(partitionCol).cast("string"))
         .distinct()
@@ -165,16 +179,21 @@ object Compaction {
         .toSet
       val st = snap.state(ManifestStore.MAIN)
       val singleSpec = st.partitions.values.forall(_.cols == Seq(partitionCol))
+      val castMatchesDir = store.schema(partitionCol).dataType match {
+        case StringType | ByteType | ShortType | IntegerType | LongType =>
+          touchedVals.forall(v => v != null && v.nonEmpty)
+        case _ => false
+      }
       val expected =
-        if (singleSpec)
+        if (singleSpec && castMatchesDir)
           st.partitions.values
             .filter(p => touchedVals.contains(p.values.head))
             .map(_.rows)
             .sum
         else {
-          val touched = planSlim.select(col(partitionCol)).distinct()
+          val touched = planSlim.select(col(partitionCol)).distinct().as("p")
           store
-            .join(broadcast(touched), Seq(partitionCol), "left_semi")
+            .join(broadcast(touched), same(partitionCol), "left_semi")
             .count()
         }
       require(

@@ -77,12 +77,59 @@ object DeletionVectors {
   ): DataFrame =
     ids.select(col(idCol), lit(seq).as(SEQ_COL), lit(true).as(DEL_COL))
 
-  private[sources] def reviveRecords(
-      ids: DataFrame,
+  /** A batch's delete and revive records at `seq`, built on the
+    * driver from the ids it already holds — a local relation, so
+    * staging it scans no input and no emptiness probe runs (the
+    * caller knows the sizes). Same schema as [[deleteRecords]] over a
+    * table's key column.
+    */
+  private[sources] def localRecords(
+      spark: SparkSession,
       idCol: String,
-      seq: Long
-  ): DataFrame =
-    ids.select(col(idCol), lit(seq).as(SEQ_COL), lit(false).as(DEL_COL))
+      seq: Long,
+      deletes: Seq[Long],
+      revives: Seq[Long]
+  ): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField(idCol, LongType),
+      StructField(SEQ_COL, LongType, nullable = false),
+      StructField(DEL_COL, BooleanType, nullable = false)))
+    val rows = deletes.map(Row(_, seq, true)) ++ revives.map(Row(_, seq, false))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** The ids among `ids` whose vector state is DEAD — the
+    * [[liveIds]] reduction restricted to the probed ids. Their
+    * records come through [[ManifestStore.Snapshot.readForIds]] on
+    * the sidecar (zone-map screened, so O(candidate run files), never
+    * a pile scan) in ONE collect of O(ids' records) rows, and
+    * latest-wins reduces on the driver. Exact for the same reason as
+    * [[readForIds]]: an id's state depends only on its own records.
+    */
+  private[sources] def deadAmong(
+      snap: ManifestStore.Snapshot,
+      table: String,
+      idCol: String,
+      ids: Seq[Long]
+  ): Seq[Long] = {
+    val dvName = dvTable(table)
+    if (ids.isEmpty || !snap.hasTable(dvName)) Seq.empty
+    else
+      snap.readForIds(dvName, idCol, ids)
+        .select(col(idCol), col(SEQ_COL), col(DEL_COL))
+        // a scan runs one task per candidate run file otherwise
+        .coalesce(snap.spark.sparkContext.defaultParallelism)
+        .collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2)))
+        .toSeq
+        // greatest (dv_seq, dv_del) per id; true > false, so on a seq
+        // tie the delete wins — liveIds' ordering
+        .groupMapReduce(_._1)(_._2)(Ordering[(Long, Boolean)].max)
+        .collect { case (id, (_, true)) => id }
+        .toSeq
+  }
 
   /** One sorted single-file staged run of DV records — O(batch) data
     * bytes and one O(batch) write task per commit, never O(vector).

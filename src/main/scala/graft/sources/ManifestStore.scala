@@ -994,72 +994,44 @@ object ManifestStore {
     }
   }
 
-  /** List one staged directory's parquet files, grouped by partition
-    * values parsed from the `__p_<col>=<v>` path segments. The walk
-    * (name + size, no file opens) is a driver-side NIO pass —
-    * microseconds per file; the footer stats are a SPARK JOB over the
-    * listed files ([[footerEntry]] runs in tasks), so the per-file
-    * metadata IO parallelizes across the cluster and the driver opens
-    * no footers — at an initial 100 TB corpus commit that is the
-    * difference between minutes of executor fan-out and millions of
-    * serial driver reads.
+  /** One staged file: absolute path, bytes, root-relative path, and
+    * the partition values parsed from its `__p_<col>=<v>` segments.
     */
-  private def listStaged(
-      spark: SparkSession,
-      root: String,
-      st: Staged
-  ): Map[String, PartitionEntry] = {
+  private type StagedFile = (String, Long, String, Seq[String])
+
+  /** List one staged directory's parquet files with their partition
+    * values. The walk (name + size, no file opens) is a driver-side
+    * NIO pass — microseconds per file; the footers are opened by
+    * [[toActions]] in one Spark job.
+    */
+  private def walkStaged(root: String, st: Staged): Seq[StagedFile] = {
     val rootUri = new org.apache.hadoop.fs.Path(root).toUri.getPath
-    // (absolute path, bytes, root-relative path, partition values)
-    val metas: Seq[(String, Long, String, Seq[String])] = {
-      import scala.jdk.CollectionConverters._
-      val dirNio = localPath(st.dir)
-      if (!java.nio.file.Files.exists(dirNio)) Seq.empty
-      else {
-        val walk = java.nio.file.Files.walk(dirNio)
-        try walk.iterator().asScala.flatMap { p =>
-          val name = p.getFileName.toString
-          if (java.nio.file.Files.isRegularFile(p) &&
-            name.endsWith(".parquet") &&
-            !name.startsWith("_") && !name.startsWith(".")) {
-            val full = p.toUri.getPath
-            require(full.startsWith(rootUri + "/"), s"$full outside $root")
-            val rel = full.stripPrefix(rootUri + "/")
-            val segs = full.split('/')
-            val values = st.partitionCols.map { c =>
-              val pfx = s"__p_$c="
-              segs.collectFirst { case s if s.startsWith(pfx) =>
-                unescape(s.stripPrefix(pfx))
-              }.getOrElse(throw new IllegalStateException(
-                s"staged file $rel has no $pfx segment"))
-            }
-            Some((full, java.nio.file.Files.size(p), rel, values))
-          } else None
-        }.toVector
-        finally walk.close()
-      }
+    import scala.jdk.CollectionConverters._
+    val dirNio = localPath(st.dir)
+    if (!java.nio.file.Files.exists(dirNio)) Seq.empty
+    else {
+      val walk = java.nio.file.Files.walk(dirNio)
+      try walk.iterator().asScala.flatMap { p =>
+        val name = p.getFileName.toString
+        if (java.nio.file.Files.isRegularFile(p) &&
+          name.endsWith(".parquet") &&
+          !name.startsWith("_") && !name.startsWith(".")) {
+          val full = p.toUri.getPath
+          require(full.startsWith(rootUri + "/"), s"$full outside $root")
+          val rel = full.stripPrefix(rootUri + "/")
+          val segs = full.split('/')
+          val values = st.partitionCols.map { c =>
+            val pfx = s"__p_$c="
+            segs.collectFirst { case s if s.startsWith(pfx) =>
+              unescape(s.stripPrefix(pfx))
+            }.getOrElse(throw new IllegalStateException(
+              s"staged file $rel has no $pfx segment"))
+          }
+          Some((full, java.nio.file.Files.size(p), rel, values))
+        } else None
+      }.toVector
+      finally walk.close()
     }
-    if (metas.isEmpty) return Map.empty
-    // one footer open per file, in executor tasks — a few files per
-    // task so micro-batch commits stay one short local job
-    val slices = math.max(1, math.min(metas.length / 4 + 1,
-      spark.sparkContext.defaultParallelism))
-    val entries: Seq[(Seq[String], FileEntry)] = spark.sparkContext
-      .parallelize(metas, slices)
-      .mapPartitions { it =>
-        it.map { case (abs, bytes, rel, values) =>
-          (values, footerEntry(abs, bytes, rel))
-        }
-      }
-      .collect()
-      .toSeq
-    entries
-      .groupBy(e => keyOf(st.partitionCols, e._1))
-      .map { case (key, group) =>
-        // deterministic log content: files sorted by path
-        key -> PartitionEntry(group.head._1,
-          group.map(_._2).sortBy(_.path), st.partitionCols)
-      }
   }
 
   /** Open ONE parquet footer and build its [[FileEntry]] — row count
@@ -1302,15 +1274,51 @@ object ManifestStore {
     tables
   }
 
+  /** The commit's [[Action]]s: every staged table's files listed on
+    * the driver ([[walkStaged]]), then the footers of ALL of them
+    * opened in ONE Spark job ([[footerEntry]] runs in tasks, a few
+    * files per task) — so a multi-table commit (a merge's data and
+    * vector runs) pays one short job, not one per table, and the
+    * driver opens no footers: at an initial 100 TB corpus commit that
+    * is the difference between minutes of executor fan-out and
+    * millions of serial driver reads.
+    */
   private def toActions(
       spark: SparkSession,
       root: String,
       staged: Seq[Staged]
-  ): Seq[Action] =
-    staged.map { st =>
-      Action(st.table, st.mode, st.partitionCols, st.schemaDdl,
-        listStaged(spark, root, st), st.drops)
+  ): Seq[Action] = {
+    val files: Seq[(Int, StagedFile)] = staged.zipWithIndex.flatMap {
+      case (st, i) => walkStaged(root, st).map(i -> _)
     }
+    val opened: Map[Int, Seq[(Seq[String], FileEntry)]] =
+      if (files.isEmpty) Map.empty
+      else {
+        val slices = math.max(1, math.min(files.length / 4 + 1,
+          spark.sparkContext.defaultParallelism))
+        spark.sparkContext
+          .parallelize(files, slices)
+          .mapPartitions { it =>
+            it.map { case (i, (abs, bytes, rel, values)) =>
+              i -> (values, footerEntry(abs, bytes, rel))
+            }
+          }
+          .collect()
+          .toSeq
+          .groupMap(_._1)(_._2)
+      }
+    staged.zipWithIndex.map { case (st, i) =>
+      val partitions = opened.getOrElse(i, Seq.empty)
+        .groupBy(e => keyOf(st.partitionCols, e._1))
+        .map { case (key, group) =>
+          // deterministic log content: files sorted by path
+          key -> PartitionEntry(group.head._1,
+            group.map(_._2).sortBy(_.path), st.partitionCols)
+        }
+      Action(st.table, st.mode, st.partitionCols, st.schemaDdl,
+        partitions, st.drops)
+    }
+  }
 
   /** Internal resolved state at a version (snapshot minus the spark
     * handle).

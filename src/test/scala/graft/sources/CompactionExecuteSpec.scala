@@ -39,6 +39,19 @@ class CompactionExecuteSpec extends SparkSpec {
       .select(col("source"), col("file_id"), col("bin"))
   }
 
+  /** Distinct bins per source in `plan` — a null source keyed by the
+    * directory value the partitioned writer gives it, as the manifest
+    * lists it.
+    */
+  private def binsPerSource(plan: org.apache.spark.sql.DataFrame) =
+    plan
+      .groupBy(col("source"))
+      .agg(countDistinct(col("bin")).as("n_bins"))
+      .collect()
+      .map(r => Option(r.getString(0)).getOrElse("__HIVE_DEFAULT_PARTITION__") ->
+        r.getAs[Long]("n_bins"))
+      .toMap
+
   test("OPTIMIZE racing ingest: a stale-base rewrite publishes nothing; re-plan succeeds") {
     Scratch.withTempDir("graft-cx-race") { path =>
       Compaction.writeBinned(plantedDocs, path, "source", "file_id",
@@ -192,6 +205,52 @@ class CompactionExecuteSpec extends SparkSpec {
       assert(ManifestStore.snapshot(spark, path).version === beforeVersion,
         "refused rewrite still published a manifest version")
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(fullPlan)
+    }
+  }
+
+  test("one file per bin even when the session caps records per file") {
+    Scratch.withTempDir("graft-cx-maxrec") { path =>
+      Compaction.writeBinned(plantedDocs, path, "source", "file_id",
+        dynamic = false)
+      val plan = binPlanFor(path)
+      val expectedBins = binsPerSource(plan)
+      spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
+      try Compaction.execute(spark, path, "source", Seq("file_id"), plan)
+      finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+      listParquet(path).foreach { case (src, fs) =>
+        assert(fs.size.toLong === expectedBins(src),
+          s"$src has ${fs.size} files, planned ${expectedBins(src)} bins")
+      }
+    }
+  }
+
+  test("a null partition value is compacted like any other, rows intact") {
+    Scratch.withTempDir("graft-cx-null") { path =>
+      // null out the source of a partition that has files to merge
+      val multi = plantedDocs.groupBy(col("source"))
+        .agg(countDistinct(col("file_id")).as("n"))
+        .filter(col("n") > 1).select(min(col("source"))).head().getString(0)
+      val planted = plantedDocs.withColumn("source",
+        when(col("source") === multi, lit(null).cast("string"))
+          .otherwise(col("source")))
+      Compaction.writeBinned(planted, path, "source", "file_id",
+        dynamic = false)
+      val nullKey = "__HIVE_DEFAULT_PARTITION__"
+      assert(listParquet(path)(nullKey).size > 1,
+        "fixture: the null partition must start with several files")
+      def rows = ManifestStore.read(spark, path).drop("bin")
+        .collect().map(_.toSeq.mkString("|")).sorted.toSeq
+      val before = rows
+      val plan = binPlanFor(path)
+      val expectedBins = binsPerSource(plan)
+      Compaction.execute(spark, path, "source", Seq("file_id"), plan)
+      val after = listParquet(path)
+      assert(after.keySet === expectedBins.keySet)
+      after.foreach { case (src, fs) =>
+        assert(fs.size.toLong === expectedBins(src),
+          s"$src has ${fs.size} files, planned ${expectedBins(src)} bins")
+      }
+      assert(rows === before, "compaction must keep every row")
     }
   }
 }

@@ -262,8 +262,8 @@ class DeletionVectorsSpec extends SparkSpec {
       val seq2 = ManifestStore.snapshot(spark, root).version + 1
       ManifestStore.commit(spark, root, Seq(
         DeletionVectors.stageRecords(
-          DeletionVectors.reviveRecords(
-            Seq(revivedId).toDF("doc_id"), "doc_id", seq2),
+          DeletionVectors.localRecords(
+            spark, "doc_id", seq2, Seq.empty, Seq(revivedId)),
           root, ManifestStore.MAIN, "doc_id")))
       val snap = ManifestStore.snapshot(spark, root)
       assert(DeletionVectors.readForIds(snap, ManifestStore.MAIN,

@@ -1,6 +1,9 @@
 package graft.sources
 
 import graft.{SparkSpec, Tables}
+import graft.cdc.Materializer
+import org.apache.spark.GraftTestAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,6 +29,48 @@ class MergeIntoSpec extends SparkSpec {
   private def ev(df: DataFrame, op: String, ts: Long, seq: Long) =
     df.select(col("doc_id"), col("source"), col("n_chars"),
       lit(op).as("op"), lit(ts).as("ts"), lit(seq).as("seq"))
+
+  /** `df`'s rows re-spread over `parts` input partitions — the shape
+    * a streaming batch arrives in, one partition per producer write.
+    */
+  private def spread(df: DataFrame, parts: Int): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(df.collect().toSeq, parts), df.schema)
+
+  /** (the call site of every job started, widest stage's task count)
+    * while `body` runs. The bus is drained before the listener joins,
+    * so no earlier event is counted, and again before the counters
+    * are read.
+    */
+  private def jobBudget(body: => Unit): (Seq[String], Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val widest = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name).mkString(" + "))
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        widest.accumulateAndGet(e.stageInfo.numTasks, math.max)
+    }
+    GraftTestAccess.drainListeners(sc)
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      GraftTestAccess.drainListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    (jobs.asScala.toSeq, widest.get)
+  }
+
+  /** The records one commit appended to the vector, as (id, delete). */
+  private def recordsAt(snap: ManifestStore.Snapshot): Seq[(Long, Boolean)] =
+    snap.read(DeletionVectors.dvTable(ManifestStore.MAIN))
+      .filter(col(DeletionVectors.SEQ_COL) === snap.version)
+      .collect().map(r => (r.getLong(0), r.getBoolean(2))).sorted.toSeq
+
+  private def deadIds(snap: ManifestStore.Snapshot): Set[Long] =
+    DeletionVectors.liveIds(snap).collect().map(_.getLong(0)).toSet
 
   test("merge batches + redeliveries ≡ one-shot materialize; deletes " +
     "are vector entries; reinserts clear them") {
@@ -162,6 +207,98 @@ class MergeIntoSpec extends SparkSpec {
         when(col("source") === src0, lit("elsewhere"))
           .otherwise(col("source")))
       assert(canon(DeletionVectors.read(snap)) === canon(expect))
+    } finally Scratch.deleteRecursively(root)
+  }
+
+  test("an applied merge of a 64-partition batch runs at most 9 Spark " +
+    "jobs and no stage wider than one task per core") {
+    val root = Scratch.tempDir("graft-merge-budget")
+    try {
+      ManifestStore.write(docs, root, Seq("source"))
+      val k = col("doc_id")
+      // a vector already exists: the revive screen and the append run
+      val killed = docs.filter(pmod(k, lit(9)) === 4)
+      DeletionVectors.delete(spark, root, ManifestStore.MAIN, "doc_id",
+        killed.select(k))
+      val mixed = ev(docs.filter(pmod(k, lit(6)) === 0)
+        .withColumn("n_chars", col("n_chars") + lit(7L)), "U", 1, 1)
+        .unionByName(ev(docs.filter(pmod(k, lit(8)) === 1), "D", 1, 2))
+        .unionByName(ev(killed.filter(pmod(k, lit(2)) === 0)
+          .withColumn("n_chars", lit(5L)), "I", 1, 3))
+        .unionByName(ev(docs.filter(pmod(k, lit(10)) === 3)
+          .withColumn("doc_id", k + lit(50000L)), "I", 1, 4))
+      val batch = spread(mixed, 64)
+      assert(batch.rdd.getNumPartitions === 64)
+      val (jobs, widest) = jobBudget {
+        val (_, applied) = MergeInto.merge(spark, root, batch, "budget", 0L)
+        assert(applied)
+      }
+      val cores = spark.sparkContext.defaultParallelism
+      assert(jobs.size <= 9, s"an applied merge ran ${jobs.size} Spark " +
+        jobs.mkString("jobs:\n", "\n", ""))
+      assert(widest <= cores,
+        s"a merge stage ran $widest tasks on $cores cores")
+      val expect = Materializer.materialize(
+        ev(docs, "I", 0, 0).unionByName(ev(killed, "D", 0, 1))
+          .unionByName(mixed), keyCol = "doc_id")
+      assert(canon(DeletionVectors.read(ManifestStore.snapshot(spark, root)))
+        === canon(expect))
+    } finally Scratch.deleteRecursively(root)
+  }
+
+  test("the revive screen revives exactly the currently-dead upserted " +
+    "keys, through both readForIds residual shapes") {
+    val root = Scratch.tempDir("graft-merge-revive")
+    try {
+      import spark.implicits._
+      ManifestStore.write(docs, root, Seq("source"))
+      val k = col("doc_id")
+      val Array(compacted, older, revived, never) =
+        docs.orderBy("doc_id").limit(4).collect().map(_.getLong(0))
+      def kill(ids: Long*) = DeletionVectors.delete(spark, root,
+        ManifestStore.MAIN, "doc_id", ids.toDF("doc_id"))
+      def rows(ids: Seq[Long]) = docs.filter(k.isin(ids: _*))
+      // compacted: its delete record is folded into the compacted run;
+      // older: deleted after compactDv, in a run later runs pile on;
+      // revived: deleted, then already revived by an earlier merge;
+      // never: never deleted
+      kill(compacted)
+      DeletionVectors.compactDv(spark, root)
+      kill(older)
+      kill(revived)
+      val reins = ev(rows(Seq(revived)).withColumn("n_chars", lit(11L)), "I", 2, 1)
+      MergeInto.merge(spark, root, reins, "revive", 0L)
+      val log0 = ev(docs, "I", 0, 0)
+        .unionByName(ev(rows(Seq(compacted, older, revived)), "D", 1, 0))
+        .unionByName(reins)
+
+      val four = Seq(compacted, older, revived, never)
+      val b1 = ev(rows(four).withColumn("n_chars", lit(99L)), "U", 3, 1)
+      val dead1 = deadIds(ManifestStore.snapshot(spark, root))
+      assert(dead1.intersect(four.toSet) === Set(compacted, older))
+      MergeInto.merge(spark, root, b1, "revive", 1L)
+      val s1 = ManifestStore.snapshot(spark, root)
+      assert(recordsAt(s1) === Seq(compacted, older).sorted.map(_ -> false),
+        "one revive record per currently-dead key, none for live keys")
+      val log1 = log0.unionByName(b1)
+      assert(canon(DeletionVectors.read(s1))
+        === canon(Materializer.materialize(log1, keyCol = "doc_id")))
+
+      // more upserted keys than ISIN_MAX: the sidecar probe semi-joins
+      // a broadcast id frame instead of an isin list
+      kill(docs.filter(pmod(k, lit(5)) === 2).collect().map(_.getLong(0)).toSeq: _*)
+      val log2 = log1.unionByName(ev(docs.filter(pmod(k, lit(5)) === 2), "D", 4, 0))
+      val wide = docs.filter(pmod(k, lit(3)) =!= 0)
+      val b2 = ev(wide.withColumn("n_chars", col("n_chars") + lit(3L)), "U", 5, 1)
+      val wideIds = wide.collect().map(_.getLong(0)).toSet
+      assert(wideIds.size > ManifestStore.ISIN_MAX)
+      val dead2 = deadIds(ManifestStore.snapshot(spark, root)).intersect(wideIds)
+      assert(dead2.nonEmpty)
+      MergeInto.merge(spark, root, b2, "revive", 2L)
+      val s2 = ManifestStore.snapshot(spark, root)
+      assert(recordsAt(s2) === dead2.toSeq.sorted.map(_ -> false))
+      assert(canon(DeletionVectors.read(s2)) === canon(
+        Materializer.materialize(log2.unionByName(b2), keyCol = "doc_id")))
     } finally Scratch.deleteRecursively(root)
   }
 }

@@ -1,0 +1,58 @@
+#!/usr/bin/env python3
+"""Per-merge Spark job list from a traced perfbench cdc_ingest run.
+
+    python3 perfbench/run.py --workload cdc_ingest --seed 801 --trace 1
+    python3 tools/merge_jobs.py .bench_build/results/cdc_ingest-seed801-spans.json
+
+For every `merge` span it prints the wall time, the number of Spark jobs
+launched under it, the widest stage's task count, the driver gap (wall
+time not covered by any running job) and, per job, its stages' task
+counts and its duration.
+"""
+import json
+import sys
+
+
+def covered_ns(intervals):
+    """Total length of the union of (start, end) intervals."""
+    total, end = 0, None
+    for s, e in sorted(intervals):
+        if end is None or s > end:
+            total += e - s
+            end = e
+        elif e > end:
+            total += e - end
+            end = e
+    return total
+
+
+def main(path):
+    with open(path) as f:
+        trace = json.load(f)
+    spans = {s["id"]: s for s in trace["spans"]}
+    stages = {s["stage"]: s for s in trace["stages"]}
+
+    def under(span_id, root):
+        while span_id:
+            if span_id == root:
+                return True
+            span_id = spans[span_id]["parent"] if span_id in spans else 0
+        return False
+
+    merges = sorted((s for s in trace["spans"] if s["name"] == "merge"), key=lambda s: s["start"])
+    for n, m in enumerate(merges):
+        jobs = sorted((j for j in trace["jobs"] if under(j["span"], m["id"])), key=lambda j: j["start"])
+        wall = (m["end"] - m["start"]) / 1e9
+        gap = wall - covered_ns([(j["start"], j["end"]) for j in jobs]) / 1e9
+        tasks = [[stages[s]["tasks"] for s in j["stages"] if s in stages] for j in jobs]
+        widest = max((t for ts in tasks for t in ts), default=0)
+        print(f"merge {n}: {wall:.3f} s, {len(jobs)} jobs, widest stage {widest} tasks, "
+              f"driver gap {gap:.3f} s")
+        for j, ts in zip(jobs, tasks):
+            print(f"  job {j['job']:4d}  stages {ts}  {(j['end'] - j['start']) / 1e9:.3f} s")
+
+
+if __name__ == "__main__":
+    if len(sys.argv) != 2:
+        sys.exit(__doc__)
+    main(sys.argv[1])
