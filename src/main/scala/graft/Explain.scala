@@ -40,8 +40,8 @@ object Explain {
       manifestExhibit(spark, sfDir)
     // SPARK_GRAFT_DV_EXHIBIT: dump the INNER deletion-vector read
     // plans (the gated rows checkpoint their frames, so their own
-    // dump is a LogicalRDD leaf): the size-gated anti-join side of
-    // DeletionVectors.read on both sides of the broadcast ceiling,
+    // dump is a LogicalRDD leaf): the planner-sized anti-join of
+    // DeletionVectors.read with broadcast allowed and disallowed,
     // and the id-sliced point-lookup pile reduction of readForIds.
     if (sys.env.contains("SPARK_GRAFT_DV_EXHIBIT"))
       dvExhibit(spark, sfDir)
@@ -91,28 +91,17 @@ object Explain {
       DeletionVectors.delete(spark, path, ManifestStore.MAIN, "doc_id",
         docs.filter(pmod(col("doc_id"), lit(97)) === 0).select("doc_id"))
       val snap = ManifestStore.snapshot(spark, path)
-      println("\n==== dv_read:below_broadcast_ceiling " +
-        "(pile within spark.graft.dv.broadcast.maxRecords — the " +
-        "anti-join side carries the broadcast hint) ====")
+      println("\n==== dv_read:planner_broadcast " +
+        "(no hint: the planner sizes the anti-join side from the " +
+        "sidecar's manifest file bytes and elects broadcast) ====")
       DeletionVectors.read(snap).explain("formatted")
-      println("\n==== dv_read:above_broadcast_ceiling " +
-        "(ceiling forced to 0 — NO forced broadcast hint; at this " +
-        "sf the planner still ELECTS broadcast from its estimates, " +
-        "which is the point: the decision is the planner's, sized by " +
-        "stats, not an unconditional hint) ====")
-      spark.conf.set(DeletionVectors.BROADCAST_MAX_RECORDS_KEY, "0")
-      try {
-        DeletionVectors.read(snap).explain("formatted")
-        println("\n==== dv_read:above_ceiling_large_vector " +
-          "(ceiling 0 AND autoBroadcastJoinThreshold=-1 — what the " +
-          "planner does when the vector is too big to broadcast: the " +
-          "shuffle anti-join the unconditional hint could never " +
-          "reach) ====")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try DeletionVectors.read(snap).explain("formatted")
-        finally
-          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      } finally spark.conf.unset(DeletionVectors.BROADCAST_MAX_RECORDS_KEY)
+      println("\n==== dv_read:large_vector " +
+        "(autoBroadcastJoinThreshold=-1 — what the planner does when " +
+        "the vector is too big to broadcast: a shuffle anti-join) ====")
+      val threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try DeletionVectors.read(snap).explain("formatted")
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
       val probe = docs.orderBy("doc_id").limit(3)
         .collect().map(_.getLong(0)).toSeq
       println("\n==== dv_readForIds:id_sliced_pile " +
@@ -183,6 +172,7 @@ object Explain {
   private def manifestExhibit(spark: SparkSession, sfDir: String): Unit = {
     import org.apache.spark.sql.functions._
     import graft.sources.{ManifestStore, Scratch}
+    import graft.sources.ManifestStore.Bound
     val docs = Tables(spark, sfDir).documents
       .select(col("doc_id"), col("source"),
         col("n_chars").cast("long").as("n_chars"))
@@ -196,10 +186,11 @@ object Explain {
       val (mn, mx) = (b.getLong(0), b.getLong(1))
       val (lo, hi) = (mn + (mx - mn) / 4, mn + (mx - mn) / 2)
       val snap = ManifestStore.snapshot(spark, path)
-      val (kept, total) = snap.rangeFiles(ManifestStore.MAIN, "doc_id", lo, hi)
-      println(s"-- doc_id range [$lo, $hi]: kept ${kept.length} of " +
-        s"$total files via manifest (min,max) BEFORE any listing --")
-      snap.readRange(ManifestStore.MAIN, "doc_id", lo, hi).explain("formatted")
+      val bounds = Seq(Bound.LongRange("doc_id", lo, hi))
+      val sc = snap.screen(ManifestStore.MAIN, bounds)
+      println(s"-- doc_id range [$lo, $hi]: kept ${sc.files.length} of " +
+        s"${sc.filesTotal} files via manifest (min,max) BEFORE any listing --")
+      snap.readBox(ManifestStore.MAIN, bounds).explain("formatted")
       ()
     }
 
@@ -214,12 +205,11 @@ object Explain {
         .orderBy("source").collect().map(_.getString(0))
       val (lo, hi) = (srcs(srcs.length / 4), srcs(srcs.length / 2))
       val snap = ManifestStore.snapshot(spark, path)
-      val (kept, total) =
-        snap.prunedFilesStr(ManifestStore.MAIN, Seq(("source", lo, hi)))
-      println(s"-- source range ['$lo', '$hi']: kept ${kept.length} of " +
-        s"$total files via truncated string bounds --")
-      snap.readRangeStr(ManifestStore.MAIN, "source", lo, hi)
-        .explain("formatted")
+      val bounds = Seq(Bound.StrRange("source", lo, hi))
+      val sc = snap.screen(ManifestStore.MAIN, bounds)
+      println(s"-- source range ['$lo', '$hi']: kept ${sc.files.length} of " +
+        s"${sc.filesTotal} files via truncated string bounds --")
+      snap.readBox(ManifestStore.MAIN, bounds).explain("formatted")
       ()
     }
 
@@ -240,11 +230,11 @@ object Explain {
         path + "/zorder", Seq("fid"))
       val lin = ManifestStore.snapshot(spark, path + "/linear")
       val zed = ManifestStore.snapshot(spark, path + "/zorder")
-      val yBand = Seq(("x", 0L, 63L), ("y", 16L, 31L))
-      val (lk, lt) = lin.prunedFiles(ManifestStore.MAIN, yBand)
-      val (zk, zt) = zed.prunedFiles(ManifestStore.MAIN, yBand)
-      println(s"-- y-band probe: linear kept ${lk.length}/$lt (1-D layout " +
-        s"is blind to y), z-order kept ${zk.length}/$zt --")
+      val yBand = Seq(Bound.LongRange("x", 0L, 63L), Bound.LongRange("y", 16L, 31L))
+      val l = lin.screen(ManifestStore.MAIN, yBand)
+      val z = zed.screen(ManifestStore.MAIN, yBand)
+      println(s"-- y-band probe: linear kept ${l.files.length}/${l.filesTotal} " +
+        s"(1-D layout is blind to y), z-order kept ${z.files.length}/${z.filesTotal} --")
       println("-- z-order y-band read (scan lists ONLY the kept tiles): --")
       zed.readBox(ManifestStore.MAIN, yBand).explain("formatted")
       ()
@@ -263,12 +253,12 @@ object Explain {
         full.filter(pmod(col("doc_id"), lit(2)) === 1), path, Seq("lang"))
       val snap = ManifestStore.snapshot(spark, path)
       val lang0 = full.select(min(col("lang"))).head.getString(0)
-      val (kept, total) = snap.partitionProbeFiles(
-        ManifestStore.MAIN, "lang", Set(lang0))
+      val (kept, total) = snap.partitionProbeFilesBox(
+        ManifestStore.MAIN, Seq("lang" -> Set(lang0)))
       println(s"-- lang probe on a MIXED-SPEC table: kept ${kept.length} " +
         s"of $total files (1 lang-spec entry + every source-spec entry, " +
         "per-spec pruning) — residual filter applies: --")
-      snap.readPartitionCol(ManifestStore.MAIN, "lang", Seq(lang0))
+      snap.readPartitionBox(ManifestStore.MAIN, Seq("lang" -> Seq(lang0)))
         .explain("formatted")
       ()
     }
@@ -288,13 +278,14 @@ object Explain {
           "parquet.block.size" -> (64 * 1024).toString,
           "parquet.page.size" -> (8 * 1024).toString))))
       val snap = ManifestStore.snapshot(spark, path)
-      val ranges = Seq(("doc_id", 5000L, 7499L))
-      val (gk, gt, rk, rt) = snap.rowGroupPrune(ManifestStore.MAIN, ranges)
+      val bounds = Seq(Bound.LongRange("doc_id", 5000L, 7499L))
+      val sc = snap.screen(ManifestStore.MAIN, bounds)
       println(s"-- quartile probe on ONE compacted multi-group file: " +
-        s"$gk of $gt row groups kept, $rk of $rt rows in kept groups " +
+        s"${sc.groupsKept} of ${sc.groupsTotal} row groups kept, " +
+        s"${sc.rowsKept} of ${sc.rowsTotal} rows in kept groups " +
         "(manifest census, zero file opens) — the pushed range skips " +
         "the dead groups at scan: --")
-      snap.readBoxRG(ManifestStore.MAIN, ranges).explain("formatted")
+      snap.readBox(ManifestStore.MAIN, bounds).explain("formatted")
       ()
     }
   }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftshim.GraftSqlShims
 import org.apache.spark.sql.functions._
 
 /** Scale-linearity measurement: run the headline pipelines against a
@@ -22,7 +24,12 @@ import org.apache.spark.sql.functions._
   */
 object Scale10x {
 
-  private class Metrics extends SparkListener {
+  /** Shuffle read/write and spill bytes summed over task-end events.
+    * Task ends reach a listener asynchronously, so [[reset]] and
+    * [[counters]] drain the bus first: no event from before a reset
+    * lands after it, and every task that ended before a read is in it.
+    */
+  private class Metrics(sc: SparkContext) extends SparkListener {
     val shuffleRead = new java.util.concurrent.atomic.AtomicLong
     val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
     val spill = new java.util.concurrent.atomic.AtomicLong
@@ -34,8 +41,20 @@ object Scale10x {
         spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
       }
     }
-    def reset(): Unit = { shuffleRead.set(0); shuffleWrite.set(0); spill.set(0) }
+    def reset(): Unit = {
+      GraftSqlShims.drainListeners(sc)
+      shuffleRead.set(0); shuffleWrite.set(0); spill.set(0)
+    }
+    def counters(): Map[String, Double] = {
+      GraftSqlShims.drainListeners(sc)
+      Map(
+        "shuffle_read_mb" -> mb(shuffleRead.get),
+        "shuffle_write_mb" -> mb(shuffleWrite.get),
+        "spill_mb" -> mb(spill.get))
+    }
   }
+
+  private def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0
 
   private val HEADLINE = Seq(
     "dedup04_minhash_lsh",
@@ -51,7 +70,7 @@ object Scale10x {
     val cpus = GraftSession.envCores()
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new Metrics
+    val metrics = new Metrics(spark.sparkContext)
     spark.sparkContext.addSparkListener(metrics)
 
     val d1 = spark.read.parquet(s"$base/documents.parquet").count()
@@ -98,19 +117,13 @@ object Scale10x {
       (System.nanoTime() - t0) / 1e9
     }
 
-    def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0
-
     def measure(dir: String): Map[String, Map[String, Double]] =
       HEADLINE.map { name =>
         runOnce(name, dir) // warm pass: codegen + file listing
         metrics.reset()
         val secs = runOnce(name, dir)
-        name -> Map(
-          "secs" -> math.round(secs * 1000) / 1000.0,
-          "shuffle_read_mb" -> mb(metrics.shuffleRead.get),
-          "shuffle_write_mb" -> mb(metrics.shuffleWrite.get),
-          "spill_mb" -> mb(metrics.spill.get)
-        )
+        name -> (Map("secs" -> math.round(secs * 1000) / 1000.0) ++
+          metrics.counters())
       }.toMap
 
     /** The scale-CORRECT serving arm sim26's gated form can't show:
@@ -147,11 +160,8 @@ object Scale10x {
       val secs = serveOnce()
       val r = Map(
         "secs" -> math.round(secs * 1000) / 1000.0,
-        "k" -> k.toDouble,
-        "shuffle_read_mb" -> mb(metrics.shuffleRead.get),
-        "shuffle_write_mb" -> mb(metrics.shuffleWrite.get),
-        "spill_mb" -> mb(metrics.spill.get)
-      )
+        "k" -> k.toDouble
+      ) ++ metrics.counters()
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(queries)
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(cents)
       graft.sources.Scratch.deleteRecursively(store)
@@ -205,11 +215,8 @@ object Scale10x {
       val secs = feedOnce()
       val r = Map(
         "secs" -> math.round(secs * 1000) / 1000.0,
-        "changed_rows" -> 2000.0,
-        "shuffle_read_mb" -> mb(metrics.shuffleRead.get),
-        "shuffle_write_mb" -> mb(metrics.shuffleWrite.get),
-        "spill_mb" -> mb(metrics.spill.get)
-      )
+        "changed_rows" -> 2000.0
+      ) ++ metrics.counters()
       graft.sources.Scratch.deleteRecursively(root)
       r
     }
@@ -303,11 +310,8 @@ object Scale10x {
       val secs = feedOnce()
       val r = Map(
         "secs" -> math.round(secs * 1000) / 1000.0,
-        "dv_ids" -> nIds.toDouble,
-        "shuffle_read_mb" -> mb(metrics.shuffleRead.get),
-        "shuffle_write_mb" -> mb(metrics.shuffleWrite.get),
-        "spill_mb" -> mb(metrics.spill.get)
-      )
+        "dv_ids" -> nIds.toDouble
+      ) ++ metrics.counters()
       graft.sources.Scratch.deleteRecursively(root)
       r
     }
@@ -364,11 +368,8 @@ object Scale10x {
       val r = Map(
         "secs" -> math.round(secs * 1000) / 1000.0,
         "point_secs" -> math.round(pointSecs * 1000) / 1000.0,
-        "dv_ids" -> nIds.toDouble,
-        "shuffle_read_mb" -> mb(metrics.shuffleRead.get),
-        "shuffle_write_mb" -> mb(metrics.shuffleWrite.get),
-        "spill_mb" -> mb(metrics.spill.get)
-      )
+        "dv_ids" -> nIds.toDouble
+      ) ++ metrics.counters()
       graft.sources.Scratch.deleteRecursively(root)
       r
     }
@@ -426,11 +427,8 @@ object Scale10x {
       val r = Map(
         "secs" -> math.round(secs * 1000) / 1000.0,
         "dv_ids" -> nIds.toDouble,
-        "dv_append_kb" -> math.round(added.map(_.bytes).sum / 1.024) / 1000.0,
-        "shuffle_read_mb" -> mb(metrics.shuffleRead.get),
-        "shuffle_write_mb" -> mb(metrics.shuffleWrite.get),
-        "spill_mb" -> mb(metrics.spill.get)
-      )
+        "dv_append_kb" -> math.round(added.map(_.bytes).sum / 1.024) / 1000.0
+      ) ++ metrics.counters()
       graft.sources.Scratch.deleteRecursively(root)
       r
     }

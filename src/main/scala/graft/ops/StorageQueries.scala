@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.sources.ManifestStore
+import graft.sources.ManifestStore.Bound
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -189,7 +190,7 @@ object StorageQueries extends graft.QueryFamily {
     * file's parquet footer carrying its doc_id (min, max) INTO the
     * manifest at commit time); the row then answers a doc_id range
     * query [lo, hi] = [mn + span/4, mn + span/2] through
-    * [[ManifestStore.Snapshot.readRange]], reporting the total and
+    * [[ManifestStore.Snapshot.readBox]], reporting the total and
     * kept file counts from the MANIFEST plus count / payload sum /
     * Σ h32 identity from the pruned scan. The oracle recomputes the
     * file census (bucket-level min/max intersection — the same
@@ -209,16 +210,17 @@ object StorageQueries extends graft.QueryFamily {
       val lo = mn + (mx - mn) / 4
       val hi = mn + (mx - mn) / 2
       val snap = ManifestStore.snapshot(s, path)
-      val (kept, total) = snap.rangeFiles(ManifestStore.MAIN, "doc_id", lo, hi)
-      snap.readRange(ManifestStore.MAIN, "doc_id", lo, hi)
+      val range = Seq(Bound.LongRange("doc_id", lo, hi))
+      val sc = snap.screen(ManifestStore.MAIN, range)
+      snap.readBox(ManifestStore.MAIN, range)
         .agg(
           count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("chars_sum"),
           sum(h32l(col("doc_id"))).as("doc_fp")
         )
         .select(
-          lit(total.toLong).as("files_total"),
-          lit(kept.length.toLong).as("files_kept"),
+          lit(sc.filesTotal.toLong).as("files_total"),
+          lit(sc.files.length.toLong).as("files_kept"),
           col("n_docs"), col("chars_sum"), col("doc_fp")
         )
         .localCheckpoint(true)
@@ -271,7 +273,7 @@ object StorageQueries extends graft.QueryFamily {
     * keyed corpus commits twice: striped by x (the 1-D sort every
     * naive ingest produces) and tiled by the q101 Morton curve; both
     * manifests carry each file's footer (min, max) for x AND y. Two
-    * band probes then prune through [[ManifestStore.Snapshot.prunedFiles]]:
+    * band probes then prune through [[ManifestStore.Snapshot.screen]]:
     * the x-band, where BOTH layouts skip (stripes and tiles each
     * intersect only the band's column), and the y-band, where the
     * linear layout keeps EVERY file (each x-stripe spans all of y —
@@ -310,15 +312,16 @@ object StorageQueries extends graft.QueryFamily {
         ("y_band", 0L, LAYOUT_DIM - 1, 16L, 31L)
       )
       val rows = probes.map { case (name, xlo, xhi, ylo, yhi) =>
-        val ranges = Seq(("x", xlo, xhi), ("y", ylo, yhi))
-        val (lk, lt) = lin.prunedFiles(ManifestStore.MAIN, ranges)
-        val (zk, zt) = zed.prunedFiles(ManifestStore.MAIN, ranges)
+        val ranges = Seq(Bound.LongRange("x", xlo, xhi), Bound.LongRange("y", ylo, yhi))
+        val l = lin.screen(ManifestStore.MAIN, ranges)
+        val z = zed.screen(ManifestStore.MAIN, ranges)
         val zAgg = zed.readBox(ManifestStore.MAIN, ranges)
           .agg(count(lit(1)), sum(col("n_chars")), sum(h32l(col("doc_id"))))
           .head
         val lAgg = lin.readBox(ManifestStore.MAIN, ranges)
           .agg(sum(h32l(col("doc_id")))).head
-        (name, lt.toLong, lk.length.toLong, zt.toLong, zk.length.toLong,
+        (name, l.filesTotal.toLong, l.files.length.toLong,
+          z.filesTotal.toLong, z.files.length.toLong,
           zAgg.getLong(0), zAgg.getLong(1), zAgg.getLong(2), lAgg.getLong(0))
       }
       import s.implicits._
@@ -469,7 +472,7 @@ object StorageQueries extends graft.QueryFamily {
     * (a no-op here — fixture sources are short; ManifestLogSpec
     * pins the truncate-and-increment bounds on long strings). The row
     * answers a source range [lo, hi] — the sources ranked n/4 and n/2
-    * — through [[graft.sources.ManifestStore.Snapshot.readRangeStr]],
+    * — through [[graft.sources.ManifestStore.Snapshot.readBox]],
     * reporting total/kept file counts from the manifest plus
     * count / payload sum / Σ h32 identity from the pruned scan. The
     * oracle re-derives the kept census from data (per-group min/max ≡
@@ -488,17 +491,17 @@ object StorageQueries extends graft.QueryFamily {
         .orderBy("source").collect().map(_.getString(0))
       val (lo, hi) = (srcs(srcs.length / 4), srcs(srcs.length / 2))
       val snap = ManifestStore.snapshot(s, path)
-      val (kept, total) =
-        snap.prunedFilesStr(ManifestStore.MAIN, Seq(("source", lo, hi)))
-      snap.readRangeStr(ManifestStore.MAIN, "source", lo, hi)
+      val bounds = Seq(Bound.StrRange("source", lo, hi))
+      val sc = snap.screen(ManifestStore.MAIN, bounds)
+      snap.readBox(ManifestStore.MAIN, bounds)
         .agg(
           count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("chars_sum"),
           sum(h32l(col("doc_id"))).as("doc_fp")
         )
         .select(
-          lit(total.toLong).as("files_total"),
-          lit(kept.length.toLong).as("files_kept"),
+          lit(sc.filesTotal.toLong).as("files_total"),
+          lit(sc.files.length.toLong).as("files_kept"),
           col("n_docs"), col("chars_sum"), col("doc_fp")
         )
         .localCheckpoint(true)

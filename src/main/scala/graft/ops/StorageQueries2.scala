@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.sources.ManifestStore
+import graft.sources.ManifestStore.Bound
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,9 +62,9 @@ object StorageQueries2 extends graft.QueryFamily {
       val src0 = docs.select(min(col("source"))).head.getString(0)
       val lang0 = docs.select(min(col("lang"))).head.getString(0)
       def probe(name: String, colName: String, value: String) = {
-        val (kept, total) = v3.partitionProbeFiles(
-          ManifestStore.MAIN, colName, Set(value))
-        v3.readPartitionCol(ManifestStore.MAIN, colName, Seq(value))
+        val (kept, total) = v3.partitionProbeFilesBox(
+          ManifestStore.MAIN, Seq(colName -> Set(value)))
+        v3.readPartitionBox(ManifestStore.MAIN, Seq(colName -> Seq(value)))
           .agg(
             count(lit(1)).as("n_docs"),
             sum(col("n_chars")).as("chars_sum"),
@@ -240,7 +241,7 @@ object StorageQueries2 extends graft.QueryFamily {
     * manifest ([[graft.sources.ManifestStore.RowGroupStat]] — only
     * for multi-group files, single-group files pay nothing). A
     * quartile range probe then reads through
-    * [[graft.sources.ManifestStore.Snapshot.readBoxRG]]: the
+    * [[graft.sources.ManifestStore.Snapshot.readBox]]: the
     * group-level census proves most of the file skips without
     * opening it (`intra_skip`), and the pushed-down residual makes
     * the scan itself read only the intersecting groups
@@ -278,16 +279,17 @@ object StorageQueries2 extends graft.QueryFamily {
           "parquet.block.size" -> (512 * 1024).toString,
           "parquet.page.size" -> (64 * 1024).toString))))
       val snap = ManifestStore.snapshot(s, path)
-      val ranges = Seq(("doc_id", 5000L, 7499L))
-      val (gk, gt, rk, rt) = snap.rowGroupPrune(ManifestStore.MAIN, ranges)
-      snap.readBoxRG(ManifestStore.MAIN, ranges)
+      val bounds = Seq(Bound.LongRange("doc_id", 5000L, 7499L))
+      val sc = snap.screen(ManifestStore.MAIN, bounds)
+      snap.readBox(ManifestStore.MAIN, bounds)
         .agg(
           count(lit(1)).as("n_docs"),
           sum(col("n_chars")).as("chars_sum"),
           sum(h32l(col("doc_id"))).as("doc_fp"))
         .select(col("n_docs"), col("chars_sum"), col("doc_fp"),
-          lit(if (gt > 1) 1L else 0L).as("multi_group"),
-          lit(if (gk < gt && rk < rt) 1L else 0L).as("intra_skip"))
+          lit(if (sc.groupsTotal > 1) 1L else 0L).as("multi_group"),
+          lit(if (sc.groupsKept < sc.groupsTotal && sc.rowsKept < sc.rowsTotal) 1L
+            else 0L).as("intra_skip"))
         .localCheckpoint(true)
     }
   }

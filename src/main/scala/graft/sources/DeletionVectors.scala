@@ -173,62 +173,28 @@ object DeletionVectors {
       snap: ManifestStore.Snapshot,
       table: String = ManifestStore.MAIN,
       idCol: String = "doc_id"
-  ): DataFrame = {
-    val dv = snap.read(dvTable(table))
-    dv.groupBy(col(idCol))
+  ): DataFrame =
+    winningDeletes(snap.read(dvTable(table)), idCol).select(col(idCol))
+
+  /** Latest-wins per id over DV `records`: each id's greatest
+    * `(dv_seq, dv_del)` record (`true > false`, so on a seq tie the
+    * delete wins), kept only where that record is a delete — one row
+    * per dead id in the record schema, at its winning seq.
+    */
+  private def winningDeletes(records: DataFrame, idCol: String): DataFrame =
+    records.groupBy(col(idCol))
       .agg(max(struct(col(SEQ_COL), col(DEL_COL))).as("__m"))
       .filter(col("__m")(DEL_COL))
-      .select(col(idCol))
-  }
+      .select(col(idCol), col("__m")(SEQ_COL).as(SEQ_COL),
+        col("__m")(DEL_COL).as(DEL_COL))
 
-  /** Broadcast ceiling for the read-side anti-join, in DV RECORD rows
-    * (the manifest's own per-file row sums — metadata, no job). The
-    * live-id set is ≤ the pile's record count, so gating on the pile
-    * is conservative. Default 4M records ≈ 32 MB of longs hashed —
-    * comfortably a broadcast; above it (a mass RTBF purge the
-    * log-structured write side makes cheap to accumulate) the
-    * anti-join falls back to a shuffle, which scales where an
-    * unconditional broadcast OOMs the driver.
-    */
-  val BROADCAST_MAX_RECORDS: Long = 4L * 1000 * 1000
-
-  /** Session override for [[BROADCAST_MAX_RECORDS]] — a deployment
-    * sizes it to its driver/executor memory; tests pin both sides of
-    * the gate by setting it to 0.
-    */
-  val BROADCAST_MAX_RECORDS_KEY = "spark.graft.dv.broadcast.maxRecords"
-
-  private def pileRecords(
-      snap: ManifestStore.Snapshot,
-      table: String
-  ): Long =
-    snap.state(dvTable(table)).partitions.values
-      .flatMap(_.files).map(_.rows).sum
-
-  /** [[liveIds]] with the broadcast decision made from manifest
-    * metadata: a bench-sized vector broadcasts (plain scan + one
-    * broadcast anti-join, zero extra shuffles), a vector past
-    * [[BROADCAST_MAX_RECORDS]] anti-joins through the shuffle the
-    * planner picks — identical rows either way.
-    */
-  private def gatedLiveIds(
-      snap: ManifestStore.Snapshot,
-      table: String,
-      idCol: String
-  ): DataFrame = {
-    val live = liveIds(snap, table, idCol)
-    val raw = snap.spark.conf
-      .get(BROADCAST_MAX_RECORDS_KEY, BROADCAST_MAX_RECORDS.toString)
-    val maxRecords = raw.toLongOption.getOrElse(throw new IllegalArgumentException(
-      s"$BROADCAST_MAX_RECORDS_KEY must be a whole number of records, got '$raw'"))
-    if (pileRecords(snap, table) <= maxRecords) broadcast(live)
-    else live
-  }
-
-  /** Merge-on-read: `table` with the deletion vector applied. The DV
-    * side is broadcast when the manifest's record census says it fits
-    * ([[gatedLiveIds]]); the read plan is then the plain manifest scan
-    * plus one broadcast anti join.
+  /** Merge-on-read: `table` with the deletion vector applied — the
+    * plain manifest scan anti-joined with [[liveIds]]. The planner
+    * sizes the join from the sidecar's manifest file bytes: a
+    * bench-sized vector broadcasts (zero extra shuffles), and one past
+    * the broadcast threshold (a mass RTBF purge the log-structured
+    * write side makes cheap to accumulate) anti-joins through a
+    * shuffle instead of collecting onto the driver.
     */
   def read(
       snap: ManifestStore.Snapshot,
@@ -237,7 +203,7 @@ object DeletionVectors {
   ): DataFrame = {
     val base = snap.read(table)
     if (!snap.hasTable(dvTable(table))) base
-    else base.join(gatedLiveIds(snap, table, idCol), Seq(idCol), "left_anti")
+    else base.join(liveIds(snap, table, idCol), Seq(idCol), "left_anti")
   }
 
   /** [[ManifestStore.Snapshot.readForIds]] with the vector applied —
@@ -264,10 +230,7 @@ object DeletionVectors {
     val dvName = dvTable(table)
     if (!snap.hasTable(dvName)) base
     else {
-      val dead = snap.readForIds(dvName, idCol, ids)
-        .groupBy(col(idCol))
-        .agg(max(struct(col(SEQ_COL), col(DEL_COL))).as("__m"))
-        .filter(col("__m")(DEL_COL))
+      val dead = winningDeletes(snap.readForIds(dvName, idCol, ids), idCol)
         .select(col(idCol))
       // ≤ |ids| rows by construction — always a broadcast
       base.join(broadcast(dead), Seq(idCol), "left_anti")
@@ -287,15 +250,15 @@ object DeletionVectors {
     *
     * O(changed) by construction: candidates are rows of the
     * added/removed files plus the rows of the DV-diff ids — the
-    * latter fetched through
-    * [[ManifestStore.Snapshot.readForIdsFrame]]'s zone-map candidate
-    * files (sorted-id binary-search screening, broadcast semi-join
-    * residual — no O(ids) plan literals, no O(files × ids) driver
-    * CPU, so a mass delete of millions of scattered ids feeds at
-    * candidate-scan cost). Version diffs still TELESCOPE (the
-    * classification depends only on the two endpoint logical
-    * states); a consumer tailing many hops passes cached [[DvView]]s
-    * so each endpoint vector is read once, not once per hop.
+    * latter fetched through [[ManifestStore.Snapshot.readForIds]]'s
+    * zone-map candidate files (sorted-id binary-search screening; an
+    * `isin` or broadcast semi-join residual — no O(ids) plan
+    * literals, no O(files × ids) driver CPU, so a mass delete of
+    * millions of scattered ids feeds at candidate-scan cost).
+    * Version diffs still TELESCOPE (the classification depends only
+    * on the two endpoint logical states); a consumer tailing many
+    * hops passes cached [[DvView]]s so each endpoint vector is read
+    * once, not once per hop.
     */
   /** One snapshot's deletion vector, read ONCE and held in both the
     * shapes the feed needs: a broadcastable local frame (the
@@ -359,12 +322,10 @@ object DeletionVectors {
     val va = dvAView.getOrElse(dvView(a, table, idCol))
     val vb = dvBView.getOrElse(dvView(b, table, idCol))
     // ids whose VECTOR membership changed — a driver merge of the two
-    // sorted views, no job; stays RELATIONAL downstream (semi-join),
-    // never re-expanded into plan literals, so a mass delete of
-    // millions of ids costs O(candidate files) scan + one broadcast
+    // sorted views, no job; fetched through the zone-map screen, so a
+    // mass delete of millions of ids costs O(candidate files) scan +
+    // one broadcast semi-join, never O(ids) plan literals
     val changedSorted = symDiff(va.sorted, vb.sorted)
-    import spark.implicits._
-    val changedDf = changedSorted.toSeq.toDF(idCol)
     val (added, removed) = ManifestStore.fileDiff(a, b, table)
     def readDelta(s: ManifestStore.Snapshot, files: Seq[ManifestStore.FileEntry]): DataFrame = {
       val st = s.state(table)
@@ -382,7 +343,7 @@ object DeletionVectors {
       val fromFiles = readDelta(s, files)
       val fromDv =
         if (changedSorted.isEmpty) fromFiles.limit(0)
-        else s.readForIdsFrame(table, idCol, changedDf, changedSorted)
+        else s.readForIds(table, idCol, changedSorted)
       fromFiles.unionByName(fromDv)
         .select((idCol +: payloadCol +: extraCols).distinct.map(col): _*)
         // one value per id per version (a row can be both in a
@@ -434,12 +395,7 @@ object DeletionVectors {
     val snap = ManifestStore.snapshot(spark, root)
     val dvName = dvTable(table)
     require(snap.hasTable(dvName), s"no deletion vector for '$table'")
-    val live = snap.read(dvName)
-      .groupBy(col(idCol))
-      .agg(max(struct(col(SEQ_COL), col(DEL_COL))).as("__m"))
-      .filter(col("__m")(DEL_COL))
-      .select(col(idCol), col("__m")(SEQ_COL).as(SEQ_COL),
-        col("__m")(DEL_COL).as(DEL_COL))
+    val live = winningDeletes(snap.read(dvName), idCol)
     ManifestStore.commit(spark, root, Seq(
       ManifestStore.stage(live.coalesce(1).sortWithinPartitions(idCol),
         root, dvName, Seq.empty, ManifestStore.Replace)),
@@ -474,7 +430,7 @@ object DeletionVectors {
     val dv = liveIds(snap, table, idCol)
     // the vector is k rows by contract — a metadata-sized read, the
     // same discipline as the store's other audited collect sites;
-    // sorted so partition screening binary-searches (O(files·log k))
+    // sorted so partition screening binary-searches (O(groups·log k))
     val ids = dv.collect().map(_.getLong(0)).sorted
     // clear with the RECORD schema, so post-materialize appends stay
     // shape-compatible with the pile's contract
@@ -489,15 +445,10 @@ object DeletionVectors {
         dvStage
       ), expectedVersion = snap.version)
     } else {
+      val deleted = ManifestStore.Bound.IdSet(idCol, ids)
       val touched = st.partitions.collect {
-        case (key, p) if p.files.exists { f =>
-          f.stats.get(idCol) match {
-            case Some((mn, mx)) =>
-              val i = ManifestStore.lowerBound(ids, mn)
-              i < ids.length && ids(i) <= mx
-            case None => true // no stats: cannot prove clean
-          }
-        } => key
+        case (key, p) if p.files.exists(f =>
+          ManifestStore.groupsOf(f).exists(ManifestStore.admits(_, deleted))) => key
       }.toSeq.sorted
       if (touched.isEmpty)
         // nothing to rewrite — still clear the vector (all ids absent)

@@ -89,8 +89,8 @@ import org.apache.spark.sql.types.StructType
   *     the parquet footers ON THE EXECUTORS at commit time (a Spark
   *     job over the staged file list — the driver opens no footers,
   *     so an initial 100 TB corpus commit never serializes millions of
-  *     footer reads through one process), so [[Snapshot.readRange]] /
-  *     [[Snapshot.readRangeStr]] prune files by value range BEFORE
+  *     footer reads through one process), so [[Snapshot.readBox]]
+  *     prunes files by value range BEFORE
   *     Spark lists anything — manifest-level data skipping on
   *     non-partition columns.
   */
@@ -266,7 +266,7 @@ object ManifestStore {
     * string columns (footer column statistics aggregated across row
     * groups — metadata, not data), and per-ROW-GROUP integral bounds
     * (`groups`, multi-group files only) for intra-file skipping
-    * ([[Snapshot.rowGroupPrune]]). A column absent from the stats
+    * ([[Snapshot.screen]]). A column absent from the stats
     * maps simply cannot prune this file.
     */
   final case class FileEntry(
@@ -353,6 +353,63 @@ object ManifestStore {
       renames: Seq[(String, String)] = Seq.empty
   )
 
+  /** One zone-map predicate on one column: what [[Snapshot.screen]]
+    * tests against each row group's (min, max) and
+    * [[Snapshot.readBox]] re-applies as a residual filter.
+    *  - [[Bound.LongRange]]: an integral column inside [lo, hi].
+    *  - [[Bound.StrRange]]: a string column inside [lo, hi] under
+    *    code-point order ([[cpCompare]], the order the truncated
+    *    footer bounds were merged under and the scan filters with).
+    *  - [[Bound.IdSet]]: an integral column equal to one of `sorted`
+    *    (ascending, distinct). One binary search per group, so
+    *    screening millions of scattered ids costs O(groups · log ids)
+    *    driver CPU, never O(groups · ids).
+    * A group without stats for the column cannot be pruned by it.
+    */
+  sealed trait Bound
+  object Bound {
+    final case class LongRange(column: String, lo: Long, hi: Long) extends Bound
+    final case class StrRange(column: String, lo: String, hi: String) extends Bound
+    final case class IdSet(column: String, sorted: Array[Long]) extends Bound
+  }
+
+  /** [[Snapshot.screen]]'s result: the kept files, and kept/total
+    * counts of files, row groups and rows.
+    */
+  final case class Screen(
+      files: Seq[FileEntry],
+      filesTotal: Int,
+      groupsKept: Int,
+      groupsTotal: Int,
+      rowsKept: Long,
+      rowsTotal: Long
+  )
+
+  /** A file's row groups for pruning purposes: a single-group file
+    * (no `groups` persisted) IS one group with the file's stats.
+    */
+  private[sources] def groupsOf(f: FileEntry): Seq[RowGroupStat] =
+    if (f.groups.nonEmpty) f.groups
+    else Seq(RowGroupStat(f.rows, f.stats, f.strStats))
+
+  private val cpOrder: Ordering[String] = (a, b) => cpCompare(a, b)
+
+  /** Whether row group `g` can hold a row satisfying `b`. */
+  private[sources] def admits(g: RowGroupStat, b: Bound): Boolean = {
+    def overlaps[T](mnMx: Option[(T, T)], lo: T, hi: T)(implicit o: Ordering[T]) =
+      mnMx.forall { case (mn, mx) => o.gteq(mx, lo) && o.lteq(mn, hi) }
+    b match {
+      case Bound.LongRange(c, lo, hi) => overlaps(g.stats.get(c), lo, hi)
+      case Bound.StrRange(c, lo, hi)  => overlaps(g.strStats.get(c), lo, hi)(cpOrder)
+      case Bound.IdSet(c, ids) =>
+        g.stats.get(c).forall { case (mn, mx) =>
+          // first id ≥ mn; admitted iff it is also ≤ mx
+          val i = lowerBound(ids, mn)
+          i < ids.length && ids(i) <= mx
+        }
+    }
+  }
+
   /** One reconstructed version: every read through the same snapshot
     * sees one committed version across ALL tables — the isolation
     * unit. `ts` is the commit's wall-clock (epoch millis, strictly
@@ -411,45 +468,27 @@ object ManifestStore {
     /** Manifest-level partition pruning: only the named partitions'
       * files reach the scan — the reader never lists, let alone
       * opens, any other partition's files. `values` match on the
-      * stringified partition value (single partition column — the
-      * CURRENT spec's). On a table carrying older specs, entries of a
-      * different spec are conservatively scanned with a residual
-      * filter (see [[readPartitionCol]]); a single-spec table keeps
-      * the pure-prune plan.
+      * stringified partition value of the CURRENT spec's single
+      * column: a one-column [[readPartitionBox]], so entries of an
+      * older spec without that column are conservatively scanned with
+      * a residual filter, and a single-spec table keeps the
+      * pure-prune plan.
       */
     def readPartitions(table: String, values: Seq[Any]): DataFrame = {
       val st = state(table)
       require(st.partitionCols.length == 1,
         s"readPartitions prunes on a single partition column, " +
           s"'$table' has ${st.partitionCols.mkString(",")}")
-      readPartitionCol(table, st.partitionCols.head, values)
+      readPartitionBox(table, Seq(st.partitionCols.head -> values))
     }
 
-    /** Per-SPEC partition pruning (Iceberg's spec-id discipline): an
-      * entry written under spec `(colName)` prunes by value; an entry
-      * of ANY OTHER spec has no `colName` directory axis and is
-      * conservatively kept. Returns (files to scan, total files).
-      */
-    def partitionProbeFiles(
-        table: String,
-        colName: String,
-        values: Set[String]
-    ): (Seq[FileEntry], Int) = {
-      val all = state(table).partitions.values.toSeq
-      val kept = all.filter { p =>
-        p.cols != Seq(colName) || values.contains(p.values.head)
-      }
-      (kept.flatMap(_.files), all.map(_.files.length).sum)
-    }
-
-    /** Per-SPEC pruning over a VALUE BOX on several named columns —
-      * the multi-column generalization of [[partitionProbeFiles]]:
-      * an entry prunes by EVERY probed column its OWN spec carries
-      * (sound per axis — an entry keyed `source=s1/lang=en` provably
-      * holds only that source AND that lang, so pruning by any
-      * subset of its axes is exact), and a column absent from the
-      * entry's spec cannot prune it. Returns (files to scan, total
-      * files).
+    /** Per-SPEC pruning over a VALUE BOX on several named columns
+      * (Iceberg's spec-id discipline): an entry prunes by EVERY
+      * probed column its OWN spec carries (sound per axis — an entry
+      * keyed `source=s1/lang=en` provably holds only that source AND
+      * that lang, so pruning by any subset of its axes is exact), and
+      * a column absent from the entry's spec cannot prune it. Returns
+      * (files to scan, total files).
       */
     def partitionProbeFilesBox(
         table: String,
@@ -465,34 +504,12 @@ object ManifestStore {
       (kept.flatMap(_.files), all.map(_.files.length).sum)
     }
 
-    /** Partition-value read by NAMED column across specs: entries of
-      * spec `(colName)` prune to the matching values; other-spec
-      * entries scan with the residual predicate applied (so the
-      * result is exactly "rows whose colName is in values" no matter
-      * which generation holds them). A table whose every entry is in
-      * the probed spec gets NO residual — the plan is the pure
-      * metadata prune, unchanged from before spec evolution existed.
-      */
-    def readPartitionCol(
-        table: String,
-        colName: String,
-        values: Seq[Any]
-    ): DataFrame = {
-      val st = state(table)
-      val want = values.map(_.toString).toSet
-      val (files, _) = partitionProbeFiles(table, colName, want)
-      val base = readEntries(st, files)
-      val mixed = st.partitions.values.exists(_.cols != Seq(colName))
-      if (mixed) base.filter(col(colName).isin(values: _*)) else base
-    }
-
-    /** [[readPartitionCol]] generalized to a multi-column value box:
-      * files route through [[partitionProbeFilesBox]], and the
-      * residual predicates apply only when SOME kept entry's spec
-      * misses a probed column (its rows are not guaranteed to
-      * satisfy that axis). A table whose every entry carries every
-      * probed column gets the pure metadata prune — no residual in
-      * the plan (MultiColSpecSpec pins it).
+    /** Partition-value read over a value box: files route through
+      * [[partitionProbeFilesBox]], and the residual predicates apply
+      * only when SOME kept entry's spec misses a probed column (its
+      * rows are not guaranteed to satisfy that axis). A table whose
+      * every entry carries every probed column gets the pure metadata
+      * prune — no residual in the plan (MultiColSpecSpec pins it).
       */
     def readPartitionBox(
         table: String,
@@ -557,278 +574,77 @@ object ManifestStore {
         p.files.map(f => (p.values.mkString("/"), f.path, f.bytes, f.rows))
       }.toSeq.sortBy(_._2)
 
-    /** Manifest-level data skipping on NON-partition columns: the
-      * files whose footer (min, max) intersects EVERY (column, lo,
-      * hi) range, plus the table's total file count. A file without
-      * stats for a column is conservatively kept by that column.
+    /** The one zone-map screen: walks each file's row groups once (a
+      * single-group file is its own group) and keeps a file iff one of
+      * its groups [[admits]] EVERY bound. A row-group screen keeps a
+      * subset of what the file's (min, max) envelope keeps — a range
+      * falling in the gap between two groups' bounds drops the whole
+      * file. Metadata only: no file is opened, no job runs. The
+      * [[Screen]] census reports kept/total at file, group and row
+      * granularity — the manifest-side proof of how much a probe
+      * skips, including inside a kept multi-group file.
       */
-    def prunedFiles(
-        table: String,
-        ranges: Seq[(String, Long, Long)]
-    ): (Seq[FileEntry], Int) = {
+    def screen(table: String, bounds: Seq[Bound]): Screen = {
       val all = state(table).partitions.values.flatMap(_.files).toSeq
+      var gk = 0
+      var gt = 0
+      var rk = 0L
+      var rt = 0L
       val kept = all.filter { f =>
-        ranges.forall { case (c, lo, hi) =>
-          f.stats.get(c) match {
-            case Some((mn, mx)) => mx >= lo && mn <= hi
-            case None           => true
-          }
+        var hit = false
+        groupsOf(f).foreach { g =>
+          gt += 1
+          rt += g.rows
+          if (bounds.forall(admits(g, _))) { gk += 1; rk += g.rows; hit = true }
         }
+        hit
       }
-      (kept, all.length)
+      Screen(kept, all.length, gk, gt, rk, rt)
     }
 
-    /** [[prunedFiles]] for STRING columns: the stored bounds are a
-      * truncated-prefix lower bound and a truncate-and-increment
-      * upper bound, so the intersection test is sound verbatim — a
-      * file is kept iff its upper ≥ lo and its lower ≤ hi.
-      */
-    def prunedFilesStr(
-        table: String,
-        ranges: Seq[(String, String, String)]
-    ): (Seq[FileEntry], Int) = {
-      val all = state(table).partitions.values.flatMap(_.files).toSeq
-      val kept = all.filter { f =>
-        ranges.forall { case (c, lo, hi) =>
-          f.strStats.get(c) match {
-            // code-point order — the same comparator the footer
-            // bounds were merged under and the scan filters with
-            case Some((mn, mx)) =>
-              cpCompare(mx, lo) >= 0 && cpCompare(mn, hi) <= 0
-            case None => true
-          }
-        }
-      }
-      (kept, all.length)
-    }
-
-    def rangeFiles(
-        table: String,
-        column: String,
-        lo: Long,
-        hi: Long
-    ): (Seq[FileEntry], Int) = prunedFiles(table, Seq((column, lo, hi)))
-
-    /** Box read through the stats: scan ONLY the files [[prunedFiles]]
-      * keeps, with the residual predicates still applied — result is
+    /** Pruned read: scan ONLY the files [[screen]] keeps, with every
+      * bound re-applied as a residual filter, so the result is
       * identical to filtering the full table, minus the skipped IO.
-      */
-    def readBox(table: String, ranges: Seq[(String, Long, Long)]): DataFrame = {
-      val (kept, _) = prunedFiles(table, ranges)
-      ranges.foldLeft(readEntries(state(table), kept)) {
-        case (df, (c, lo, hi)) => df.filter(col(c) >= lo && col(c) <= hi)
-      }
-    }
-
-    def readRange(table: String, column: String, lo: Long, hi: Long): DataFrame =
-      readBox(table, Seq((column, lo, hi)))
-
-    /** [[readBox]] on string ranges, pruning through [[prunedFilesStr]]. */
-    def readBoxStr(table: String, ranges: Seq[(String, String, String)]): DataFrame = {
-      val (kept, _) = prunedFilesStr(table, ranges)
-      ranges.foldLeft(readEntries(state(table), kept)) {
-        case (df, (c, lo, hi)) => df.filter(col(c) >= lo && col(c) <= hi)
-      }
-    }
-
-    def readRangeStr(table: String, column: String, lo: String, hi: String): DataFrame =
-      readBoxStr(table, Seq((column, lo, hi)))
-
-    /** A file's row groups for pruning purposes: a single-group file
-      * (no `groups` persisted) IS one group with the file's stats.
-      */
-    private def groupsOf(f: FileEntry): Seq[RowGroupStat] =
-      if (f.groups.nonEmpty) f.groups
-      else Seq(RowGroupStat(f.rows, f.stats, f.strStats))
-
-    private def groupHits(g: RowGroupStat, ranges: Seq[(String, Long, Long)]) =
-      ranges.forall { case (c, lo, hi) =>
-        g.stats.get(c) match {
-          case Some((mn, mx)) => mx >= lo && mn <= hi
-          case None           => true
-        }
-      }
-
-    private def groupHitsStr(g: RowGroupStat, ranges: Seq[(String, String, String)]) =
-      ranges.forall { case (c, lo, hi) =>
-        g.strStats.get(c) match {
-          case Some((mn, mx)) =>
-            cpCompare(mx, lo) >= 0 && cpCompare(mn, hi) <= 0
-          case None => true
-        }
-      }
-
-    /** INTRA-FILE skipping census: (groups kept, groups total, rows in
-      * kept groups, rows total) for a box probe — the metadata answer
-      * to "how much of a compacted multi-row-group file does this
-      * range actually read". The scan itself skips the dead groups
-      * through the pushed-down range predicate (parquet row-group
-      * pruning reads the same footer bounds); this census is the
-      * manifest-side proof, computed without opening a file.
-      */
-    def rowGroupPrune(
-        table: String,
-        ranges: Seq[(String, Long, Long)]
-    ): (Int, Int, Long, Long) = {
-      val all = state(table).partitions.values.flatMap(_.files).toSeq
-      var gk = 0
-      var gt = 0
-      var rk = 0L
-      var rt = 0L
-      all.foreach { f =>
-        groupsOf(f).foreach { g =>
-          gt += 1
-          rt += g.rows
-          if (groupHits(g, ranges)) { gk += 1; rk += g.rows }
-        }
-      }
-      (gk, gt, rk, rt)
-    }
-
-    /** [[prunedFiles]] sharpened by row-group bounds: a file is kept
-      * iff ANY of its groups intersects every range — strictly at most
-      * what the file-level bounds keep (a range falling in the gap
-      * between two groups' bounds exonerates the whole file even
-      * though the file's envelope covers it).
-      */
-    def prunedFilesRG(
-        table: String,
-        ranges: Seq[(String, Long, Long)]
-    ): (Seq[FileEntry], Int) = {
-      val all = state(table).partitions.values.flatMap(_.files).toSeq
-      (all.filter(f => groupsOf(f).exists(groupHits(_, ranges))), all.length)
-    }
-
-    /** [[readBox]] through the row-group-sharpened file screen; the
-      * residual range predicates are pushed to parquet, so the scan
-      * of a kept multi-group file reads ONLY its intersecting groups
-      * (RowGroupStatsSpec pins rows-scanned < file rows).
-      */
-    def readBoxRG(table: String, ranges: Seq[(String, Long, Long)]): DataFrame = {
-      val (kept, _) = prunedFilesRG(table, ranges)
-      ranges.foldLeft(readEntries(state(table), kept)) {
-        case (df, (c, lo, hi)) => df.filter(col(c) >= lo && col(c) <= hi)
-      }
-    }
-
-    /** [[rowGroupPrune]] for STRING columns — per-group
-      * truncate-and-increment bounds probed under code-point order,
-      * the same soundness argument as [[prunedFilesStr]].
-      */
-    def rowGroupPruneStr(
-        table: String,
-        ranges: Seq[(String, String, String)]
-    ): (Int, Int, Long, Long) = {
-      val all = state(table).partitions.values.flatMap(_.files).toSeq
-      var gk = 0
-      var gt = 0
-      var rk = 0L
-      var rt = 0L
-      all.foreach { f =>
-        groupsOf(f).foreach { g =>
-          gt += 1
-          rt += g.rows
-          if (groupHitsStr(g, ranges)) { gk += 1; rk += g.rows }
-        }
-      }
-      (gk, gt, rk, rt)
-    }
-
-    /** [[prunedFilesRG]] on string ranges. */
-    def prunedFilesStrRG(
-        table: String,
-        ranges: Seq[(String, String, String)]
-    ): (Seq[FileEntry], Int) = {
-      val all = state(table).partitions.values.flatMap(_.files).toSeq
-      (all.filter(f => groupsOf(f).exists(groupHitsStr(_, ranges))), all.length)
-    }
-
-    /** [[readBoxStr]] through the row-group-sharpened file screen. */
-    def readBoxStrRG(
-        table: String,
-        ranges: Seq[(String, String, String)]
-    ): DataFrame = {
-      val (kept, _) = prunedFilesStrRG(table, ranges)
-      ranges.foldLeft(readEntries(state(table), kept)) {
-        case (df, (c, lo, hi)) => df.filter(col(c) >= lo && col(c) <= hi)
-      }
-    }
-
-    /** Files whose footer (min, max) can hold ANY of `sortedIds` —
-      * one binary search per file (O(files · log ids), never
-      * O(files · ids) driver CPU), so screening a mass delete of
-      * millions of scattered ids costs the same as screening ten. A
-      * file without stats is conservatively kept.
-      */
-    def candidateFilesForIds(
-        table: String,
-        idCol: String,
-        sortedIds: Array[Long]
-    ): Seq[FileEntry] =
-      state(table).partitions.values.flatMap(_.files).filter { f =>
-        f.stats.get(idCol) match {
-          case Some((mn, mx)) =>
-            // first id ≥ mn; a candidate iff it also ≤ mx
-            val i = lowerBound(sortedIds, mn)
-            i < sortedIds.length && sortedIds(i) <= mx
-          case None => true
-        }
-      }.toSeq
-
-    /** Batched POINT LOOKUP through the zone maps: scan only the
-      * files whose footer (min, max) can hold ANY of `ids` — the
-      * metadata-routed row fetch a keyed store serves without an
-      * index (a file without stats is conservatively read). Cost is
-      * O(candidate files), so an id-clustered layout answers a k-id
-      * probe by opening ~k files no matter how large the table is.
-      * The residual filter still applies — result ≡ filtering the
-      * full table: a SMALL batch filters with `isin` (codegen'd AND
-      * pushed to parquet, so row groups skip too), a large one
-      * semi-joins against a broadcast id frame — never an
+      * Range residuals push down to parquet, so a kept multi-group
+      * file reads only its intersecting groups. An id set filters
+      * with `isin` at ≤ [[ISIN_MAX]] ids (codegen'd and pushed down)
+      * and semi-joins a broadcast id frame above that — never an
       * O(ids)-literal expression in the plan.
       */
-    def readForIds(table: String, idCol: String, ids: Seq[Long]): DataFrame = {
-      val sorted = ids.distinct.sorted.toArray
-      val base =
-        readEntries(state(table), candidateFilesForIds(table, idCol, sorted))
-      if (sorted.length <= ISIN_MAX) base.filter(col(idCol).isin(sorted: _*))
-      else {
-        import spark.implicits._
-        base.join(
-          org.apache.spark.sql.functions.broadcast(
-            sorted.toSeq.toDF(idCol)),
-          Seq(idCol), "left_semi")
+    def readBox(table: String, bounds: Seq[Bound]): DataFrame =
+      bounds.foldLeft(readEntries(state(table), screen(table, bounds).files)) {
+        case (df, Bound.LongRange(c, lo, hi)) => df.filter(col(c).between(lo, hi))
+        case (df, Bound.StrRange(c, lo, hi))  => df.filter(col(c).between(lo, hi))
+        case (df, Bound.IdSet(c, ids)) if ids.length <= ISIN_MAX =>
+          df.filter(col(c).isin(ids: _*))
+        case (df, Bound.IdSet(c, ids)) =>
+          import spark.implicits._
+          df.join(org.apache.spark.sql.functions.broadcast(ids.toSeq.toDF(c)),
+            Seq(c), "left_semi")
       }
-    }
 
-    /** [[readForIds]] with the id set kept RELATIONAL: `idsDf` (one
-      * column named `idCol`) drives the residual semi-join while the
-      * caller-sorted `sortedIds` drives the metadata file screening —
-      * the shape a mass delete needs, where the ids come from a
-      * DataFrame diff and must never expand into plan literals.
+    /** Batched POINT LOOKUP through the zone maps: [[readBox]] over
+      * one id-set bound, so only files (and row groups) whose (min,
+      * max) can hold ANY of `ids` are read — the metadata-routed row
+      * fetch a keyed store serves without an index. An id-clustered
+      * layout answers a k-id probe by opening ~k files no matter how
+      * large the table is.
       */
-    def readForIdsFrame(
-        table: String,
-        idCol: String,
-        idsDf: DataFrame,
-        sortedIds: Array[Long]
-    ): DataFrame =
-      readEntries(state(table),
-        candidateFilesForIds(table, idCol, sortedIds))
-        .join(org.apache.spark.sql.functions.broadcast(idsDf),
-          Seq(idCol), "left_semi")
+    def readForIds(table: String, idCol: String, ids: Seq[Long]): DataFrame =
+      readBox(table, Seq(Bound.IdSet(idCol, ids.distinct.sorted.toArray)))
   }
 
-  /** Residual-filter shape threshold for [[Snapshot.readForIds]]:
-    * at-or-below this many ids, an `isin` literal list (parquet
-    * pushdown); above, a broadcast semi-join.
+  /** Residual-filter shape threshold for an id-set bound
+    * ([[Snapshot.readBox]], [[Snapshot.readForIds]]): at-or-below
+    * this many ids, an `isin` literal list (parquet pushdown); above,
+    * a broadcast semi-join.
     */
   val ISIN_MAX: Int = 256
 
   /** Index of the first element of `sorted` ≥ `key` (= sorted.length
     * when none).
     */
-  private[sources] def lowerBound(sorted: Array[Long], key: Long): Int = {
+  private def lowerBound(sorted: Array[Long], key: Long): Int = {
     var lo = 0
     var hi = sorted.length
     while (lo < hi) {
@@ -1471,7 +1287,7 @@ object ManifestStore {
     * spec-evolution semantics — the alternative, a full table rewrite
     * through Replace, is exactly what a 100 TB re-partition cannot
     * afford). Reads union the generations; per-spec pruning applies
-    * through [[Snapshot.readPartitionCol]]/[[Snapshot.partitionProbeFiles]];
+    * through [[Snapshot.readPartitionBox]]/[[Snapshot.partitionProbeFilesBox]];
     * time travel before this commit still reads the old spec. Returns
     * the new version.
     */

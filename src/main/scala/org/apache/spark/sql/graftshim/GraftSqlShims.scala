@@ -8,12 +8,21 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession}
   * — the standard wrap-a-LogicalPlan entry point used by Spark
   * extension libraries (graft.plans.AsOfJoin builds its custom
   * logical node through this) — plus the checkpoint-block release
-  * that `Dataset.localCheckpoint` has no public inverse for. Nothing
-  * else from the private surface is touched.
+  * that `Dataset.localCheckpoint` has no public inverse for, and the
+  * listener-bus drain. Nothing else from the private surface is
+  * touched.
   */
 object GraftSqlShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark, plan)
+
+  /** Block until every queued listener event is delivered. Events
+    * reach a `SparkListener` asynchronously, so code that counts
+    * jobs, stages or task metrics drains the bus before it reads its
+    * counters.
+    */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 
   /** Release the storage blocks behind a `localCheckpoint(true)`'d
     * DataFrame. A local checkpoint persists a lineage-truncated RDD

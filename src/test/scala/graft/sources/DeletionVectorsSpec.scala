@@ -197,10 +197,19 @@ class DeletionVectorsSpec extends SparkSpec {
     } finally Scratch.deleteRecursively(root)
   }
 
-  test("read's anti-join side is size-gated: broadcast below the " +
-    "record ceiling, planner-chosen (no forced broadcast) above — " +
-    "identical rows either way") {
-    val root = Scratch.tempDir("graft-dv-gate")
+  test("read's anti-join is sized by the planner: the bench-sized " +
+    "vector executes a broadcast LeftAnti, a disabled broadcast threshold " +
+    "runs none, identical rows either way") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case other                    => other +: other.children.flatMap(nodes)
+    }
+    val root = Scratch.tempDir("graft-dv-plan")
     try {
       ManifestStore.write(docs, root, Seq("source"))
       DeletionVectors.delete(spark, root, ManifestStore.MAIN, "doc_id",
@@ -208,42 +217,25 @@ class DeletionVectorsSpec extends SparkSpec {
       val snap = ManifestStore.snapshot(spark, root)
       val expect = canon(
         docs.filter(pmod(col("doc_id"), lit(97)) =!= 0))
-      def hasForcedBroadcast(df: org.apache.spark.sql.DataFrame) =
-        df.queryExecution.optimizedPlan.collect {
-          case j: org.apache.spark.sql.catalyst.plans.logical.Join
-            if j.hint.leftHint.exists(_.strategy.isDefined) ||
-              j.hint.rightHint.exists(_.strategy.isDefined) => j
-        }.nonEmpty
-      // default ceiling: the bench-sized vector broadcasts
-      val below = DeletionVectors.read(snap)
-      assert(hasForcedBroadcast(below), "small vector must carry the hint")
-      assert(canon(below) === expect)
-      // ceiling 0: the hint must be gone, rows identical
-      spark.conf.set(DeletionVectors.BROADCAST_MAX_RECORDS_KEY, "0")
+      // rows first: collecting runs the frame's own execution, so its
+      // executed plan is the final adaptive one
+      val small = DeletionVectors.read(snap)
+      assert(canon(small) === expect)
+      assert(nodes(small.queryExecution.executedPlan).exists {
+        case j: BroadcastHashJoinExec => j.joinType == LeftAnti
+        case _                        => false
+      }, "the bench-sized vector must execute a BroadcastHashJoin LeftAnti")
+      val key = "spark.sql.autoBroadcastJoinThreshold"
+      val orig = spark.conf.get(key)
+      spark.conf.set(key, "-1")
       try {
-        val above = DeletionVectors.read(snap)
-        assert(!hasForcedBroadcast(above),
-          "an over-ceiling vector must not be forced to broadcast")
-        assert(canon(above) === expect)
-      } finally
-        spark.conf.unset(DeletionVectors.BROADCAST_MAX_RECORDS_KEY)
-    } finally Scratch.deleteRecursively(root)
-  }
-
-  test("a malformed broadcast ceiling fails naming its conf key") {
-    val root = Scratch.tempDir("graft-dv-badconf")
-    try {
-      ManifestStore.write(docs, root, Seq("source"))
-      DeletionVectors.delete(spark, root, ManifestStore.MAIN, "doc_id",
-        docs.filter(pmod(col("doc_id"), lit(97)) === 0).select("doc_id"))
-      val snap = ManifestStore.snapshot(spark, root)
-      spark.conf.set(DeletionVectors.BROADCAST_MAX_RECORDS_KEY, "abc")
-      try {
-        val e = intercept[IllegalArgumentException](DeletionVectors.read(snap))
-        assert(e.getMessage.contains(DeletionVectors.BROADCAST_MAX_RECORDS_KEY))
-        assert(e.getMessage.contains("'abc'"))
-      } finally
-        spark.conf.unset(DeletionVectors.BROADCAST_MAX_RECORDS_KEY)
+        val large = DeletionVectors.read(snap)
+        assert(canon(large) === expect)
+        val ran = nodes(large.queryExecution.executedPlan)
+        assert(!ran.exists(p => p.isInstanceOf[BroadcastHashJoinExec] ||
+          p.isInstanceOf[BroadcastNestedLoopJoinExec]),
+          "no broadcast join may run when the threshold forbids it")
+      } finally spark.conf.set(key, orig)
     } finally Scratch.deleteRecursively(root)
   }
 

@@ -267,12 +267,13 @@ class ManifestLogSpec extends SparkSpec {
       val snap = ManifestStore.snapshot(spark, root)
       // bare-id bounds bracket the dash-suffixed keys of [150, 349]
       val (lo, hi) = ("000150", "000350")
-      val (kept, total) =
-        snap.prunedFilesStr(ManifestStore.MAIN, Seq(("k", lo, hi)))
+      val bounds = Seq(ManifestStore.Bound.StrRange("k", lo, hi))
+      val sc = snap.screen(ManifestStore.MAIN, bounds)
+      val (kept, total) = (sc.files, sc.filesTotal)
       assert(total >= 4, s"fixture too small to demonstrate skipping: $total")
       assert(kept.nonEmpty && kept.length < total,
         s"truncated bounds must still prune: ${kept.length} of $total")
-      assert(canon(snap.readRangeStr(ManifestStore.MAIN, "k", lo, hi)) ===
+      assert(canon(snap.readBox(ManifestStore.MAIN, bounds)) ===
         canon(keyed.filter(col("k") >= lo && col("k") <= hi)))
     } finally Scratch.deleteRecursively(root)
   }
@@ -397,12 +398,11 @@ class ManifestLogSpec extends SparkSpec {
           .otherwise(lit(supp)).as("k"))
       ManifestStore.write(two, root, Seq.empty)
       val snap = ManifestStore.snapshot(spark, root)
-      val (kept, total) =
-        snap.prunedFilesStr(ManifestStore.MAIN, Seq(("k", supp, supp)))
-      assert(total === 1 && kept.length === 1,
+      val bounds = Seq(ManifestStore.Bound.StrRange("k", supp, supp))
+      val sc = snap.screen(ManifestStore.MAIN, bounds)
+      assert(sc.filesTotal === 1 && sc.files.length === 1,
         "code-unit probing would drop the file that holds the match")
-      assert(snap.readRangeStr(ManifestStore.MAIN, "k", supp, supp)
-        .count() === 1L)
+      assert(snap.readBox(ManifestStore.MAIN, bounds).count() === 1L)
     } finally Scratch.deleteRecursively(root)
   }
 }

@@ -371,12 +371,14 @@ class ManifestStoreSpec extends SparkSpec {
       ManifestStore.write(bucketed, root, Seq("bucket"))
       val snap = ManifestStore.snapshot(spark, root)
       val (lo, hi) = (150L, 349L)
-      val (kept, total) = snap.rangeFiles(ManifestStore.MAIN, "doc_id", lo, hi)
+      val bounds = Seq(ManifestStore.Bound.LongRange("doc_id", lo, hi))
+      val sc = snap.screen(ManifestStore.MAIN, bounds)
+      val (kept, total) = (sc.files, sc.filesTotal)
       assert(total >= 4, s"fixture too small to demonstrate skipping: $total files")
       assert(kept.nonEmpty && kept.length < total,
         s"range [$lo,$hi] must prune: kept ${kept.length} of $total")
       // result identity: pruned scan + residual filter ≡ full filter
-      val ranged = snap.readRange(ManifestStore.MAIN, "doc_id", lo, hi)
+      val ranged = snap.readBox(ManifestStore.MAIN, bounds)
       assert(canon(ranged) ===
         canon(bucketed.filter(col("doc_id") >= lo && col("doc_id") <= hi)))
       // IO evidence: the scan opened ONLY the kept files

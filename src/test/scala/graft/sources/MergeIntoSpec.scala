@@ -2,10 +2,10 @@ package graft.sources
 
 import graft.{SparkSpec, Tables}
 import graft.cdc.Materializer
-import org.apache.spark.GraftTestAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftSqlShims
 
 /** MERGE INTO's defining equivalence: applying a change log through
   * [[MergeInto.merge]] batch by batch (each batch REDELIVERED — the
@@ -52,11 +52,11 @@ class MergeIntoSpec extends SparkSpec {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         widest.accumulateAndGet(e.stageInfo.numTasks, math.max)
     }
-    GraftTestAccess.drainListeners(sc)
+    GraftSqlShims.drainListeners(sc)
     sc.addSparkListener(listener)
     try body
     finally {
-      GraftTestAccess.drainListeners(sc)
+      GraftSqlShims.drainListeners(sc)
       sc.removeSparkListener(listener)
     }
     import scala.jdk.CollectionConverters._

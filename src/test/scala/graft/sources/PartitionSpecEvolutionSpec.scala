@@ -52,19 +52,19 @@ class PartitionSpecEvolutionSpec extends SparkSpec {
       val lang0 = docs.select(min(col("lang"))).head.getString(0)
       val nSrc = gen1.select(countDistinct(col("source"))).head.getLong(0)
       val nLang = gen2.select(countDistinct(col("lang"))).head.getLong(0)
-      val (keptL, totalL) = v3.partitionProbeFiles(
-        ManifestStore.MAIN, "lang", Set(lang0))
+      val (keptL, totalL) = v3.partitionProbeFilesBox(
+        ManifestStore.MAIN, Seq("lang" -> Set(lang0)))
       assert(totalL === (nSrc + nLang))
       assert(keptL.length === (nSrc + 1).toInt,
         s"lang probe must keep 1 lang file + all $nSrc source files")
-      assert(canon(v3.readPartitionCol(ManifestStore.MAIN, "lang", Seq(lang0)))
+      assert(canon(v3.readPartitionBox(ManifestStore.MAIN, Seq("lang" -> Seq(lang0))))
         === canon(docs.filter(col("lang") === lang0)))
       // ...and symmetrically for a source probe
       val src0 = docs.select(min(col("source"))).head.getString(0)
-      val (keptS, _) = v3.partitionProbeFiles(
-        ManifestStore.MAIN, "source", Set(src0))
+      val (keptS, _) = v3.partitionProbeFilesBox(
+        ManifestStore.MAIN, Seq("source" -> Set(src0)))
       assert(keptS.length === (nLang + 1).toInt)
-      assert(canon(v3.readPartitionCol(ManifestStore.MAIN, "source", Seq(src0)))
+      assert(canon(v3.readPartitionBox(ManifestStore.MAIN, Seq("source" -> Seq(src0))))
         === canon(docs.filter(col("source") === src0)))
 
       // upserting one lang partition replaces ONLY that lang entry —

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.{SparkSpec, Tables}
+import graft.sources.ManifestStore.Bound
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -8,9 +9,10 @@ import org.apache.spark.sql.functions._
   * multi-row-group files, file-level (min, max) stops helping inside
   * the file — the manifest now carries per-group integral bounds, the
   * group census proves intra-file skipping WITHOUT opening a file,
-  * the group-sharpened file screen drops range-in-gap files the file
-  * envelope keeps, and the pushed-down residual makes the actual scan
-  * read only the intersecting groups (pinned via scan metrics).
+  * the group-level screen drops files whose range or id-set probe
+  * falls in the gaps the file envelope covers, and the pushed-down
+  * residual makes the actual scan read only the intersecting groups
+  * (pinned via scan metrics).
   */
 class RowGroupStatsSpec extends SparkSpec {
 
@@ -19,14 +21,17 @@ class RowGroupStatsSpec extends SparkSpec {
 
   /** A compacted store: one id-sorted file with a small parquet block
     * size, so the fixture produces many row groups — the shape
-    * Compaction.execute manufactures at scale.
+    * Compaction.execute manufactures at scale. Ids are even (40
+    * shifted copies of `2 · doc_id`), so between any two adjacent
+    * groups lies an odd id no group holds although the file's
+    * envelope covers it.
     */
   private def buildCompacted(root: String): DataFrame = {
     val wide = (0 until 40).map { i =>
       Tables(spark, sfDir).documents
         .select(col("doc_id"), col("text"),
           col("n_chars").cast("long").as("n_chars"))
-        .withColumn("doc_id", col("doc_id") + lit(500L * i))
+        .withColumn("doc_id", col("doc_id") * 2 + lit(1000L * i))
     }.reduce(_ unionByName _).localCheckpoint(true)
     ManifestStore.commit(spark, root, Seq(ManifestStore.stage(
       wide.coalesce(1).sortWithinPartitions("doc_id"),
@@ -59,19 +64,20 @@ class RowGroupStatsSpec extends SparkSpec {
       }, "id-sorted groups must have non-overlapping ascending bounds")
 
       // a quartile range probe: the census says most groups skip
-      val ranges = Seq(("doc_id", 5000L, 7499L))
-      val (gk, gt, rk, rt) = snap.rowGroupPrune(ManifestStore.MAIN, ranges)
+      val ranges = Seq(Bound.LongRange("doc_id", 5000L, 7499L))
+      val sc = snap.screen(ManifestStore.MAIN, ranges)
+      val (gk, gt, rk, rt) = (sc.groupsKept, sc.groupsTotal, sc.rowsKept, sc.rowsTotal)
       assert(gt === f.groups.length && rt === f.rows)
       assert(gk < gt && gk > 0, s"probe must skip groups: $gk of $gt kept")
       assert(rk < rt, "rows in kept groups < file rows — intra-file skipping")
       // exactness: the sharpened read ≡ the plain filter
-      val got = snap.readBoxRG(ManifestStore.MAIN, ranges)
+      val got = snap.readBox(ManifestStore.MAIN, ranges)
       assert(canon(got) === canon(
         wide.filter(col("doc_id") >= 5000L && col("doc_id") <= 7499L)))
 
       // the SCAN actually skipped: pushed-down range + footer bounds
       // mean the reader materializes only the kept groups' rows
-      val agg = snap.readBoxRG(ManifestStore.MAIN, ranges)
+      val agg = snap.readBox(ManifestStore.MAIN, ranges)
         .agg(count(lit(1)), sum(col("n_chars")))
       agg.collect()
       val scans = scanNodes(agg.queryExecution.executedPlan)
@@ -88,17 +94,13 @@ class RowGroupStatsSpec extends SparkSpec {
       // range-in-gap: a probe BETWEEN two adjacent groups' bounds is
       // exonerated by the group screen even though the file envelope
       // covers it (file-level pruning keeps the file)
-      bounds.sliding(2).collectFirst {
-        case Seq((_, aMax), (bMin, _)) if bMin > aMax + 1 => (aMax + 1, bMin - 1)
-      } match {
-        case Some((lo, hi)) =>
-          val gap = Seq(("doc_id", lo, hi))
-          assert(snap.prunedFiles(ManifestStore.MAIN, gap)._1.length === 1)
-          assert(snap.prunedFilesRG(ManifestStore.MAIN, gap)._1.isEmpty,
-            "a range in the inter-group gap must drop the file entirely")
-          assert(snap.readBoxRG(ManifestStore.MAIN, gap).count() === 0L)
-        case None => // contiguous ids: no gap to probe — fine
-      }
+      val (lo, hi) = gapsOf(f).head
+      val (fMin, fMax) = f.stats("doc_id")
+      assert(fMin <= lo && hi <= fMax, "the file envelope covers the gap")
+      val gap = Seq(Bound.LongRange("doc_id", lo, hi))
+      assert(snap.screen(ManifestStore.MAIN, gap).files.isEmpty,
+        "a range in the inter-group gap must drop the file entirely")
+      assert(snap.readBox(ManifestStore.MAIN, gap).count() === 0L)
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(wide)
     } finally Scratch.deleteRecursively(root)
   }
@@ -128,11 +130,12 @@ class RowGroupStatsSpec extends SparkSpec {
       assert(f.groups.length > 1)
       assert(f.groups.forall(_.strStats.contains("source")),
         "every group must carry truncated source bounds")
-      val ranges = Seq(("source", "src13", "src15"))
-      val (gk, gt, rk, rt) = snap.rowGroupPruneStr(ManifestStore.MAIN, ranges)
-      assert(gk < gt && gk > 0, s"string probe must skip groups: $gk of $gt")
-      assert(rk < rt)
-      val got = snap.readBoxStrRG(ManifestStore.MAIN, ranges)
+      val ranges = Seq(Bound.StrRange("source", "src13", "src15"))
+      val sc = snap.screen(ManifestStore.MAIN, ranges)
+      assert(sc.groupsKept < sc.groupsTotal && sc.groupsKept > 0,
+        s"string probe must skip groups: ${sc.groupsKept} of ${sc.groupsTotal}")
+      assert(sc.rowsKept < sc.rowsTotal)
+      val got = snap.readBox(ManifestStore.MAIN, ranges)
       assert(canon(got) === canon(
         wide.filter(col("source") >= "src13" && col("source") <= "src15")))
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(wide)
@@ -152,15 +155,66 @@ class RowGroupStatsSpec extends SparkSpec {
         .partitions.values.flatMap(_.files)
       assert(files.forall(_.groups.isEmpty),
         "small files must not pay per-group bytes in the log")
-      val ranges = Seq(("doc_id", 150L, 249L))
-      val (kept, total) = snap.prunedFilesRG(ManifestStore.MAIN, ranges)
-      assert((kept.map(_.path), total) ===
-        (snap.prunedFiles(ManifestStore.MAIN, ranges)._1.map(_.path), total))
-      val (gk, gt, rk, rt) = snap.rowGroupPrune(ManifestStore.MAIN, ranges)
-      assert(gt === files.size && gk === kept.length)
-      assert(rk === kept.map(_.rows).sum && rt === docs.count())
+      val sc = snap.screen(ManifestStore.MAIN,
+        Seq(Bound.LongRange("doc_id", 150L, 249L)))
+      // the file-level envelope test, written out from FileEntry.stats
+      val envelope = files.filter { f =>
+        val (mn, mx) = f.stats("doc_id")
+        mx >= 150L && mn <= 249L
+      }
+      assert(sc.files.map(_.path).sorted === envelope.map(_.path).toSeq.sorted)
+      assert(sc.filesTotal === files.size)
+      assert(sc.groupsTotal === files.size && sc.groupsKept === sc.files.length)
+      assert(sc.rowsKept === sc.files.map(_.rows).sum && sc.rowsTotal === docs.count())
     } finally Scratch.deleteRecursively(root)
   }
+
+  test("id-set bounds screen by row group: ids in the gaps between " +
+    "groups drop the file; readForIds ≡ a plain isin filter") {
+    val root = Scratch.tempDir("graft-rg-ids")
+    try {
+      val wide = buildCompacted(root)
+      val snap = ManifestStore.snapshot(spark, root)
+      val f = snap.state(ManifestStore.MAIN)
+        .partitions.values.flatMap(_.files).head
+      val (fMin, fMax) = f.stats("doc_id")
+      // one id inside each inter-group gap: every one lies inside the
+      // file's envelope, so a file-level screen would keep the file
+      val gapIds = gapsOf(f).map(_._1)
+      assert(gapIds.length === f.groups.length - 1)
+      assert(gapIds.forall(id => fMin <= id && id <= fMax))
+      val gapScreen = snap.screen(ManifestStore.MAIN,
+        Seq(Bound.IdSet("doc_id", gapIds.sorted.toArray)))
+      assert(gapScreen.files.isEmpty && gapScreen.groupsKept === 0,
+        "ids that fall only in inter-group gaps must drop the file")
+      assert(snap.readForIds(ManifestStore.MAIN, "doc_id", gapIds).count() === 0L)
+
+      // a mixed probe: the first ids of three groups, gap ids, and ids
+      // outside the envelope — exactly the three groups are kept
+      val present = f.groups.take(3).map(_.stats("doc_id")._1)
+      val mixed = present ++ gapIds.take(5) ++ Seq(fMin - 3, fMax + 7)
+      val sc = snap.screen(ManifestStore.MAIN,
+        Seq(Bound.IdSet("doc_id", mixed.distinct.sorted.toArray)))
+      assert(sc.files.length === 1 && sc.groupsKept === 3)
+      def same(ids: Seq[Long]) =
+        assert(canon(snap.readForIds(ManifestStore.MAIN, "doc_id", ids)) ===
+          canon(wide.filter(col("doc_id").isin(ids: _*))))
+      same(mixed)
+      // above ISIN_MAX the residual is a broadcast semi-join instead
+      val many = (0L until 400L).map(_ * 37L)
+      assert(many.length > ManifestStore.ISIN_MAX)
+      same(many)
+      org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(wide)
+    } finally Scratch.deleteRecursively(root)
+  }
+
+  /** The (lo, hi) id span strictly between each pair of adjacent row
+    * groups of an id-sorted multi-group file.
+    */
+  private def gapsOf(f: ManifestStore.FileEntry): Seq[(Long, Long)] =
+    f.groups.map(_.stats("doc_id")).sliding(2).collect {
+      case Seq((_, aMax), (bMin, _)) if bMin > aMax + 1 => (aMax + 1, bMin - 1)
+    }.toSeq
 
   private def scanNodes(
       p: org.apache.spark.sql.execution.SparkPlan
