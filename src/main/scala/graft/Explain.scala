@@ -42,7 +42,7 @@ object Explain {
     // plans (the gated rows checkpoint their frames, so their own
     // dump is a LogicalRDD leaf): the planner-sized anti-join of
     // DeletionVectors.read with broadcast allowed and disallowed,
-    // and the id-sliced point-lookup pile reduction of readForIds.
+    // and the id-sliced point-lookup max-record reduction of readForIds.
     if (sys.env.contains("SPARK_GRAFT_DV_EXHIBIT"))
       dvExhibit(spark, sfDir)
     // SPARK_GRAFT_CBO_EXHIBIT: time the manifest-rowCount CBO claim
@@ -107,7 +107,7 @@ object Explain {
       println("\n==== dv_readForIds:id_sliced_pile " +
         s"(point lookup of ${probe.length} ids: BOTH scans are " +
         "zone-map candidate files with the ids pushed down — the DV " +
-        "side reduces latest-wins over only the probed ids' records, " +
+        "side reduces to the max record of only the probed ids, " +
         "never the whole pile) ====")
       DeletionVectors.readForIds(snap, ManifestStore.MAIN, "doc_id", probe)
         .explain("formatted")

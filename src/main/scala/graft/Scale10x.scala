@@ -433,6 +433,57 @@ object Scale10x {
       r
     }
 
+    /** merge_store_scale: ONE fixed 200-row batch — 100 updates, 50
+      * deletes, 50 fresh inserts — merged into a `source`-partitioned
+      * store of `20000·mult` rows. The merge appends the upsert rows
+      * and one vector run and reads nothing from the store, so its
+      * seconds and its staged bytes (data plus vector files the commit
+      * adds) stay flat at 10× the store; a design that rewrites the
+      * touched partitions grows both with the store.
+      */
+    def mergeStoreArm(mult: Int): Map[String, Double] = {
+      import graft.sources.{DeletionVectors, ManifestStore, MergeInto}
+      val rows = 20000L * mult
+      val root = graft.sources.Scratch.tempDir(s"graft-scale-ms$mult")
+      val docs = spark.read
+        .format("graft-docs")
+        .option("rows", rows)
+        .option("partitions", cpus)
+        .option("seed", 17)
+        .load()
+        .select(col("doc_id"), col("source"), col("n_chars"))
+      ManifestStore.write(docs, root, Seq("source"))
+      def batch(off: Long, ts: Long) = {
+        def ev(lo: Long, n: Long, op: String) =
+          docs.filter(col("doc_id") >= lo && col("doc_id") < lo + n)
+            .select(col("doc_id"), col("source"),
+              (col("n_chars") + lit(ts)).as("n_chars"),
+              lit(op).as("op"), lit(ts).as("ts"), lit(1L).as("seq"))
+        ev(off, 100, "U").unionByName(ev(off + 100, 50, "D"))
+          .unionByName(ev(off + 150, 50, "I")
+            .withColumn("doc_id", col("doc_id") + lit(rows)))
+      }
+      def mergeOnce(b: org.apache.spark.sql.DataFrame, id: Long): Double = {
+        val t0 = System.nanoTime()
+        MergeInto.merge(spark, root, b, "scale-ms", id)
+        (System.nanoTime() - t0) / 1e9
+      }
+      mergeOnce(batch(0, 1), 0L) // warm: same shape, other keys
+      val pre = ManifestStore.snapshot(spark, root)
+      metrics.reset()
+      val secs = mergeOnce(batch(1000, 2), 1L)
+      val post = ManifestStore.snapshot(spark, root)
+      val staged = Seq(ManifestStore.MAIN, DeletionVectors.dvTable(ManifestStore.MAIN))
+        .flatMap(t => ManifestStore.fileDiff(pre, post, t)._1).map(_.bytes).sum
+      val r = Map(
+        "secs" -> math.round(secs * 1000) / 1000.0,
+        "store_rows" -> rows.toDouble,
+        "staged_kb" -> math.round(staged / 1.024) / 1000.0
+      ) ++ metrics.counters()
+      graft.sources.Scratch.deleteRecursively(root)
+      r
+    }
+
     val dir1 = gen(1)
     val x1 = measure(dir1) +
       ("ann_serve_fixed_batch" -> servingArm(dir1, 1)) +
@@ -440,7 +491,8 @@ object Scale10x {
       ("manifest_fixed_churn" -> manifestArm(dir1, 1)) +
       ("dv_feed_fixed_store" -> dvFeedArm(1)) +
       ("dv_read_fixed_store" -> dvReadArm(1)) +
-      ("merge_fixed_batch" -> mergeArm(1))
+      ("merge_fixed_batch" -> mergeArm(1)) +
+      ("merge_store_scale" -> mergeStoreArm(1))
     graft.sources.Scratch.deleteRecursively(dir1)
     val dir10 = gen(10)
     val x10 = measure(dir10) +
@@ -449,7 +501,8 @@ object Scale10x {
       ("manifest_fixed_churn" -> manifestArm(dir10, 10)) +
       ("dv_feed_fixed_store" -> dvFeedArm(10)) +
       ("dv_read_fixed_store" -> dvReadArm(10)) +
-      ("merge_fixed_batch" -> mergeArm(10))
+      ("merge_fixed_batch" -> mergeArm(10)) +
+      ("merge_store_scale" -> mergeStoreArm(10))
     graft.sources.Scratch.deleteRecursively(dir10)
 
     def js(m: Map[String, Map[String, Double]]): String =
@@ -469,8 +522,8 @@ object Scale10x {
           val rb = b("shuffle_read_mb") + b("shuffle_write_mb")
           math.round(rb / math.max(ra, 1e-9) * 100) / 100.0
         }
-      ) ++ (if (a.contains("point_secs"))
-        Map("point_secs" -> rt("point_secs")) else Map.empty)
+      ) ++ Seq("point_secs", "staged_kb").filter(a.contains)
+        .map(k => k -> rt(k))
       else Map( // the manifest arm's metadata timings
         "commit_secs" -> rt("commit_secs"),
         "snapshot_secs" -> rt("snapshot_secs"),

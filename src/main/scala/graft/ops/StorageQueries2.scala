@@ -100,16 +100,17 @@ object StorageQueries2 extends graft.QueryFamily {
     * 5th doc (+1e6), deletes every 7th≡3, inserts re-keyed copies of
     * every 11th≡0; batch 2 deletes every 10th≡0 and RE-INSERTS the
     * odd half of batch 1's deletes (+5e5) — the op every naive
-    * DV design breaks on (the vector entry must clear in the same
-    * commit or the new row stays dead). [[graft.sources.MergeInto]]
-    * lands each batch as ONE commit: zone-map-routed partition
-    * rewrites for upserts, O(k) vector ids for deletes, ledger-gated
-    * exactly-once (the version column pins that redeliveries mint
-    * nothing). The oracle derives the final state from modulus
+    * DV design breaks on (the vector must not kill the new row).
+    * [[graft.sources.MergeInto]] lands each batch as ONE
+    * merge-on-read commit: the upsert rows appended as new files, one
+    * sequence-scoped vector run that kills only the keys' older
+    * copies, ledger-gated exactly-once (the version column pins that
+    * redeliveries mint nothing). The oracle derives the final state from modulus
     * arithmetic — within-batch latest-wins included (a doc both
     * updated and deleted in batch 1 dies; its odd half returns at
     * +5e5). MergeIntoSpec pins merge ≡ one-shot materialize, the
-    * stale-row-resurrection guard, and emptied-partition drops.
+    * stale-row-resurrection guard, and emptied-partition drops at
+    * materialization.
     */
   private val mergeInto: Q = (s, dir) => {
     import graft.sources.{DeletionVectors, MergeInto}

@@ -183,8 +183,9 @@ object StorageQueries3 extends graft.QueryFamily {
     * REDELIVERED — the at-least-once schedule) interleave deletes,
     * updates, and re-inserts of previously-deleted keys, every batch
     * APPENDING one O(batch) record run to the `__dv` sidecar
-    * (delete + revive records, latest-wins on read — no batch ever
-    * rewrites the vector, MergeIntoSpec's churn arm pins the bytes);
+    * (sequence-scoped records that kill only older copies, reduced to
+    * the max per id on read — no batch ever rewrites the vector,
+    * MergeIntoSpec's churn arm pins the bytes);
     * [[graft.sources.DeletionVectors.compactDv]] collapses the pile
     * mid-history to ONE sorted run WITHOUT touching a data file, and
     * a further merge lands on top of the compacted vector (its new
@@ -192,7 +193,7 @@ object StorageQueries3 extends graft.QueryFamily {
     * The gated row emits the final per-source state plus the version
     * arithmetic (redeliveries mint nothing) and the vector's file
     * census after compaction (1) and at head (2) — an engine whose
-    * compaction loses a revive, resurrects a delete, or whose merge
+    * compaction loses a re-insert, resurrects a delete, or whose merge
     * rewrites instead of appending diverges. The oracle derives the
     * final state from modulus arithmetic with batch precedence
     * applied (a key both re-inserted and deleted WITHIN a batch

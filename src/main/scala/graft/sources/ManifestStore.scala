@@ -267,7 +267,10 @@ object ManifestStore {
     * groups — metadata, not data), and per-ROW-GROUP integral bounds
     * (`groups`, multi-group files only) for intra-file skipping
     * ([[Snapshot.screen]]). A column absent from the stats
-    * maps simply cannot prune this file.
+    * maps simply cannot prune this file. `seq` is the version whose
+    * commit added the file — set by replay from the delta's version,
+    * persisted by checkpoints — the order deletion-vector records are
+    * scoped by ([[DeletionVectors]]).
     */
   final case class FileEntry(
       path: String,
@@ -275,7 +278,8 @@ object ManifestStore {
       rows: Long,
       stats: Map[String, (Long, Long)] = Map.empty,
       strStats: Map[String, (String, String)] = Map.empty,
-      groups: Seq[RowGroupStat] = Seq.empty
+      groups: Seq[RowGroupStat] = Seq.empty,
+      seq: Long = 0L
   )
 
   /** One partition's entry, tagged with the SPEC (`cols`) it was
@@ -410,6 +414,27 @@ object ManifestStore {
     }
   }
 
+  /** Index ranges into `sorted` (ascending, distinct) of the ids some
+    * row group of `f` admits on integral `column` — one binary search
+    * pair per group; a group without stats for the column admits all.
+    */
+  private[sources] def admittedRanges(
+      f: FileEntry,
+      column: String,
+      sorted: Array[Long]
+  ): Seq[Range] =
+    groupsOf(f).map(_.stats.get(column) match {
+      case Some((mn, mx)) =>
+        lowerBound(sorted, mn) until
+          (if (mx == Long.MaxValue) sorted.length else lowerBound(sorted, mx + 1))
+      case None => sorted.indices
+    })
+
+  /** The per-file sequence column DV-aware scans carry: each row's
+    * [[FileEntry.seq]].
+    */
+  val FILE_SEQ = "__file_seq"
+
   /** One reconstructed version: every read through the same snapshot
     * sees one committed version across ALL tables — the isolation
     * unit. `ts` is the commit's wall-clock (epoch millis, strictly
@@ -425,40 +450,36 @@ object ManifestStore {
   ) {
     def hasTable(table: String): Boolean = tables.contains(table)
 
-    private def resolve(files: Seq[FileEntry]): Seq[(String, Long)] =
-      files.map(f => (root + "/" + f.path, f.bytes))
-
     /** Every read resolves through the log's OWN metadata: the
-      * (path, bytes) pairs feed a caller-provided FileIndex, so a read
-      * costs ZERO filesystem list/stat calls — `spark.read.parquet`
+      * entries' (path, bytes) feed a caller-provided FileIndex, so a
+      * read costs ZERO filesystem list/stat calls — `spark.read.parquet`
       * with explicit paths re-stats each file on the driver per read,
-      * an O(files) IO round the log already paid at commit time.
+      * an O(files) IO round the log already paid at commit time. The
+      * entries' own ROW SUM reaches the optimizer as catalog statistics
+      * beside the byte sum — with CBO enabled, join planning sees true
+      * cardinality, not just file bytes (every read path routes through
+      * here). With `fileSeq`, each row also carries its file's
+      * [[FileEntry.seq]] as [[FILE_SEQ]], served as the scan's
+      * partition value.
       */
-    private def readFiles(
+    private[sources] def readEntries(
         st: TableState,
-        files: Seq[(String, Long)],
-        rowCount: Option[Long] = None
+        entries: Seq[FileEntry],
+        fileSeq: Boolean = false
     ): DataFrame = {
       // resolve columns BY FIELD ID where the table has a mapping:
       // a renamed column's old files serve the new name through the id
       val schema = withFieldIds(StructType.fromDDL(st.schemaDdl), st.fieldIds)
-      if (files.isEmpty)
+      if (entries.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[Row],
-          schema
+          if (fileSeq) schema.add(FILE_SEQ, "long", nullable = false) else schema
         )
       else
-        org.apache.spark.sql.graftshim.GraftSqlShims
-          .readParquetKnownFiles(spark, schema, files, rowCount)
+        org.apache.spark.sql.graftshim.GraftSqlShims.readParquetKnownFiles(
+          spark, schema, entries.map(f => (root + "/" + f.path, f.bytes, f.seq)),
+          Some(entries.map(_.rows).sum), Option.when(fileSeq)(FILE_SEQ))
     }
-
-    /** [[readFiles]] over manifest entries, carrying the entries' own
-      * ROW SUM to the optimizer as catalog statistics beside the byte
-      * sum — with CBO enabled, join planning sees true cardinality,
-      * not just file bytes (every read path routes through here).
-      */
-    private def readEntries(st: TableState, entries: Seq[FileEntry]): DataFrame =
-      readFiles(st, resolve(entries), Some(entries.map(_.rows).sum))
 
     def read(table: String = MAIN): DataFrame = {
       val st = state(table)
@@ -612,7 +633,16 @@ object ManifestStore {
       * O(ids)-literal expression in the plan.
       */
     def readBox(table: String, bounds: Seq[Bound]): DataFrame =
-      bounds.foldLeft(readEntries(state(table), screen(table, bounds).files)) {
+      readBox(table, bounds, fileSeq = false)
+
+    /** [[readBox]], optionally carrying [[FILE_SEQ]]. */
+    private[sources] def readBox(
+        table: String,
+        bounds: Seq[Bound],
+        fileSeq: Boolean
+    ): DataFrame =
+      bounds.foldLeft(
+        readEntries(state(table), screen(table, bounds).files, fileSeq)) {
         case (df, Bound.LongRange(c, lo, hi)) => df.filter(col(c).between(lo, hi))
         case (df, Bound.StrRange(c, lo, hi))  => df.filter(col(c).between(lo, hi))
         case (df, Bound.IdSet(c, ids)) if ids.length <= ISIN_MAX =>
@@ -1437,13 +1467,20 @@ object ManifestStore {
     * and the data actions are ONE delta entry, so there is no window
     * where one is committed and the other is not. Returns the current
     * version and whether this call published.
+    *
+    * `expectedVersion` pins the publish to the version the batch was
+    * staged from, as [[commit]]'s does: a batch that is not a
+    * redelivery and finds another writer's commit in between throws
+    * [[ConcurrentCommitException]] with nothing published, and the
+    * redelivery re-stages from the fresh version.
     */
   def commitBatch(
       spark: SparkSession,
       root: String,
       staged: Seq[Staged],
       sinkId: String,
-      batchId: Long
+      batchId: Long,
+      expectedVersion: Long = ANY_VERSION
   ): (Long, Boolean) = {
     require(staged.nonEmpty, "nothing staged")
     lockFor(root).synchronized {
@@ -1451,6 +1488,11 @@ object ManifestStore {
       if (prev.batches.get(sinkId).exists(_ >= batchId)) {
         (prev.version, false)
       } else {
+        if (expectedVersion != ANY_VERSION && prev.version != expectedVersion)
+          throw new ConcurrentCommitException(
+            s"batch $batchId of sink '$sinkId' at $root was staged from " +
+              s"version $expectedVersion but found ${prev.version} — another " +
+              "writer committed first; stage is unpublished")
         val actions = toActions(spark, root, staged)
         (publish(root, prev, actions, Some(sinkId -> batchId)), true)
       }
@@ -1470,6 +1512,7 @@ object ManifestStore {
       batchUpdate: Option[(String, Long)]
   ): Long = {
     val version = prev.version + 1
+    requireVectorApplied(prev, actions)
     // strictly monotonic commit clock: AS OF TIMESTAMP resolution
     // needs ts to order exactly like versions even when two commits
     // land in one millisecond
@@ -1508,6 +1551,30 @@ object ManifestStore {
     }
     version
   }
+
+  /** A rewrite of a table that has a non-empty deletion vector would
+    * stamp the vector's dead copies with this commit's (newer) file
+    * sequence number, which brings them back as live rows
+    * ([[DeletionVectors]]). So an Upsert, a Replace or a partition
+    * drop of such a table must come in the same commit as a Replace of
+    * its vector — [[DeletionVectors.materialize]]'s shape, which
+    * applies the vector and clears it. Appends add new rows and stay
+    * allowed.
+    */
+  private def requireVectorApplied(prev: StoreState, actions: Seq[Action]): Unit =
+    actions.foreach { a =>
+      val dv = DeletionVectors.dvTable(a.table)
+      val records = prev.tables.get(dv).map(_.partitions.values.map(_.rows).sum)
+        .getOrElse(0L)
+      val rewrites = a.mode == Upsert || a.mode == Replace || a.drops.nonEmpty
+      require(!rewrites || records == 0L ||
+        actions.exists(o => o.table == dv && o.mode == Replace),
+        s"table '${a.table}' has a deletion vector ($records records in " +
+          s"'$dv'): a rewrite (${modeName(a.mode)}" +
+          (if (a.drops.nonEmpty) " with partition drops" else "") +
+          ") that ignores it would revive its dead rows — run " +
+          "DeletionVectors.materialize first")
+    }
 
   /** Single daemon writer for async checkpoints: FIFO, so
     * [[awaitCheckpoints]] (an empty barrier task) drains everything
@@ -1792,13 +1859,21 @@ object ManifestStore {
       batchUpdate: Option[(String, Long)]
   )
 
-  private def applyDelta(prev: StoreState, d: Delta): StoreState =
+  /** The next state: `d`'s actions applied with every file they add
+    * stamped with `d.version` ([[FileEntry.seq]]) — the one place a
+    * live commit, a rebase and a replay all pass, so the three agree.
+    */
+  private def applyDelta(prev: StoreState, d: Delta): StoreState = {
+    val stamped = d.actions.map(a => a.copy(partitions = a.partitions.map {
+      case (k, p) => k -> p.copy(files = p.files.map(_.copy(seq = d.version)))
+    }))
     StoreState(
       d.version,
       d.ts,
-      applyActions(d.actions, prev.tables),
+      applyActions(stamped, prev.tables),
       d.batchUpdate.fold(prev.batches)(prev.batches + _)
     )
+  }
 
   private def writePartitions(
       mapper: com.fasterxml.jackson.databind.ObjectMapper,
@@ -1823,6 +1898,9 @@ object ManifestStore {
         fn.put("path", f.path)
         fn.put("bytes", f.bytes)
         fn.put("rows", f.rows)
+        // a checkpoint's files carry their adding version; a delta's
+        // are unstamped (its own version stamps them at replay)
+        if (f.seq != 0L) fn.put("seq", f.seq)
         if (f.stats.nonEmpty) {
           val sn = fn.putObject("stats")
           f.stats.toSeq.sortBy(_._1).foreach { case (c, (mn, mx)) =>
@@ -1910,7 +1988,8 @@ object ManifestStore {
           f.get("rows").asLong(),
           stats,
           strStats,
-          groups
+          groups,
+          Option(f.get("seq")).map(_.asLong()).getOrElse(0L)
         )
       }.toSeq
       pe.getKey -> PartitionEntry(values, files, cols)

@@ -73,58 +73,80 @@ object GraftSqlShims {
     * build its InMemoryFileIndex — a driver-side O(files) round of
     * IO per read) pays for metadata the caller is holding. The
     * `FileIndex` below serves `listFiles` straight from the provided
-    * (path, bytes) pairs; partition pruning already happened at the
-    * manifest, so the index is partition-less and the data columns
-    * carry any partition values.
+    * (path, bytes, value) triples; partition pruning already happened
+    * at the manifest, and the data columns carry any partition
+    * values.
+    *
+    * `valueCol` names an optional per-FILE constant column: each
+    * file's third element is served as the scan's partition value,
+    * so every row carries its file's value with no expression, no
+    * UDF and no extra job (the manifest's file sequence numbers reach
+    * deletion-vector reads this way). Partition filters the planner
+    * pushes on it are evaluated against the values, as Spark's own
+    * indexes do.
+    *
+    * `rowCount` carries the manifest's ROW COUNT into the optimizer
+    * alongside the byte sum: the scan's `LogicalRelation` gets
+    * `CatalogStatistics(sizeInBytes, rowCount)`, so with
+    * CBO/plan-stats enabled a narrow projection over a wide table
+    * re-estimates as rows × projected width — a small-row
+    * wide-payload dimension broadcasts where raw file bytes alone
+    * would refuse (ManifestJoinPlanningSpec pins both decisions).
+    * With CBO off the stats degrade to the same byte-sum
+    * `sizeInBytes` — plans unchanged.
     */
   def readParquetKnownFiles(
       spark0: org.apache.spark.sql.SparkSession,
       schema: org.apache.spark.sql.types.StructType,
-      files: Seq[(String, Long)]
-  ): DataFrame = readParquetKnownFiles(spark0, schema, files, None)
-
-  /** [[readParquetKnownFiles]] carrying the manifest's ROW COUNT into
-    * the optimizer alongside the byte sum: the scan's
-    * `LogicalRelation` gets `CatalogStatistics(sizeInBytes,
-    * rowCount)`, so with CBO/plan-stats enabled a narrow projection
-    * over a wide table re-estimates as rows × projected width — a
-    * small-row wide-payload dimension broadcasts where raw file
-    * bytes alone would refuse (ManifestJoinPlanningSpec pins both
-    * decisions). With CBO off the stats degrade to the same byte-sum
-    * `sizeInBytes` as before — plans unchanged.
-    */
-  def readParquetKnownFiles(
-      spark0: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      files: Seq[(String, Long)],
-      rowCount: Option[Long]
+      files: Seq[(String, Long, Long)],
+      rowCount: Option[Long] = None,
+      valueCol: Option[String] = None
   ): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.execution.datasources._
+    import org.apache.spark.sql.types.{LongType, StructType}
     val spark = spark0.asInstanceOf[SparkSession]
-    val statuses = files.map { case (p, len) =>
-      new org.apache.hadoop.fs.FileStatus(
+    val statuses = files.map { case (p, len, v) =>
+      v -> new org.apache.hadoop.fs.FileStatus(
         len, false, 1, 128L * 1024 * 1024, 0L,
         new org.apache.hadoop.fs.Path(p))
     }
+    val valueSchema = valueCol.fold(new StructType())(
+      new StructType().add(_, LongType, nullable = false))
+    val dirs = valueCol match {
+      case None =>
+        Seq(PartitionDirectory(InternalRow.empty, statuses.map(_._2).toArray))
+      case Some(_) =>
+        statuses.groupBy(_._1).toSeq.sortBy(_._1).map { case (v, fs) =>
+          PartitionDirectory(InternalRow(v), fs.map(_._2).toArray)
+        }
+    }
     val index = new FileIndex {
       override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
-        statuses.map(_.getPath)
+        statuses.map(_._2.getPath)
       override def listFiles(
-          partitionFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-          dataFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]
+          partitionFilters: Seq[Expression],
+          dataFilters: Seq[Expression]
       ): Seq[PartitionDirectory] =
-        Seq(PartitionDirectory(
-          org.apache.spark.sql.catalyst.InternalRow.empty, statuses.toArray))
+        if (partitionFilters.isEmpty || valueCol.isEmpty) dirs
+        else {
+          // the one partition column sits at ordinal 0 of each value row
+          val keep = Predicate.createInterpreted(
+            partitionFilters.reduce(And).transform {
+              case a: AttributeReference => BoundReference(0, LongType, nullable = false)
+            })
+          dirs.filter(d => keep.eval(d.values))
+        }
       override def inputFiles: Array[String] =
-        statuses.map(_.getPath.toString).toArray
+        statuses.map(_._2.getPath.toString).toArray
       override def refresh(): Unit = ()
-      override def sizeInBytes: Long = statuses.map(_.getLen).sum
-      override def partitionSchema: org.apache.spark.sql.types.StructType =
-        new org.apache.spark.sql.types.StructType()
+      override def sizeInBytes: Long = statuses.map(_._2.getLen).sum
+      override def partitionSchema: StructType = valueSchema
     }
     val relation = HadoopFsRelation(
       location = index,
-      partitionSchema = new org.apache.spark.sql.types.StructType(),
+      partitionSchema = valueSchema,
       dataSchema = schema,
       bucketSpec = None,
       fileFormat =
@@ -142,9 +164,9 @@ object GraftSqlShims {
             org.apache.spark.sql.catalyst.catalog.CatalogTableType.EXTERNAL,
           storage =
             org.apache.spark.sql.catalyst.catalog.CatalogStorageFormat.empty,
-          schema = schema,
+          schema = relation.schema,
           stats = Some(org.apache.spark.sql.catalyst.catalog.CatalogStatistics(
-            sizeInBytes = BigInt(statuses.map(_.getLen).sum),
+            sizeInBytes = BigInt(statuses.map(_._2.getLen).sum),
             rowCount = Some(BigInt(rc)))))
         LogicalRelation(relation, ct)
       case None => LogicalRelation(relation)

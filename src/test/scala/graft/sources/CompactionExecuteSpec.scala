@@ -253,4 +253,45 @@ class CompactionExecuteSpec extends SparkSpec {
       assert(rows === before, "compaction must keep every row")
     }
   }
+
+  /** A store planted through writeBinned with one DV-deleted doc, and
+    * the assertion every vector-bypassing rewrite must leave true: the
+    * call fails naming the vector, nothing publishes, the doc stays
+    * dead.
+    */
+  private def refusedOverVector(tag: String)(rewrite: String => Unit): Unit =
+    Scratch.withTempDir(tag) { path =>
+      Compaction.writeBinned(plantedDocs, path, "source", "file_id",
+        dynamic = false)
+      val victim = ManifestStore.read(spark, path).orderBy("doc_id")
+        .select("doc_id").head.getLong(0)
+      import spark.implicits._
+      DeletionVectors.delete(spark, path, ManifestStore.MAIN, "doc_id",
+        Seq(victim).toDF("doc_id"))
+      val v = ManifestStore.snapshot(spark, path).version
+      val e = intercept[IllegalArgumentException](rewrite(path))
+      assert(e.getMessage.contains(DeletionVectors.dvTable(ManifestStore.MAIN)),
+        e.getMessage)
+      val snap = ManifestStore.snapshot(spark, path)
+      assert(snap.version === v, "a refused rewrite must publish nothing")
+      assert(DeletionVectors.read(snap).filter(col("doc_id") === victim)
+        .count() === 0L, "the DV-deleted doc stays dead")
+    }
+
+  test("execute over a store with a deletion vector fails naming the " +
+    "vector; the DV-deleted doc stays dead") {
+    refusedOverVector("graft-cx-dv-exec") { path =>
+      Compaction.execute(spark, path, "source", Seq("file_id"), binPlanFor(path))
+    }
+  }
+
+  test("writeBinned over a store with a deletion vector fails naming " +
+    "the vector, in both the dynamic and the whole-table form") {
+    Seq(true, false).foreach { dynamic =>
+      refusedOverVector(s"graft-cx-dv-binned-$dynamic") { path =>
+        Compaction.writeBinned(ManifestStore.read(spark, path), path,
+          "source", "file_id", dynamic)
+      }
+    }
+  }
 }

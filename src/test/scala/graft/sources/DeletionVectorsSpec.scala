@@ -244,24 +244,64 @@ class DeletionVectorsSpec extends SparkSpec {
     val root = Scratch.tempDir("graft-dv-pointslice")
     try {
       ManifestStore.write(docs, root, Seq("source"))
-      val three = docs.orderBy("doc_id").limit(3).collect().map(_.getLong(0))
-      val Array(deadId, revivedId, aliveId) = three
+      val three = docs.orderBy("doc_id").limit(3).collect()
+      val Array(deadId, revivedId, aliveId) = three.map(_.getLong(0))
       import spark.implicits._
-      // pile: delete both, then revive one — latest-wins must see both
-      // records of revivedId even through the id-restricted slice
+      // pile: delete both, delete revivedId again, then revive it with
+      // a new copy committed above its records — the point lookup must
+      // reduce revivedId's two records to the max and still keep the
+      // newer copy
       DeletionVectors.delete(spark, root, ManifestStore.MAIN, "doc_id",
         Seq(deadId, revivedId).toDF("doc_id"))
-      val seq2 = ManifestStore.snapshot(spark, root).version + 1
-      ManifestStore.commit(spark, root, Seq(
-        DeletionVectors.stageRecords(
-          DeletionVectors.localRecords(
-            spark, "doc_id", seq2, Seq.empty, Seq(revivedId)),
-          root, ManifestStore.MAIN, "doc_id")))
+      DeletionVectors.delete(spark, root, ManifestStore.MAIN, "doc_id",
+        Seq(revivedId).toDF("doc_id"))
+      ManifestStore.append(docs.filter(col("doc_id") === revivedId)
+        .withColumn("n_chars", lit(4242).cast(docs.schema("n_chars").dataType)),
+        root, Seq("source"))
       val snap = ManifestStore.snapshot(spark, root)
-      assert(DeletionVectors.readForIds(snap, ManifestStore.MAIN,
+      val got = DeletionVectors.readForIds(snap, ManifestStore.MAIN,
         "doc_id", Seq(deadId, revivedId, aliveId))
-        .select("doc_id").collect().map(_.getLong(0)).sorted.toSeq
-        === Seq(revivedId, aliveId).sorted)
+        .select("doc_id", "n_chars").collect()
+        .map(r => r.getLong(0) -> r.getAs[Number](1).longValue).sortBy(_._1).toSeq
+      val alive = three.find(_.getLong(0) == aliveId).get
+        .getAs[Number]("n_chars").longValue
+      assert(got === Seq(revivedId -> 4242L, aliveId -> alive).sortBy(_._1))
+    } finally Scratch.deleteRecursively(root)
+  }
+
+  test("a ManifestStore Upsert or Replace of a table with a vector " +
+    "fails naming the vector, and publishes nothing") {
+    val root = Scratch.tempDir("graft-dv-bypass")
+    try {
+      ManifestStore.write(docs, root, Seq("source"))
+      val victim = docs.orderBy("doc_id").limit(1).collect().head
+      import spark.implicits._
+      DeletionVectors.delete(spark, root, ManifestStore.MAIN, "doc_id",
+        Seq(victim.getLong(0)).toDF("doc_id"))
+      val v = ManifestStore.snapshot(spark, root).version
+      val src = victim.getAs[String]("source")
+      // a rewrite of the victim's partition that never read the vector
+      val rewrite = docs.filter(col("source") === src)
+      Seq[() => Long](
+        () => ManifestStore.upsertPartitions(rewrite, root, Seq("source")),
+        () => ManifestStore.write(docs, root, Seq("source"))
+      ).foreach { call =>
+        val e = intercept[IllegalArgumentException](call())
+        assert(e.getMessage.contains(DeletionVectors.dvTable(ManifestStore.MAIN)),
+          e.getMessage)
+        val snap = ManifestStore.snapshot(spark, root)
+        assert(snap.version === v, "a refused rewrite must publish nothing")
+        assert(DeletionVectors.read(snap)
+          .filter(col("doc_id") === victim.getLong(0)).count() === 0L,
+          "the DV-deleted row stays dead")
+      }
+      // materialize applies the vector in the same commit as its
+      // rewrite; the table is then free to be rewritten again
+      DeletionVectors.materialize(spark, root, ManifestStore.MAIN, "doc_id")
+      ManifestStore.upsertPartitions(
+        rewrite.filter(col("doc_id") =!= victim.getLong(0)), root, Seq("source"))
+      assert(ManifestStore.snapshot(spark, root).read()
+        .filter(col("doc_id") === victim.getLong(0)).count() === 0L)
     } finally Scratch.deleteRecursively(root)
   }
 

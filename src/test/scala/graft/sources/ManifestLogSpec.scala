@@ -94,6 +94,36 @@ class ManifestLogSpec extends SparkSpec {
     } finally Scratch.deleteRecursively(root)
   }
 
+  test("every file carries the version that added it, through a " +
+    "checkpoint read and a pure delta replay alike") {
+    val root = Scratch.tempDir("graft-mlog-seq")
+    try {
+      val base = docs.limit(40).localCheckpoint(true)
+      // v1..v10, each version appending its own id range
+      (0 until ManifestStore.CKPT_EVERY + 2).foreach { i =>
+        ManifestStore.append(
+          base.withColumn("doc_id", col("doc_id") + lit(1000000L * i)),
+          root, Seq("source"))
+      }
+      ManifestStore.awaitCheckpoints()
+      assert(logFiles(root, "c").nonEmpty)
+      def seqs(): Map[Long, Set[Long]] = {
+        val snap = ManifestStore.snapshot(spark, root)
+        snap.state(ManifestStore.MAIN).partitions.values.flatMap(_.files)
+          .groupBy(_.stats("doc_id")._1 / 1000000L)
+          .map { case (i, fs) => i -> fs.map(_.seq).toSet }
+      }
+      val want = (0 until ManifestStore.CKPT_EVERY + 2)
+        .map(i => i.toLong -> Set(i + 1L)).toMap
+      ManifestStore.dropCachedStates(root)
+      assert(seqs() === want, "via the checkpoint")
+      logFiles(root, "c").foreach(java.nio.file.Files.delete(_))
+      ManifestStore.dropCachedStates(root)
+      assert(seqs() === want, "via pure delta replay")
+      org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(base)
+    } finally Scratch.deleteRecursively(root)
+  }
+
   test("the resolved-state cache is inode-validated: a recreated root " +
     "at the same path reads its NEW state, and a vacuumed version " +
     "still errors after being cached") {
@@ -188,7 +218,9 @@ class ManifestLogSpec extends SparkSpec {
       entries.take(3).foreach { f =>
         val abs = new org.apache.hadoop.fs.Path(root + "/" + f.path)
           .toUri.getPath
+        // `seq` is the log's own (the adding version), not a footer stat
         val rederived = ManifestStore.footerEntry(abs, f.bytes, f.path)
+          .copy(seq = f.seq)
         assert(rederived === f, s"stats drifted for ${f.path}")
       }
       assert(ManifestStore.driverFooterOpens.get() === before + 3,

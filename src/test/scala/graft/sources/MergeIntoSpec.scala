@@ -12,9 +12,10 @@ import org.apache.spark.sql.graftshim.GraftSqlShims
   * at-least-once schedule) lands on exactly the state
   * [[graft.cdc.Materializer]] computes from the whole log at once —
   * plus the storage-level properties batch materialization cannot
-  * show: deletes are O(k) vector entries, a reinsert clears its
-  * vector entry AND rewrites the stale row's partition, a partition
-  * emptied by moves is dropped, and redeliveries publish nothing.
+  * show: a merge appends new rows and sequence-scoped vector records
+  * and rewrites nothing, a stale copy stays dead under the newer
+  * record, a merge staged from a superseded version publishes
+  * nothing, redeliveries publish nothing, and the job budget holds.
   */
 class MergeIntoSpec extends SparkSpec {
 
@@ -63,14 +64,16 @@ class MergeIntoSpec extends SparkSpec {
     (jobs.asScala.toSeq, widest.get)
   }
 
-  /** The records one commit appended to the vector, as (id, delete). */
-  private def recordsAt(snap: ManifestStore.Snapshot): Seq[(Long, Boolean)] =
+  /** The ids of the records one commit appended to the vector. */
+  private def recordsAt(snap: ManifestStore.Snapshot): Seq[Long] =
     snap.read(DeletionVectors.dvTable(ManifestStore.MAIN))
       .filter(col(DeletionVectors.SEQ_COL) === snap.version)
-      .collect().map(r => (r.getLong(0), r.getBoolean(2))).sorted.toSeq
+      .collect().map(_.getLong(0)).sorted.toSeq
 
-  private def deadIds(snap: ManifestStore.Snapshot): Set[Long] =
-    DeletionVectors.liveIds(snap).collect().map(_.getLong(0)).toSet
+  /** The ids among `ids` that read back live at `snap`. */
+  private def liveAmong(snap: ManifestStore.Snapshot, ids: Seq[Long]): Set[Long] =
+    DeletionVectors.readForIds(snap, ManifestStore.MAIN, "doc_id", ids)
+      .collect().map(_.getLong(0)).toSet
 
   test("merge batches + redeliveries ≡ one-shot materialize; deletes " +
     "are vector entries; reinserts clear them") {
@@ -111,8 +114,8 @@ class MergeIntoSpec extends SparkSpec {
     } finally Scratch.deleteRecursively(root)
   }
 
-  test("a DV-dead row's partition is rewritten on reinsert — the stale " +
-    "physical row cannot resurrect when the vector entry clears") {
+  test("a reinsert of a DV-dead key serves only the new row — the " +
+    "stale copy stays on disk, dead under the newer record") {
     val root = Scratch.tempDir("graft-merge-stale")
     try {
       ManifestStore.write(docs, root, Seq("source"))
@@ -125,11 +128,23 @@ class MergeIntoSpec extends SparkSpec {
       // now MERGE a reinsert of the same key with a NEW payload
       val reins = ev(victim.withColumn("n_chars", lit(424242L)), "I", 9, 1)
       MergeInto.merge(spark, root, reins, "sink-b", 0L)
-      val got = DeletionVectors.read(ManifestStore.snapshot(spark, root))
+      val snap = ManifestStore.snapshot(spark, root)
+      val got = DeletionVectors.read(snap)
         .filter(col("doc_id") === vid).collect()
       assert(got.length === 1, "exactly one live row for the reinserted key")
       assert(got.head.getAs[Long]("n_chars") === 424242L,
         "the stale pre-delete payload must not resurrect")
+      // nothing was rewritten: both physical copies exist, and the
+      // point lookup serves the new one
+      assert(snap.readForIds(ManifestStore.MAIN, "doc_id", Seq(vid))
+        .count() === 2L)
+      assert(DeletionVectors.readForIds(snap, ManifestStore.MAIN, "doc_id",
+        Seq(vid)).collect().map(_.getAs[Long]("n_chars")).toSeq === Seq(424242L))
+      // materialization drops the stale copy and keeps the new one
+      DeletionVectors.materialize(spark, root, ManifestStore.MAIN, "doc_id")
+      assert(ManifestStore.snapshot(spark, root).read()
+        .filter(col("doc_id") === vid).collect()
+        .map(_.getAs[Long]("n_chars")).toSeq === Seq(424242L))
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(victim)
     } finally Scratch.deleteRecursively(root)
   }
@@ -199,24 +214,32 @@ class MergeIntoSpec extends SparkSpec {
       val move = ev(docs.filter(col("source") === src0)
         .withColumn("source", lit("elsewhere")), "U", 1, 1)
       MergeInto.merge(spark, root, move, "sink-c", 0L)
+      val expect = docs.withColumn("source",
+        when(col("source") === src0, lit("elsewhere"))
+          .otherwise(col("source")))
+      // the merge rewrites nothing: the emptied partition's rows are
+      // dead under the move's records, and it serves none of them
+      val merged = ManifestStore.snapshot(spark, root)
+      assert(canon(DeletionVectors.read(merged)) === canon(expect))
+      assert(DeletionVectors.read(merged)
+        .filter(col("source") === src0).count() === 0L)
+      // materialization, which folds the vector into the data, drops it
+      DeletionVectors.materialize(spark, root, ManifestStore.MAIN, "doc_id")
       val snap = ManifestStore.snapshot(spark, root)
       assert(!snap.state(ManifestStore.MAIN).partitions.values
         .exists(_.values == Seq(src0)),
         "the emptied source partition must leave the manifest")
-      val expect = docs.withColumn("source",
-        when(col("source") === src0, lit("elsewhere"))
-          .otherwise(col("source")))
       assert(canon(DeletionVectors.read(snap)) === canon(expect))
     } finally Scratch.deleteRecursively(root)
   }
 
-  test("an applied merge of a 64-partition batch runs at most 9 Spark " +
-    "jobs and no stage wider than one task per core") {
+  test("an applied merge of a 64-partition batch runs at most 6 Spark " +
+    "jobs and no stage wider than one task per core, above ISIN_MAX keys too") {
     val root = Scratch.tempDir("graft-merge-budget")
     try {
       ManifestStore.write(docs, root, Seq("source"))
       val k = col("doc_id")
-      // a vector already exists: the revive screen and the append run
+      // a vector already exists: the merge's records pile on it
       val killed = docs.filter(pmod(k, lit(9)) === 4)
       DeletionVectors.delete(spark, root, ManifestStore.MAIN, "doc_id",
         killed.select(k))
@@ -227,27 +250,33 @@ class MergeIntoSpec extends SparkSpec {
           .withColumn("n_chars", lit(5L)), "I", 1, 3))
         .unionByName(ev(docs.filter(pmod(k, lit(10)) === 3)
           .withColumn("doc_id", k + lit(50000L)), "I", 1, 4))
-      val batch = spread(mixed, 64)
-      assert(batch.rdd.getNumPartitions === 64)
-      val (jobs, widest) = jobBudget {
-        val (_, applied) = MergeInto.merge(spark, root, batch, "budget", 0L)
-        assert(applied)
-      }
+      // more upserted keys than ISIN_MAX, every one held by an older file
+      val wide = ev(docs.filter(pmod(k, lit(3)) =!= 0)
+        .withColumn("n_chars", col("n_chars") + lit(3L)), "U", 2, 1)
+      assert(wide.count() > ManifestStore.ISIN_MAX)
       val cores = spark.sparkContext.defaultParallelism
-      assert(jobs.size <= 9, s"an applied merge ran ${jobs.size} Spark " +
-        jobs.mkString("jobs:\n", "\n", ""))
-      assert(widest <= cores,
-        s"a merge stage ran $widest tasks on $cores cores")
+      Seq(mixed, wide).zipWithIndex.foreach { case (b, id) =>
+        val batch = spread(b, 64)
+        assert(batch.rdd.getNumPartitions === 64)
+        val (jobs, widest) = jobBudget {
+          val (_, applied) = MergeInto.merge(spark, root, batch, "budget", id.toLong)
+          assert(applied)
+        }
+        assert(jobs.size <= 6, s"applied merge $id ran ${jobs.size} Spark " +
+          jobs.mkString("jobs:\n", "\n", ""))
+        assert(widest <= cores,
+          s"a stage of merge $id ran $widest tasks on $cores cores")
+      }
       val expect = Materializer.materialize(
         ev(docs, "I", 0, 0).unionByName(ev(killed, "D", 0, 1))
-          .unionByName(mixed), keyCol = "doc_id")
+          .unionByName(mixed).unionByName(wide), keyCol = "doc_id")
       assert(canon(DeletionVectors.read(ManifestStore.snapshot(spark, root)))
         === canon(expect))
     } finally Scratch.deleteRecursively(root)
   }
 
-  test("the revive screen revives exactly the currently-dead upserted " +
-    "keys, through both readForIds residual shapes") {
+  test("re-inserts of compacted, older, revived and never-deleted keys " +
+    "read back exactly, below and above ISIN_MAX upserted keys") {
     val root = Scratch.tempDir("graft-merge-revive")
     try {
       import spark.implicits._
@@ -274,31 +303,207 @@ class MergeIntoSpec extends SparkSpec {
 
       val four = Seq(compacted, older, revived, never)
       val b1 = ev(rows(four).withColumn("n_chars", lit(99L)), "U", 3, 1)
-      val dead1 = deadIds(ManifestStore.snapshot(spark, root))
-      assert(dead1.intersect(four.toSet) === Set(compacted, older))
+      assert(liveAmong(ManifestStore.snapshot(spark, root), four)
+        === Set(revived, never))
       MergeInto.merge(spark, root, b1, "revive", 1L)
       val s1 = ManifestStore.snapshot(spark, root)
-      assert(recordsAt(s1) === Seq(compacted, older).sorted.map(_ -> false),
-        "one revive record per currently-dead key, none for live keys")
+      assert(recordsAt(s1) === four.sorted,
+        "one record per upserted key an older file holds, whatever its state")
+      assert(liveAmong(s1, four) === four.toSet)
       val log1 = log0.unionByName(b1)
       assert(canon(DeletionVectors.read(s1))
         === canon(Materializer.materialize(log1, keyCol = "doc_id")))
 
-      // more upserted keys than ISIN_MAX: the sidecar probe semi-joins
-      // a broadcast id frame instead of an isin list
+      // more upserted keys than ISIN_MAX, over a vector holding some of
+      // them: the read side's point lookups and scans stay exact
       kill(docs.filter(pmod(k, lit(5)) === 2).collect().map(_.getLong(0)).toSeq: _*)
       val log2 = log1.unionByName(ev(docs.filter(pmod(k, lit(5)) === 2), "D", 4, 0))
       val wide = docs.filter(pmod(k, lit(3)) =!= 0)
       val b2 = ev(wide.withColumn("n_chars", col("n_chars") + lit(3L)), "U", 5, 1)
       val wideIds = wide.collect().map(_.getLong(0)).toSet
       assert(wideIds.size > ManifestStore.ISIN_MAX)
-      val dead2 = deadIds(ManifestStore.snapshot(spark, root)).intersect(wideIds)
+      val dead2 = wideIds -- liveAmong(ManifestStore.snapshot(spark, root),
+        wideIds.toSeq)
       assert(dead2.nonEmpty)
       MergeInto.merge(spark, root, b2, "revive", 2L)
       val s2 = ManifestStore.snapshot(spark, root)
-      assert(recordsAt(s2) === dead2.toSeq.sorted.map(_ -> false))
+      assert(recordsAt(s2) === wideIds.toSeq.sorted)
+      assert(liveAmong(s2, wideIds.toSeq) === wideIds)
       assert(canon(DeletionVectors.read(s2)) === canon(
         Materializer.materialize(log2.unionByName(b2), keyCol = "doc_id")))
     } finally Scratch.deleteRecursively(root)
+  }
+
+  test("a merge staged from a superseded version publishes nothing: " +
+    "an interleaved commit fails it naming both versions") {
+    val root = Scratch.tempDir("graft-merge-stale-base")
+    try {
+      ManifestStore.write(docs, root, Seq("source"))               // v1
+      val k = col("doc_id")
+      val src0 = docs.select(min(col("source"))).head.getString(0)
+      val b = ev(docs.filter(col("source") === src0 && pmod(k, lit(4)) === 0)
+        .withColumn("n_chars", col("n_chars") + lit(9L)), "U", 1, 1)
+      // the other writer's rows land in the partition the merge updates
+      val other = docs.filter(col("source") === src0)
+        .withColumn("doc_id", k + lit(70000L))
+      MergeIntoSpec.Gate.reset()
+      val gate = udf { (id: Long) => MergeIntoSpec.Gate.pass(); id }
+        .asNondeterministic()
+      // one input partition: only one core waits at the gate
+      val gated = spread(b, 1).withColumn("doc_id", gate(k))
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration._
+      implicit val ec: scala.concurrent.ExecutionContext =
+        scala.concurrent.ExecutionContext.global
+      val merging = Future(MergeInto.merge(spark, root, gated, "stale", 0L))
+      assert(MergeIntoSpec.Gate.entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "the merge never reached its first job")
+      // the merge has taken its snapshot (v1); another writer commits v2
+      ManifestStore.append(other, root, Seq("source"))
+      MergeIntoSpec.Gate.release.countDown()
+      val e = intercept[ManifestStore.ConcurrentCommitException] {
+        Await.result(merging, 5.minutes)
+      }
+      assert(e.getMessage.contains("version 1") && e.getMessage.contains("found 2"),
+        e.getMessage)
+      val snap = ManifestStore.snapshot(spark, root)
+      assert(snap.version === 2L, "the stale merge must publish nothing")
+      assert(!snap.batches.contains("stale"))
+      // the redelivery stages from v2 and keeps the other writer's rows
+      val (_, applied) = MergeInto.merge(spark, root, b, "stale", 0L)
+      assert(applied)
+      val expect = Materializer.materialize(ev(docs, "I", 0, 0)
+        .unionByName(ev(other, "I", 0, 1)).unionByName(b), keyCol = "doc_id")
+      assert(canon(DeletionVectors.read(ManifestStore.snapshot(spark, root)))
+        === canon(expect))
+    } finally Scratch.deleteRecursively(root)
+  }
+
+  test("findById and findAll on a merged store with a vector run at " +
+    "most 3 Spark jobs each") {
+    val root = Scratch.tempDir("graft-merge-reads")
+    try {
+      ManifestStore.write(docs, root, Seq("source"))
+      val k = col("doc_id")
+      MergeInto.merge(spark, root, ev(docs.filter(pmod(k, lit(4)) === 1)
+        .withColumn("n_chars", col("n_chars") + lit(1L)), "U", 1, 1)
+        .unionByName(ev(docs.filter(pmod(k, lit(7)) === 2), "D", 1, 2)),
+        "reads", 0L)
+      val snap = ManifestStore.snapshot(spark, root)
+      assert(snap.hasTable(DeletionVectors.dvTable(ManifestStore.MAIN)))
+      val ids = docs.orderBy("doc_id").limit(4).collect().map(_.getLong(0)).toSeq
+      val expect = Materializer.materialize(ev(docs, "I", 0, 0)
+        .unionByName(ev(docs.filter(pmod(k, lit(4)) === 1)
+          .withColumn("n_chars", col("n_chars") + lit(1L)), "U", 1, 1))
+        .unionByName(ev(docs.filter(pmod(k, lit(7)) === 2), "D", 1, 2)),
+        keyCol = "doc_id")
+      var point: Seq[Seq[Any]] = Seq.empty
+      var all: Seq[Seq[Any]] = Seq.empty
+      val (pointJobs, _) = jobBudget {
+        point = canon(DeletionVectors.readForIds(snap, ManifestStore.MAIN,
+          "doc_id", ids))
+      }
+      val (allJobs, _) = jobBudget { all = canon(DeletionVectors.read(snap)) }
+      assert(pointJobs.size <= 3, pointJobs.mkString("findById jobs:\n", "\n", ""))
+      assert(allJobs.size <= 3, allJobs.mkString("findAll jobs:\n", "\n", ""))
+      assert(point === canon(expect.filter(k.isin(ids: _*))))
+      assert(all === canon(expect))
+    } finally Scratch.deleteRecursively(root)
+  }
+
+  test("seeded random I/U/D histories with compactDv and materialize " +
+    "interleaved: every version reads ≡ Materializer, every hop's " +
+    "logicalFeed ≡ the diff of consecutive Materializer states") {
+    import spark.implicits._
+    val nType = docs.schema("n_chars").dataType
+    Seq(11L, 29L).foreach { seed =>
+      val root = Scratch.tempDir(s"graft-merge-prop$seed")
+      try {
+        val rng = new scala.util.Random(seed)
+        val base = docs.orderBy("doc_id").limit(60).localCheckpoint(true)
+        ManifestStore.write(base, root, Seq("source"))             // v1
+        val baseIds = base.collect().map(_.getLong(0)).toSeq
+        val sources = base.select("source").distinct().collect()
+          .map(_.getString(0)).toSeq :+ "moved"
+        val fresh = baseIds.max + 1
+        // a small key pool: same-key events inside a batch, deletes
+        // followed by re-inserts, fresh keys above every file's max
+        val pool = baseIds.take(24) ++ (fresh until fresh + 8)
+        var log = ev(base, "I", 0, 0)
+        val logs = scala.collection.mutable.Map(1L -> log)
+        var batch = 0L
+        // five merges, one compactDv and one materialize, in a seeded
+        // order after a first merge
+        val steps = "merge" +: rng.shuffle(Seq.fill(4)("merge") ++
+          Seq("compact", "materialize"))
+        steps.foreach { step =>
+          val hasDv = ManifestStore.snapshot(spark, root)
+            .hasTable(DeletionVectors.dvTable(ManifestStore.MAIN))
+          step match {
+            case "compact" if hasDv =>
+              DeletionVectors.compactDv(spark, root)
+            case "materialize" if hasDv =>
+              DeletionVectors.materialize(spark, root, ManifestStore.MAIN, "doc_id")
+            case _ =>
+              val evs = (1 to 12).map { i =>
+                val op = Seq("I", "U", "D")(rng.nextInt(3))
+                (pool(rng.nextInt(pool.length)), sources(rng.nextInt(sources.length)),
+                  rng.nextInt(1000).toLong, op, batch + 1, i.toLong)
+              }
+              val b = evs.toDF("doc_id", "source", "n_chars", "op", "ts", "seq")
+                .withColumn("n_chars", col("n_chars").cast(nType))
+                .localCheckpoint(true)
+              MergeInto.merge(spark, root, b, "prop", batch)
+              log = log.unionByName(b)
+              batch += 1
+          }
+          logs(ManifestStore.snapshot(spark, root).version) = log
+        }
+        val versions = logs.keys.toSeq.sorted
+        assert(versions === (1L to versions.max), "one version per step")
+        def state(v: Long): Map[Long, Any] =
+          Materializer.materialize(logs(v), keyCol = "doc_id")
+            .select("doc_id", "n_chars").collect()
+            .map(r => r.getLong(0) -> r.get(1)).toMap
+        def snap(v: Long) = ManifestStore.snapshotAt(spark, root, v)
+        versions.foreach { v =>
+          assert(canon(DeletionVectors.read(snap(v)))
+            === canon(Materializer.materialize(logs(v), keyCol = "doc_id")),
+            s"seed $seed: read at v$v")
+        }
+        versions.sliding(2).foreach { case Seq(a, b) =>
+          val (sa, sb) = (state(a), state(b))
+          val diff = (sa.keySet ++ sb.keySet).toSeq.flatMap { id =>
+            (sa.get(id), sb.get(id)) match {
+              case (None, Some(n))                => Some((id, n, null, "insert"))
+              case (Some(o), None)                => Some((id, null, o, "delete"))
+              case (Some(o), Some(n)) if o != n   => Some((id, n, o, "update"))
+              case _                              => None
+            }
+          }.map(_.productIterator.toSeq).sortBy(_.mkString("|"))
+          assert(canon(DeletionVectors.logicalFeed(spark, root, snap(a), snap(b)))
+            === diff, s"seed $seed: feed v$a -> v$b")
+        }
+      } finally Scratch.deleteRecursively(root)
+    }
+  }
+}
+
+object MergeIntoSpec {
+
+  /** A latch pair a UDF inside a merge's first job waits on, so a test
+    * can commit between the merge's snapshot and its publish.
+    */
+  object Gate {
+    @volatile var entered = new java.util.concurrent.CountDownLatch(1)
+    @volatile var release = new java.util.concurrent.CountDownLatch(1)
+    def reset(): Unit = {
+      entered = new java.util.concurrent.CountDownLatch(1)
+      release = new java.util.concurrent.CountDownLatch(1)
+    }
+    def pass(): Unit = {
+      entered.countDown()
+      release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+    }
   }
 }

@@ -6,10 +6,13 @@
 
 For every `merge` span it prints the wall time, the number of Spark jobs
 launched under it, the widest stage's task count, the driver gap (wall
-time not covered by any running job) and, per job, its stages' task
-counts and its duration.
+time not covered by any running job), the bytes its tasks wrote and, per
+job, its stages' task counts and its duration. The last line is one
+summary over all merges: the median jobs, wall time, driver gap and
+staged bytes per merge.
 """
 import json
+import statistics
 import sys
 
 
@@ -40,16 +43,23 @@ def main(path):
         return False
 
     merges = sorted((s for s in trace["spans"] if s["name"] == "merge"), key=lambda s: s["start"])
+    rows = []
     for n, m in enumerate(merges):
         jobs = sorted((j for j in trace["jobs"] if under(j["span"], m["id"])), key=lambda j: j["start"])
         wall = (m["end"] - m["start"]) / 1e9
         gap = wall - covered_ns([(j["start"], j["end"]) for j in jobs]) / 1e9
         tasks = [[stages[s]["tasks"] for s in j["stages"] if s in stages] for j in jobs]
         widest = max((t for ts in tasks for t in ts), default=0)
+        staged = sum(stages[s].get("output", 0) for j in jobs for s in j["stages"] if s in stages)
+        rows.append((len(jobs), wall, gap, staged))
         print(f"merge {n}: {wall:.3f} s, {len(jobs)} jobs, widest stage {widest} tasks, "
-              f"driver gap {gap:.3f} s")
+              f"driver gap {gap:.3f} s, staged {staged} bytes")
         for j, ts in zip(jobs, tasks):
             print(f"  job {j['job']:4d}  stages {ts}  {(j['end'] - j['start']) / 1e9:.3f} s")
+    if rows:
+        med = [statistics.median(c) for c in zip(*rows)]
+        print(f"summary: {len(rows)} merges, median {med[0]:g} jobs, {med[1]:.3f} s wall, "
+              f"{med[2]:.3f} s driver gap, {med[3]:.0f} bytes staged per merge")
 
 
 if __name__ == "__main__":
