@@ -56,7 +56,9 @@ object GraftSession {
 
   /** A `local[cores]` session with [[engineConfs]], the
     * [[GraftExtensions]] (as-of planner strategy, `EditDistancePrefilter`,
-    * every [[plans.FunctionCatalog]] function) and the sketch UDAFs. */
+    * every [[plans.FunctionCatalog]] function), the sketch UDAFs and one
+    * [[streaming.HealthListener]] (read through
+    * [[info.EngineInfo.streamingHealth]]). */
   def local(cores: Int = 32): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
@@ -67,6 +69,7 @@ object GraftSession {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     registerSketchUdafs(spark)
+    streaming.HealthListener.install(spark)
     spark
   }
 

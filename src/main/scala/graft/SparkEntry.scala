@@ -6,6 +6,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 trait QueryFamily {
   def queries: Map[String, (SparkSession, String) => DataFrame]
   def oracle: Map[String, String]
+
+  /** The family's `name -> query` (or `name -> oracle`) pairs as a map.
+    * A name given twice fails the family's construction instead of the
+    * later pair silently replacing the earlier one.
+    */
+  protected def named[V](pairs: (String, V)*): Map[String, V] = {
+    QueryFamily.requireDistinct(pairs.map(_._1),
+      s"name(s) in ${getClass.getSimpleName.stripSuffix("$")}")
+    pairs.toMap
+  }
+}
+
+object QueryFamily {
+  private[graft] def requireDistinct(names: Seq[String], what: String): Unit = {
+    val dups = names.groupBy(identity).collect {
+      case (name, uses) if uses.size > 1 => name
+    }
+    require(dups.isEmpty, s"duplicate $what: ${dups.toSeq.sorted.mkString(", ")}")
+  }
 }
 
 /** The union of `families`, built once. A name declared by two families
@@ -14,10 +33,7 @@ trait QueryFamily {
 final class QueryRegistry(families: Seq[QueryFamily]) {
 
   private def union[V](maps: Seq[Map[String, V]], what: String): Map[String, V] = {
-    val dups = maps.flatMap(_.keys).groupBy(identity).collect {
-      case (name, uses) if uses.size > 1 => name
-    }
-    require(dups.isEmpty, s"duplicate $what name(s): ${dups.toSeq.sorted.mkString(", ")}")
+    QueryFamily.requireDistinct(maps.flatMap(_.keys), s"$what name(s)")
     maps.foldLeft(Map.empty[String, V])(_ ++ _)
   }
 

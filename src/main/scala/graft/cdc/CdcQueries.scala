@@ -423,7 +423,7 @@ object CdcQueries extends graft.QueryFamily {
       .orderBy("id")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "cdc17_hash_chain" -> hashChain,
     "cdc14_envelope" -> envelopeDecode,
     "cdc11_compaction" -> compaction,
@@ -460,7 +460,7 @@ object CdcQueries extends graft.QueryFamily {
       |  event_id AS seq
       |FROM events""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // the same fold from first principles: structs sort by (ts, seq)
     // in both engines, renders drop ts/value (format-unstable), the
     // chain folds left with the first render as the seed

@@ -72,17 +72,6 @@ object TextFunctions {
   def tokenCharCount(text: Column): Column =
     tokenCharCountOf(tokens(text))
 
-  /** Mean token length as double (exact int sum / count). */
-  def avgTokenLen(text: Column): Column =
-    tokenCharCount(text).cast("double") / tokenCount(text)
-
-  /** Type-token ratio: unique / total tokens. */
-  def typeTokenRatio(text: Column): Column =
-    uniqueTokenCount(text).cast("double") / tokenCount(text)
-
-  def stopwordCount(text: Column, words: Seq[String]): Column =
-    stopwordCountOf(tokens(text), words)
-
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[.,!?;:]", ""))
 
@@ -146,16 +135,6 @@ object TextFunctions {
     val diversity = nUniq.cast("double") / nTokD
     lit(0.4) * lengthTerm + lit(0.3) * least(lit(1.0), stopRatio * 5.0) +
       lit(0.3) * diversity
-  }
-
-  /** Composite quality score from raw text (convenience form). */
-  def qualityScore(text: Column): Column = {
-    val toks = tokens(text)
-    qualityScoreFromCounts(
-      tokenCountOf(toks),
-      stopwordCountOf(toks, stopwords("en")),
-      uniqueTokenCountOf(toks)
-    )
   }
 
   /** Whitespace-normalized lowercase form (dedup canonicalization). */

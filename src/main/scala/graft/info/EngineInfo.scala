@@ -1,6 +1,7 @@
 package graft.info
 
 import graft.Tables
+import graft.streaming.HealthListener
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,6 +36,29 @@ object EngineInfo {
     * query (`connection.isValid` analogue). */
   def healthy(spark: SparkSession): Boolean =
     Try(spark.range(1).count()).isSuccess
+
+  /** Streaming readiness and liveness — the `/health` analogue beside
+    * [[healthy]], read from the session's [[HealthListener]] (the
+    * reference's startup and liveness probes, SURVEY.md §2.9).
+    */
+  final case class StreamingHealth(
+      ready: Boolean,
+      live: Boolean,
+      batches: Long,
+      rows: Long,
+      lastError: Option[String]
+  )
+
+  /** Live means progress within the reference's probe budget:
+    * `period_seconds=10` × `failure_threshold=10`
+    * (terraform/cloud_run.tf:64-73). A running query that sees no data
+    * still reports progress every 10 s. */
+  private val LIVE_WINDOW_MS = 100L * 1000
+
+  def streamingHealth(spark: SparkSession): StreamingHealth = {
+    val l = HealthListener.install(spark)
+    StreamingHealth(l.isReady, l.isLive(LIVE_WINDOW_MS), l.totalBatches, l.totalRows, l.error)
+  }
 
   /** `/db-info/test` analogue: per-table count + first row, wrapped in
     * Try, reported as status SUCCESS/FAILED with the error message.

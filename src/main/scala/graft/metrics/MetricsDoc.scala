@@ -3,10 +3,9 @@ package graft.metrics
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** The reference's derived-metrics formatters (SURVEY.md §2.8 F1-F6,
-  * F9: reference MetricsController.java:34-87 /
-  * MetricsResource.java:32-62) as reusable column expressions, plus
-  * the nested-JSON document constructor.
+/** The reference's derived-metrics formatters (SURVEY.md §2.8 F2-F4,
+  * F6: reference MetricsController.java:34-87 /
+  * MetricsResource.java:32-62) as reusable column expressions.
   */
 object MetricsDoc {
 
@@ -25,34 +24,7 @@ object MetricsDoc {
       lit("%")
     )
 
-  /** F5: ISO-8601 UTC instant string. */
-  def isoNow(): Column =
-    date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'")
-
   /** F6/P5: native-image flag → human label. */
   def imageType(isNative: Column): Column =
     when(isNative, lit("Native (GraalVM)")).otherwise(lit("JVM"))
-
-  /** F9: the nested metrics JSON document (memory + jvm sub-objects),
-    * mirroring the reference's LinkedHashMap → Jackson shape.
-    */
-  def metricsJson(
-      startupMs: Column,
-      usedBytes: Column,
-      maxBytes: Column,
-      isNative: Column
-  ): Column =
-    to_json(
-      struct(
-        msToSeconds(startupMs).as("startupTimeSeconds"),
-        struct(
-          bytesToMb(usedBytes).as("usedMB"),
-          bytesToMb(maxBytes).as("maxMB"),
-          usagePercent(usedBytes, maxBytes).as("usagePercent")
-        ).as("memory"),
-        struct(
-          imageType(isNative).as("imageType")
-        ).as("jvm")
-      )
-    )
 }

@@ -73,13 +73,13 @@ object BenchAggs extends graft.QueryFamily {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "bench01_skip_first_mean" -> skipFirstMean,
     "bench02_all_or_nothing" -> allOrNothingMean,
     "bench03_group_compare" -> groupCompare
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "bench01_skip_first_mean" ->
       s"""SELECT user_id, ${sqlDmean("value")} AS warm_mean, COUNT(*) AS n_warm
          |FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id

@@ -875,7 +875,7 @@ object DedupQueries extends graft.QueryFamily {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "dedup20_kcore" -> kcore,
     "dedup19_clustering_coeff" -> clusteringCoeff,
     "dedup18_leakage" -> leakage,
@@ -984,7 +984,7 @@ object DedupQueries extends graft.QueryFamily {
        |JOIN shh b ON b.doc_id = p.id_b
        |ORDER BY id_a, id_b""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // composes the member-query mirrors: clustering CTEs → survivor
     // argmax → contamination flags → per-source quota window → global
     // pack prefix (all windowed sums pinned to BIGINT — the HUGEINT

@@ -462,7 +462,7 @@ object DedupQueries2 extends graft.QueryFamily {
     """)
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "dedup26_khop_recursive" -> khopNeighborhood,
     "dedup21_substring_spans" -> substringSpans,
     "dedup29_span_scrub" -> spanScrub,
@@ -475,7 +475,7 @@ object DedupQueries2 extends graft.QueryFamily {
   private val normSql = TextQueriesSqlFragments.normSql
   private val minhashVerifiedOracle = DedupQueries.minhashVerifiedOracle
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "dedup26_khop_recursive" ->
       s"""WITH RECURSIVE mh AS MATERIALIZED ($minhashVerifiedOracle),
          |e AS (SELECT id_a, id_b FROM mh WHERE jac >= 0.5

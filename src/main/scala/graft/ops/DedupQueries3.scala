@@ -477,7 +477,7 @@ object DedupQueries3 extends graft.QueryFamily {
       .orderBy("source")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "dedup30_winnowing" -> winnowing,
     "dedup31_semantic_decontaminate" -> semanticDecontaminate,
     "dedup32_cluster_split" -> clusterSplit,
@@ -498,7 +498,7 @@ object DedupQueries3 extends graft.QueryFamily {
        |  ELSE (${dotSql(a, b)}) / (sqrt(${dotSql(a, a)}) * sqrt(${dotSql(b, b)}))
        |  END)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "dedup35_weighted_profile" ->
       s"""${DedupQueries.clusterCtes},
          |cl AS (SELECT id, MIN(lbl) AS cluster_id FROM reach GROUP BY id),

@@ -750,7 +750,7 @@ object DedupQueries4 extends graft.QueryFamily {
     leakReport(split, edges)
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "dedup42_cluster_split" -> clusterSplit,
     "dedup41_split_leakage" -> splitLeakage,
     "dedup36_semantic_decon_sketch" -> semanticDeconSketch,
@@ -787,7 +787,7 @@ object DedupQueries4 extends graft.QueryFamily {
       .mkString(" + ")
     val pwSql =
       s"(CAST(1 AS BIGINT) << GREATEST(length(bin(v)) - 1 - ${Relational10.HDR_S}, 0))"
-    Map(
+    named(
       // same planted corpus, same boundary rule (portable h32 of the
       // lag-2..0 gram mod CDC_D), same prefix-sum chunk ids; word
       // indexing via DuckDB's lambda-with-index (no WITH ORDINALITY)

@@ -1395,7 +1395,7 @@ object MediaQueries extends graft.QueryFamily {
       .orderBy("cluster_id")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "mm08_shot_bounds" -> shotBounds,
     "mm09_aspect_buckets" -> aspectBuckets,
     "mm10_raster_decode" -> rasterDecode,
@@ -1457,7 +1457,7 @@ object MediaQueries extends graft.QueryFamily {
        |  FROM planted)""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // the container mirrored from first principles on the mm10/mm12
     // pattern: same GVID hex construction, same one-transcode decode,
     // same truncation arm, same NULL-on-damage stats

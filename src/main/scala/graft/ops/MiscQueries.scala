@@ -834,7 +834,7 @@ object MiscQueries extends graft.QueryFamily {
       }
       .mkString("", "\nUNION ALL\n", "\nORDER BY edge")
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "pipe05_integrity" -> integrityAudit,
     "q61_range_frame" -> rangeFrame,
     "q60_sql_lateral" -> sqlLateral,
@@ -858,7 +858,7 @@ object MiscQueries extends graft.QueryFamily {
     "q54_hash_split" -> hashSplit
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "pipe05_integrity" -> integrityOracleSql,
     "q61_range_frame" ->
       """SELECT user_id, epoch_us(ts) AS ts_us, event_id,

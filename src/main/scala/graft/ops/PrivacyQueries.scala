@@ -101,12 +101,12 @@ object PrivacyQueries extends graft.QueryFamily {
       .orderBy("c_custkey")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q91_kanonymity" -> kAnonymity,
     "q92_generalize" -> generalize
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "q91_kanonymity" ->
       s"""SELECT c_nationkey, c_mktsegment,
          |  CAST(COUNT(*) AS BIGINT) AS n,

@@ -277,7 +277,7 @@ object Relational extends graft.QueryFamily {
       .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("sum_price"))
       .orderBy("size_class")
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q01_pricing_summary" -> pricingSummary,
     "q02_point_lookup" -> pointLookup,
     "q03_selective_scan" -> selectiveScan,
@@ -300,7 +300,7 @@ object Relational extends graft.QueryFamily {
     "q20_case_classify" -> caseClassify
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "q01_pricing_summary" ->
       s"""SELECT l_returnflag, l_linestatus,
          |  ${sqlDsum("l_quantity")} AS sum_qty,

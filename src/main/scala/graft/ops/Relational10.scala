@@ -404,8 +404,8 @@ object Relational10 extends graft.QueryFamily {
     }
   }
 
-  /** q111: the file-format round-trip EXECUTED — FileFormatsSpec's
-    * interchange contract as a gated row: the same corpus projection
+  /** q111: the file-format round-trip EXECUTED — the interchange
+    * contract as a gated row: the same corpus projection
     * is physically written to and read back from parquet, ORC, JSON,
     * and CSV inside a scratch dir, and each format's readback must
     * reproduce the identical per-format row (count, byte mass, id
@@ -728,7 +728,7 @@ object Relational10 extends graft.QueryFamily {
       .orderBy("bucket_id")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q90_equi_depth" -> equiDepth,
     "q89_variant_json" -> variantJson,
     "q85_hdr_quantiles" -> hdrQuantiles,
@@ -742,7 +742,7 @@ object Relational10 extends graft.QueryFamily {
     "q88_grouped_quantiles" -> hdrGrouped
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "q90_equi_depth" ->
       s"""WITH v AS (SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v
          |  FROM lineitem),

@@ -934,7 +934,7 @@ object Relational11 extends graft.QueryFamily {
     out
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q107_url_quota" -> urlQuota,
     "q108_url_admission_form" -> urlQuotaAdmission,
     "q106_winsorize_sketch" -> winsorizeSketch,
@@ -1044,7 +1044,7 @@ object Relational11 extends graft.QueryFamily {
        |    END AS domain
        |  FROM mt)""".stripMargin
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "q95_join_key_profile" ->
       """WITH k AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS cnt
         |           FROM events GROUP BY user_id)

@@ -138,7 +138,7 @@ object Relational2 extends graft.QueryFamily {
       )
       .orderBy("event_type")
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q27_salted_agg" -> saltedAgg,
     "q21_user_duration" -> userDuration,
     "q22_regex_validate" -> regexValidate,
@@ -148,7 +148,7 @@ object Relational2 extends graft.QueryFamily {
     "q26_asof_signup" -> asofSignup
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "q27_salted_agg" ->
       s"""SELECT event_type, ${sqlDsum("value")} AS sum_value, COUNT(*) AS n
          |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,

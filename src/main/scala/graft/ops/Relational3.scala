@@ -117,14 +117,14 @@ object Relational3 extends graft.QueryFamily {
       .orderBy("media_id", "frame_idx")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q28_left_outer" -> leftOuterOrders,
     "q29_full_outer" -> fullOuterSpend,
     "q30_time_range_join" -> timeRangeJoin,
     "mm02_frames" -> mediaFrames
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "q28_left_outer" ->
       s"""WITH o AS (SELECT o_custkey, COUNT(*) AS n_ord,
          |             ${sqlDsum("o_totalprice")} AS spend

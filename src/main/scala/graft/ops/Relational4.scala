@@ -105,14 +105,14 @@ object Relational4 extends graft.QueryFamily {
       .orderBy("l_returnflag")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q31_cube" -> cubeAgg,
     "q32_string_agg" -> stringAgg,
     "q33_percentiles" -> percentiles,
     "q34_moment_stats" -> momentStats
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "q31_cube" ->
       s"""SELECT COALESCE(o_orderstatus, 'ALL') AS o_orderstatus,
          |  COALESCE(o_orderpriority, 'ALL') AS o_orderpriority,

@@ -133,7 +133,7 @@ object Relational5 extends graft.QueryFamily {
       .orderBy("o_orderstatus")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q35_grouping_sets" -> groupingSets,
     "q36_lag_lead" -> lagLead,
     "q37_ntile" -> ntileBuckets,
@@ -142,7 +142,7 @@ object Relational5 extends graft.QueryFamily {
     "q40_filter_agg" -> filterAgg
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "q35_grouping_sets" ->
       s"""SELECT COALESCE(o_orderstatus, 'ALL') AS o_orderstatus,
          |  COALESCE(o_orderpriority, 'ALL') AS o_orderpriority,

@@ -324,7 +324,7 @@ object Relational6 extends graft.QueryFamily {
       .orderBy("event_id")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q52_asof_tolerance" -> asofTolerance,
     "q50_asof_forward" -> asofForward,
     "q81_asof_nearest" -> asofNearest,
@@ -340,7 +340,7 @@ object Relational6 extends graft.QueryFamily {
     "q46_date_arith" -> dateArith
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // inner as-of within tolerance: max signup in [p-30min, p] per
     // purchase; no-candidate purchases drop out of the inner join
     "q52_asof_tolerance" ->

@@ -404,7 +404,7 @@ object Relational7 extends graft.QueryFamily {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q71_mad_outliers" -> madOutliers,
     "q70_zorder_key" -> zorderKeyQ,
     "q69_hash_median" -> hashMedian,
@@ -417,7 +417,7 @@ object Relational7 extends graft.QueryFamily {
     "q65_retention" -> retention
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "q71_mad_outliers" ->
       s"""WITH ev AS (SELECT event_type, event_id, value FROM events),
          |m AS (SELECT event_type, value AS med FROM

@@ -172,7 +172,7 @@ object Relational8 extends graft.QueryFamily {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q72_rank_dist" -> rankDist,
     "q73_interval_lookup" -> intervalLookup,
     "q74_median_cont" -> medianCont,
@@ -183,7 +183,7 @@ object Relational8 extends graft.QueryFamily {
     .map { case (b, lo, hi) => s"('$b', $lo, $hi)" }
     .mkString(", ")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "q72_rank_dist" ->
       """SELECT c_custkey, c_nationkey, c_acctbal,
         |  dense_rank() OVER w AS drank,

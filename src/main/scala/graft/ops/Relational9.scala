@@ -248,7 +248,7 @@ object Relational9 extends graft.QueryFamily {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q76_salted_join" -> saltedJoin,
     "q77_sessionize" -> sessionize,
     "q78_rolling_active" -> rollingActive,
@@ -442,7 +442,7 @@ object Relational9 extends graft.QueryFamily {
       .orderBy("user_id", "session_idx", "purchase_id")
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // the oracle finds each grid point's anchors by plain min/max
     // inequality joins — the single-pass window formulation must land
     // on the same anchors and the same IEEE arithmetic

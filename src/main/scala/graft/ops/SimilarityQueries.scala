@@ -882,7 +882,7 @@ object SimilarityQueries extends graft.QueryFamily {
       .orderBy("nprobe")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "sim25_nprobe_curve" -> nprobeCurve,
     "sim18_kmeans" -> kmeansStep,
     "sim17_hardneg" -> hardNegatives,
@@ -988,7 +988,7 @@ object SimilarityQueries extends graft.QueryFamily {
        |SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cos_sim
        |FROM ranked WHERE rank <= $TOPK ORDER BY query_id, rank""".stripMargin
 
-  private val baseOracle: Map[String, String] = Map(
+  private val baseOracle: Map[String, String] = named(
     // one scored pass, probe ranks and exact ranks as integers, the
     // budget grid as a VALUES join, rank-within-budget per (query, p)
     "sim25_nprobe_curve" -> {

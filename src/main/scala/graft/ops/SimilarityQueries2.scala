@@ -601,7 +601,7 @@ object SimilarityQueries2 extends graft.QueryFamily {
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(cents)
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "sim23_kmeans_iters" -> kmeansIters,
     "sim19_pq_adc" -> pqAdc,
     "sim20_ivf_pq" -> ivfPq,
@@ -612,7 +612,7 @@ object SimilarityQueries2 extends graft.QueryFamily {
 
   private val qIdsSql = QUERY_IDS.mkString("(", ", ", ")")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // the from-scratch relational spec of the SERVED store: integer
     // quantization, stride codebook, nearest-cell assignment (a),
     // per-query probe routing with the (distance, cell) tie-break

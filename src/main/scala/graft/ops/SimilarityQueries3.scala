@@ -432,7 +432,7 @@ object SimilarityQueries3 extends graft.QueryFamily {
       .orderBy("query_id")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "sim24_binary_topk" -> binaryTopK,
     "sim27_ivf_retrain" -> ivfRetrain,
     "sim28_drift_recovery" -> driftRecovery,
@@ -499,7 +499,7 @@ object SimilarityQueries3 extends graft.QueryFamily {
        |  WHERE p.cell NOT IN (SELECT cell FROM m$i))""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // both filtering strategies replayed from first principles: the
     // same scored pair table, predicate-before-rank vs
     // rank-then-predicate-then-truncate, hits = intersection counts

@@ -728,7 +728,7 @@ object StorageQueries extends graft.QueryFamily {
     }
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q113_time_travel" -> timeTravel,
     "q119_version_tags" -> versionTags,
     "q116_string_skipping" -> stringSkipping,
@@ -745,7 +745,7 @@ object StorageQueries extends graft.QueryFamily {
 
   private def h = graft.functions.PortableHash.sqlH32("CAST(doc_id AS VARCHAR)")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // per-group (min,max) over the string order ≡ the footer stats
     // the manifest carries; probe bounds are the n/4- and n/2-ranked
     // distinct sources; kept census by range intersection

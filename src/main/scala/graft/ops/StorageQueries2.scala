@@ -237,7 +237,7 @@ object StorageQueries2 extends graft.QueryFamily {
     * lose the moment [[graft.sources.Compaction]] produces large
     * multi-row-group files. The corpus (40 shifted copies — 20k
     * docs with their text payloads) compacts into ONE id-sorted file
-    * written with a small parquet block size; the commit's footer
+    * written with a fixed row count per row group; the commit's footer
     * pass records each ROW GROUP's (rows, doc_id bounds) into the
     * manifest ([[graft.sources.ManifestStore.RowGroupStat]] — only
     * for multi-group files, single-group files pay nothing). A
@@ -270,14 +270,14 @@ object StorageQueries2 extends graft.QueryFamily {
       // side runs parallel, only the final sort + single-file write is
       // one task (the fixture needs ONE id-clustered multi-group
       // file; the r11 coalesce(1) pulled the whole pipeline into that
-      // one task). Block size 512 KiB keeps the file firmly
-      // multi-group (~100 groups) without the 64 KiB setting's ~800
-      // writer flushes.
+      // one task). 2,000 rows per row group keeps the file
+      // multi-group whatever its payloads weigh (10 groups at 500
+      // documents, 100 at 5,000); a byte-sized block did not.
       ManifestStore.commit(s, path, Seq(ManifestStore.stage(
         wide.repartition(1).sortWithinPartitions("doc_id"),
         path, ManifestStore.MAIN, Seq.empty, ManifestStore.Replace,
         writerOptions = Map(
-          "parquet.block.size" -> (512 * 1024).toString,
+          "parquet.block.row.count.limit" -> "2000",
           "parquet.page.size" -> (64 * 1024).toString))))
       val snap = ManifestStore.snapshot(s, path)
       val bounds = Seq(Bound.LongRange("doc_id", 5000L, 7499L))
@@ -346,7 +346,7 @@ object StorageQueries2 extends graft.QueryFamily {
     }
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q120_spec_evolution" -> specEvolution,
     "cdc22_merge_into" -> mergeInto,
     "stream26_manifest_tail" -> manifestTail,
@@ -356,7 +356,7 @@ object StorageQueries2 extends graft.QueryFamily {
 
   private def h = graft.functions.PortableHash.sqlH32("CAST(doc_id AS VARCHAR)")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // censuses from distinct counts (1 file per partition value — the
     // stage contract), aggregates from parity arithmetic: the source
     // probe keeps 1 source file + every lang file (other-spec files

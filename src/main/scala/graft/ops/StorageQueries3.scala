@@ -245,7 +245,7 @@ object StorageQueries3 extends graft.QueryFamily {
     }
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "stream27_manifest_source" -> manifestSource,
     "q123_multicol_spec" -> multiColSpec,
     "cdc23_dv_compact" -> dvCompact
@@ -253,7 +253,7 @@ object StorageQueries3 extends graft.QueryFamily {
 
   private def h = graft.functions.PortableHash.sqlH32("CAST(doc_id AS VARCHAR)")
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // the stream26 history drained through the streaming source: the
     // final per-source state once, emitted three ways
     "stream27_manifest_source" ->

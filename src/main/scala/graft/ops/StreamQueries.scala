@@ -653,7 +653,7 @@ object StreamQueries extends graft.QueryFamily {
   private val lateQuarantine: Q = (s, dir) =>
     graft.streaming.StreamLateQuarantine.quarantined(Tables(s, dir).events)
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "stream12_late_quarantine" -> lateQuarantine,
     "cdc12_neardup_maintain" -> neardupMaintain,
     "cdc13_join_maintain" -> joinMaintain,
@@ -710,7 +710,7 @@ object StreamQueries extends graft.QueryFamily {
     * start = floor(epoch/slide)*slide (minus k·slide for the sliding
     * hops); make_timestamp keeps the naive-UTC type.
     */
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // the one-pass sketch read the sliced additive merge must equal
     "stream16_hdr_ingest" -> {
       val S = Relational10.HDR_S

@@ -889,7 +889,7 @@ object TextQueries extends graft.QueryFamily {
       .orderBy("slice")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "text21_divergence" -> divergence,
     "text20_bm25" -> bm25,
     "text19_lm_score" -> lmScore,
@@ -927,7 +927,7 @@ object TextQueries extends graft.QueryFamily {
        | ELSE 'unknown' END""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // CASTs: DuckDB windowed SUM(BIGINT) is HUGEINT (pandas float64) —
     // pin every derived integer to BIGINT (see OracleTypeLintSpec).
     "text18_heaps" ->

@@ -611,7 +611,7 @@ object TextQueries2 extends graft.QueryFamily {
       .orderBy("source", "lang")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "text31_fertility" -> fertility,
     "text30_interleave" -> interleave,
     "text29_water_fill" -> waterFill,
@@ -625,7 +625,7 @@ object TextQueries2 extends graft.QueryFamily {
     "text27_ccnet_buckets" -> ccnetBuckets
   )
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     "text31_fertility" ->
       s"""SELECT source, lang,
          |  CAST(COUNT(*) AS BIGINT) AS n_docs,

@@ -1213,7 +1213,7 @@ object TextQueries3 extends graft.QueryFamily {
       .orderBy("doc_id")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "text45_pii_redact" -> piiRedact,
     "text44_bm25_topk" -> bm25Retrieval,
     "text43_bool_retrieval" -> boolRetrieval,
@@ -1272,7 +1272,7 @@ object TextQueries3 extends graft.QueryFamily {
        |$rounds""".stripMargin
   }
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // same planted slice, same portable patterns (no backslash
     // classes — the engines disagree on literal escaping), the same
     // Luhn fold, and the redaction hash over the same email → phone

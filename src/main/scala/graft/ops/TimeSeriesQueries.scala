@@ -198,7 +198,7 @@ object TimeSeriesQueries extends graft.QueryFamily {
       .orderBy("event_type")
   }
 
-  val queries: Map[String, Q] = Map(
+  val queries: Map[String, Q] = named(
     "q93_drift" -> drift,
     "q94_autocorr" -> autocorr,
     "q103_seasonal_error" -> seasonalError
@@ -206,7 +206,7 @@ object TimeSeriesQueries extends graft.QueryFamily {
 
   private val centiSql = "CAST(round(value * 100) AS BIGINT)"
 
-  val oracle: Map[String, String] = Map(
+  val oracle: Map[String, String] = named(
     // hourly BIGINT-cent totals, lag structs carrying their bucket so
     // gaps disqualify instead of shifting the season, ppm floor div
     "q103_seasonal_error" ->

@@ -586,15 +586,6 @@ object ManifestStore {
     def filePaths(table: String = MAIN): Seq[String] =
       state(table).partitions.values.flatMap(_.files.map(_.path)).toSeq.sorted
 
-    /** (partition value string, root-relative path, bytes, rows) per
-      * current file — the log AS a table, for file-census queries
-      * (q86's production input).
-      */
-    def fileStats(table: String = MAIN): Seq[(String, String, Long, Long)] =
-      state(table).partitions.values.flatMap { p =>
-        p.files.map(f => (p.values.mkString("/"), f.path, f.bytes, f.rows))
-      }.toSeq.sortBy(_._2)
-
     /** The one zone-map screen: walks each file's row groups once (a
       * single-group file is its own group) and keeps a file iff one of
       * its groups [[admits]] EVERY bound. A row-group screen keeps a

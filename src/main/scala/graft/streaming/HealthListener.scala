@@ -18,9 +18,12 @@ final class HealthListener extends StreamingQueryListener {
   private val lastProgressMs = new AtomicLong(-1L)
   private val lastError = new AtomicReference[String](null)
 
+  /** A (re)started query clears the last terminal error: the listener
+    * is session-wide, so one failed query must not read as dead for
+    * the session's lifetime. */
   override def onQueryStarted(
       e: StreamingQueryListener.QueryStartedEvent
-  ): Unit = ()
+  ): Unit = lastError.set(null)
 
   override def onQueryProgress(
       e: StreamingQueryListener.QueryProgressEvent
@@ -52,9 +55,18 @@ final class HealthListener extends StreamingQueryListener {
 }
 
 object HealthListener {
-  def attach(spark: SparkSession): HealthListener = {
-    val l = new HealthListener
-    spark.streams.addListener(l)
-    l
+
+  /** The session's listener, added on the first call and returned by
+    * every later one. [[graft.GraftSession.local]] calls it for each
+    * session it hands out, so a `getOrCreate` that returns an existing
+    * session still leaves exactly one listener counting its batches.
+    */
+  def install(spark: SparkSession): HealthListener = synchronized {
+    spark.streams.listListeners().collectFirst { case l: HealthListener => l }
+      .getOrElse {
+        val l = new HealthListener
+        spark.streams.addListener(l)
+        l
+      }
   }
 }

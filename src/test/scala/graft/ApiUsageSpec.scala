@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -138,22 +139,41 @@ class ApiUsageSpec extends SparkSpec {
     assert(flagged === Set((1L, 2L)))
   }
 
-  test("sources: JDBC read with partitioned fan-out (embedded Derby)") {
-    val url = "jdbc:derby:memory:apiusage;create=true"
-    val c = java.sql.DriverManager.getConnection(url)
-    try {
-      val st = c.createStatement()
-      st.execute("CREATE TABLE t (id BIGINT, v VARCHAR(10))")
-      st.execute("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
-      st.close()
-    } finally c.close()
-    val df = sources.JdbcSource.read(
-      spark,
-      url,
-      "t",
-      partitioning = Some(sources.JdbcSource.Partitioning("id", 1L, 3L, 2))
+  test("streaming: CDC upsert stream — foreachBatch latest-wins into a state handle") {
+    implicit val sqlCtx = spark.sqlContext
+    val events = MemoryStream[Schemas.ChangeEvent]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-api-cdc").toString
+    val (q, handle) = streaming.CdcStream
+      .upsertQuery(events.toDS(), Seq(Schemas.Message(1L, "seed")).toDS().toDF(), ckpt)
+    events.addData(
+      Schemas.ChangeEvent("U", 1L, Some("seed2"), Timestamp.valueOf("2024-01-01 00:00:01"), 1),
+      Schemas.ChangeEvent("I", 2L, Some("two"), Timestamp.valueOf("2024-01-01 00:00:02"), 2)
     )
-    assert(df.count() === 2L && df.rdd.getNumPartitions === 2)
+    q.processAllAvailable()
+    q.stop()
+    val state = streaming.CdcStream.asMessages(spark, handle)
+      .collect().map(m => m.id -> m.content).toMap
+    assert(state === Map(1L -> "seed2", 2L -> "two"))
+  }
+
+  test("streaming: LSH near-dup on ingest — an arrival pairs with earlier batches") {
+    implicit val sqlCtx = spark.sqlContext
+    val docs = MemoryStream[(Long, String)]
+    val q = streaming.StreamLshDedup
+      .candidates(docs.toDF().toDF("doc_id", "text"))
+      .writeStream
+      .outputMode("append")
+      .format("memory")
+      .queryName("api_lsh_dedup")
+      .start()
+    val text = "the quick brown fox jumps over the lazy dog again and again"
+    docs.addData((1L, text))
+    q.processAllAvailable()
+    docs.addData((2L, text))
+    q.processAllAvailable()
+    q.stop()
+    val pairs = spark.table("api_lsh_dedup").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.toSet === Set((1L, 2L)))
   }
 
   test("sketches: HLL distinct estimate and Bloom membership, mergeable") {

@@ -29,4 +29,14 @@ class QueryRegistrySpec extends SparkSpec {
     assert(e.getMessage.contains("dup_q"))
     assert(!e.getMessage.contains("a1"))
   }
+
+  test("a name repeated inside one family fails its construction, naming it") {
+    val q: (SparkSession, String) => DataFrame = (s, _) => s.range(1).toDF()
+    val e = intercept[IllegalArgumentException](new QueryFamily {
+      val queries = named("once_q" -> q, "twice_q" -> q, "twice_q" -> q)
+      val oracle = named("once_q" -> "SELECT 1", "twice_q" -> "SELECT 2")
+    })
+    assert(e.getMessage.contains("twice_q"))
+    assert(!e.getMessage.contains("once_q"))
+  }
 }

@@ -5,10 +5,9 @@ import java.nio.file.Files
 import graft.{SparkSpec, Tables}
 import org.apache.spark.sql.functions._
 
-/** Date-partitioned layout: the other half of the physical design
-  * (StateLayout covers key bucketing) — writes partitioned by a
-  * derived date column and asserts the scan prunes partitions for a
-  * date predicate instead of listing/reading them all.
+/** Date-partitioned layout: writes partitioned by a derived date
+  * column and asserts the scan prunes partitions for a date predicate
+  * instead of listing/reading them all.
   */
 class PartitionPruningSpec extends SparkSpec {
 

@@ -476,8 +476,8 @@ class PlanBudgetSpec extends SparkSpec {
   // ManifestStoreSpec's commit isolation, time-travel retention,
   // change-feed delta-file-set, and kept-file range pruning,
   // DriftRecoverySpec and
-  // FilteredAnnSpec's serving shapes, SchemaEvolutionSpec and
-  // FileFormatsSpec's round-trips, StreamWinsorClipSpec's and
+  // FilteredAnnSpec's serving shapes, SchemaEvolutionSpec's
+  // round-trips, StreamWinsorClipSpec's and
   // StreamBottomKSpec's bounded state, MediaNearDupSpec's banded
   // candidate counts, the replay specs' O(1)-state equivalences).
 
