@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.SparkContext
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.graftshim.GraftSqlShims
 import org.apache.spark.sql.functions._
 
 /** Scale-linearity measurement: run the headline pipelines against a
@@ -16,42 +13,22 @@ import org.apache.spark.sql.functions._
   * dedup pipelines quadratic by construction, measuring the planted
   * pathology instead of the engine.
   *
-  * Output: `bench_history/r9_scale10x.json` (or argv(0)) with per-
-  * query `{secs, shuffle_read_mb, shuffle_write_mb, spill_mb, rows}`
+  * Output: `scale10x.json` in the working directory (or argv(0)) with
+  * per-query `{secs, shuffle_read_mb, shuffle_write_mb, spill_mb}`
   * under `"x1"`/`"x10"` plus a `"ratio"` block (10× / 1×); a ratio
   * near 10 on shuffle bytes and below ~15 on wall time is linear for
   * an n·log n-at-worst pipeline at this scale.
   */
 object Scale10x {
 
-  /** Shuffle read/write and spill bytes summed over task-end events.
-    * Task ends reach a listener asynchronously, so [[reset]] and
-    * [[counters]] drain the bus first: no event from before a reset
-    * lands after it, and every task that ended before a read is in it.
-    */
-  private class Metrics(sc: SparkContext) extends SparkListener {
-    val shuffleRead = new java.util.concurrent.atomic.AtomicLong
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      }
-    }
-    def reset(): Unit = {
-      GraftSqlShims.drainListeners(sc)
-      shuffleRead.set(0); shuffleWrite.set(0); spill.set(0)
-    }
-    def counters(): Map[String, Double] = {
-      GraftSqlShims.drainListeners(sc)
-      Map(
-        "shuffle_read_mb" -> mb(shuffleRead.get),
-        "shuffle_write_mb" -> mb(shuffleWrite.get),
-        "spill_mb" -> mb(spill.get))
-    }
+  /** Shuffle read/write and spill over the stages `probe` saw since
+    * its last reset. */
+  private def counters(probe: tools.Probe): Map[String, Double] = {
+    val stages = probe.stages
+    Map(
+      "shuffle_read_mb" -> mb(stages.map(_.shuffleReadBytes).sum),
+      "shuffle_write_mb" -> mb(stages.map(_.shuffleWriteBytes).sum),
+      "spill_mb" -> mb(stages.map(_.spillBytes).sum))
   }
 
   private def mb(b: Long): Double = math.round(b / 1048.576) / 1000.0
@@ -65,13 +42,12 @@ object Scale10x {
   )
 
   def main(args: Array[String]): Unit = {
-    val out = args.headOption.getOrElse("bench_history/r10_scale10x.json")
+    val out = args.headOption.getOrElse("scale10x.json")
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.envCores()
     val spark = GraftSession.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new Metrics(spark.sparkContext)
-    spark.sparkContext.addSparkListener(metrics)
+    val probe = tools.Probe.attach(spark)
 
     val d1 = spark.read.parquet(s"$base/documents.parquet").count()
     val e1 = spark.read.parquet(s"$base/embeddings.parquet").count()
@@ -120,10 +96,10 @@ object Scale10x {
     def measure(dir: String): Map[String, Map[String, Double]] =
       HEADLINE.map { name =>
         runOnce(name, dir) // warm pass: codegen + file listing
-        metrics.reset()
+        probe.reset()
         val secs = runOnce(name, dir)
         name -> (Map("secs" -> math.round(secs * 1000) / 1000.0) ++
-          metrics.counters())
+          counters(probe))
       }.toMap
 
     /** The scale-CORRECT serving arm sim26's gated form can't show:
@@ -156,12 +132,12 @@ object Scale10x {
         (System.nanoTime() - t0) / 1e9
       }
       serveOnce() // warm
-      metrics.reset()
+      probe.reset()
       val secs = serveOnce()
       val r = Map(
         "secs" -> math.round(secs * 1000) / 1000.0,
         "k" -> k.toDouble
-      ) ++ metrics.counters()
+      ) ++ counters(probe)
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(queries)
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(cents)
       graft.sources.Scratch.deleteRecursively(store)
@@ -211,12 +187,12 @@ object Scale10x {
         (System.nanoTime() - t0) / 1e9
       }
       feedOnce() // warm
-      metrics.reset()
+      probe.reset()
       val secs = feedOnce()
       val r = Map(
         "secs" -> math.round(secs * 1000) / 1000.0,
         "changed_rows" -> 2000.0
-      ) ++ metrics.counters()
+      ) ++ counters(probe)
       graft.sources.Scratch.deleteRecursively(root)
       r
     }
@@ -306,12 +282,12 @@ object Scale10x {
         (System.nanoTime() - t0) / 1e9
       }
       feedOnce() // warm
-      metrics.reset()
+      probe.reset()
       val secs = feedOnce()
       val r = Map(
         "secs" -> math.round(secs * 1000) / 1000.0,
         "dv_ids" -> nIds.toDouble
-      ) ++ metrics.counters()
+      ) ++ counters(probe)
       graft.sources.Scratch.deleteRecursively(root)
       r
     }
@@ -354,22 +330,22 @@ object Scale10x {
         (System.nanoTime() - t0) / 1e9
       }
       // 8 live ids scattered across the key space (≡1 mod 7500)
-      val probe = (0L until 8L).map(i => i * 7500L + 1L)
+      val pointIds = (0L until 8L).map(i => i * 7500L + 1L)
       def pointOnce(): Double = {
         val t0 = System.nanoTime()
-        DeletionVectors.readForIds(snap, ManifestStore.MAIN, "doc_id", probe)
+        DeletionVectors.readForIds(snap, ManifestStore.MAIN, "doc_id", pointIds)
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       }
       readOnce(); pointOnce() // warm
-      metrics.reset()
+      probe.reset()
       val secs = readOnce()
       val pointSecs = pointOnce()
       val r = Map(
         "secs" -> math.round(secs * 1000) / 1000.0,
         "point_secs" -> math.round(pointSecs * 1000) / 1000.0,
         "dv_ids" -> nIds.toDouble
-      ) ++ metrics.counters()
+      ) ++ counters(probe)
       graft.sources.Scratch.deleteRecursively(root)
       r
     }
@@ -419,7 +395,7 @@ object Scale10x {
       }
       mergeOnce(batch(7, 11, 1), 0L) // warm: same shape, other keys
       val pre = ManifestStore.snapshot(spark, root)
-      metrics.reset()
+      probe.reset()
       val secs = mergeOnce(batch(31, 53, 2), 1L)
       val post = ManifestStore.snapshot(spark, root)
       val dvName = DeletionVectors.dvTable(ManifestStore.MAIN)
@@ -428,7 +404,7 @@ object Scale10x {
         "secs" -> math.round(secs * 1000) / 1000.0,
         "dv_ids" -> nIds.toDouble,
         "dv_append_kb" -> math.round(added.map(_.bytes).sum / 1.024) / 1000.0
-      ) ++ metrics.counters()
+      ) ++ counters(probe)
       graft.sources.Scratch.deleteRecursively(root)
       r
     }
@@ -470,7 +446,7 @@ object Scale10x {
       }
       mergeOnce(batch(0, 1), 0L) // warm: same shape, other keys
       val pre = ManifestStore.snapshot(spark, root)
-      metrics.reset()
+      probe.reset()
       val secs = mergeOnce(batch(1000, 2), 1L)
       val post = ManifestStore.snapshot(spark, root)
       val staged = Seq(ManifestStore.MAIN, DeletionVectors.dvTable(ManifestStore.MAIN))
@@ -479,7 +455,7 @@ object Scale10x {
         "secs" -> math.round(secs * 1000) / 1000.0,
         "store_rows" -> rows.toDouble,
         "staged_kb" -> math.round(staged / 1.024) / 1000.0
-      ) ++ metrics.counters()
+      ) ++ counters(probe)
       graft.sources.Scratch.deleteRecursively(root)
       r
     }

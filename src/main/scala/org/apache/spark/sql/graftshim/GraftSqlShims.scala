@@ -8,9 +8,9 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession}
   * — the standard wrap-a-LogicalPlan entry point used by Spark
   * extension libraries (graft.plans.AsOfJoin builds its custom
   * logical node through this) — plus the checkpoint-block release
-  * that `Dataset.localCheckpoint` has no public inverse for, and the
-  * listener-bus drain. Nothing else from the private surface is
-  * touched.
+  * that `Dataset.localCheckpoint` has no public inverse for, the
+  * listener-bus drain and the query execution an execution-end event
+  * carries. Nothing else from the private surface is touched.
   */
 object GraftSqlShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -23,6 +23,14 @@ object GraftSqlShims {
     */
   def drainListeners(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The query execution behind an SQL execution's end event, when
+    * the event carries one: the link from an action's
+    * `QueryExecution` to its execution id, which the public action
+    * listener does not report. */
+  def executionOf(
+      e: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+  ): Option[org.apache.spark.sql.execution.QueryExecution] = Option(e.qe)
 
   /** Release the storage blocks behind a `localCheckpoint(true)`'d
     * DataFrame. A local checkpoint persists a lineage-truncated RDD

@@ -26,6 +26,25 @@ class GraftSessionSpec extends SparkSpec {
     assert(hits === Seq("GraftSession.scala"))
   }
 
+  test("tools.Probe holds the only Spark and query-execution listeners") {
+    // written so that this file's own source matches none of them
+    val listeners = Seq(
+      """extends\s+SparkListener\b""", """new\s+SparkListener\b""",
+      """\bQueryExecution""" + """Listener\b""").map(_.r)
+    val hits = Seq("src/main", "src/test").flatMap { root =>
+      val stream = Files.walk(Paths.get(root))
+      try stream.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val text = Files.readString(p)
+          listeners.filter(_.findFirstIn(text).isDefined)
+            .map(l => s"${p.getFileName}: $l")
+        }.toList
+      finally stream.close()
+    }
+    assert(hits.map(_.takeWhile(_ != ':')).distinct === Seq("Probe.scala"), hits)
+  }
+
   test("the GraftSession.local session carries the whole engine") {
     val s = spark.asInstanceOf[ClassicSession]
     val registry = s.sessionState.functionRegistry

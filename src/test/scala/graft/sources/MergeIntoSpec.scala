@@ -2,10 +2,9 @@ package graft.sources
 
 import graft.{SparkSpec, Tables}
 import graft.cdc.Materializer
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import graft.tools.Probe
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftSqlShims
 
 /** MERGE INTO's defining equivalence: applying a change log through
   * [[MergeInto.merge]] batch by batch (each batch REDELIVERED — the
@@ -38,30 +37,13 @@ class MergeIntoSpec extends SparkSpec {
     spark.createDataFrame(
       spark.sparkContext.parallelize(df.collect().toSeq, parts), df.schema)
 
-  /** (the call site of every job started, widest stage's task count)
-    * while `body` runs. The bus is drained before the listener joins,
-    * so no earlier event is counted, and again before the counters
-    * are read.
+  /** (the stages of every job started, widest stage's task count)
+    * while `body` runs, read from a [[graft.tools.Probe]] around it.
     */
   private def jobBudget(body: => Unit): (Seq[String], Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val widest = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.add(e.stageInfos.map(_.name).mkString(" + "))
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        widest.accumulateAndGet(e.stageInfo.numTasks, math.max)
-    }
-    GraftSqlShims.drainListeners(sc)
-    sc.addSparkListener(listener)
-    try body
-    finally {
-      GraftSqlShims.drainListeners(sc)
-      sc.removeSparkListener(listener)
-    }
-    import scala.jdk.CollectionConverters._
-    (jobs.asScala.toSeq, widest.get)
+    val (_, probe) = Probe.around(spark)(body)
+    (probe.jobs.map(_.stages.map(_._1).mkString(" + ")),
+      probe.stages.map(_.tasks).foldLeft(0)(math.max))
   }
 
   /** The ids of the records one commit appended to the vector. */
