@@ -16,10 +16,24 @@ import org.apache.spark.sql.types._
   * is off, as our sessions set). All branches land on µs
   * TimestampType under the pinned UTC session — bit-identical to
   * DuckDB's naive read of the same file.
+  *
+  * Spark infers a parquet file's schema in a Spark job, even for one
+  * file, so [[t]] infers each file's schema once and reads the file
+  * with that schema after that.
   */
 final case class Tables(spark: SparkSession, dir: String) {
 
-  def t(name: String): DataFrame = spark.read.parquet(s"$dir/$name.parquet")
+  def t(name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val key = Tables.schemaKey(spark, path)
+    key.flatMap(Tables.cached) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        key.foreach(Tables.remember(_, df.schema))
+        df
+    }
+  }
 
   def region: DataFrame = t("region")
   def nation: DataFrame = t("nation")
@@ -48,4 +62,55 @@ final case class Tables(spark: SparkSession, dir: String) {
         throw new IllegalStateException(s"unexpected events.ts type: $other")
     }
   }
+}
+
+object Tables {
+
+  /** A fixture file's identity (path, size, mtime, inode) plus the
+    * session's `spark.sql.parquet.*` and `spark.sql.legacy.parquet.*`
+    * settings, which decide what schema Spark infers from it.
+    */
+  private final case class SchemaKey(
+      path: String,
+      bytes: Long,
+      mtime: java.nio.file.attribute.FileTime,
+      fileKey: AnyRef,
+      conf: Seq[(String, String)]
+  )
+
+  /** Inferred schemas, bounded LRU. A rewritten file gets a new size,
+    * mtime or inode, so its old entry no longer matches and ages out.
+    */
+  private val schemas =
+    new java.util.LinkedHashMap[SchemaKey, StructType](64, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[SchemaKey, StructType]): Boolean = size() > 64
+    }
+
+  /** The key of a local regular file; None for anything else (a
+    * directory, a missing path, a non-local URI), which is read
+    * uncached so Spark reports its own error.
+    */
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] =
+    try {
+      val attrs = java.nio.file.Files.readAttributes(
+        java.nio.file.Paths.get(path),
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      if (!attrs.isRegularFile) None
+      else {
+        val conf = spark.conf.getAll.toSeq.filter { case (k, _) =>
+          k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+        }.sorted
+        Some(SchemaKey(path, attrs.size, attrs.lastModifiedTime, attrs.fileKey, conf))
+      }
+    } catch {
+      case _: java.io.IOException | _: java.nio.file.InvalidPathException => None
+    }
+
+  // inference runs outside the lock: it launches a Spark job
+  private def cached(key: SchemaKey): Option[StructType] =
+    schemas.synchronized(Option(schemas.get(key)))
+
+  private def remember(key: SchemaKey, schema: StructType): Unit =
+    schemas.synchronized { schemas.put(key, schema) }
 }

@@ -86,10 +86,8 @@ import org.apache.spark.sql.types.StructType
   *   - [[FileEntry]] carries per-file min/max for integral AND string
   *     columns (string bounds truncated to [[STR_TRUNC]] code points,
   *     the truncate-and-increment upper-bound discipline), read from
-  *     the parquet footers ON THE EXECUTORS at commit time (a Spark
-  *     job over the staged file list — the driver opens no footers,
-  *     so an initial 100 TB corpus commit never serializes millions of
-  *     footer reads through one process), so [[Snapshot.readBox]]
+  *     the staged files' parquet footers on the driver at commit time
+  *     (about 0.1 ms per file; no Spark job), so [[Snapshot.readBox]]
   *     prunes files by value range BEFORE
   *     Spark lists anything — manifest-level data skipping on
   *     non-partition columns.
@@ -150,12 +148,6 @@ object ManifestStore {
     * megabyte string values.
     */
   val STR_TRUNC: Int = 16
-
-  /** Parquet footers opened ON THE DRIVER (diagnostic): the commit
-    * path reads footers in a Spark job, so commits leave this counter
-    * untouched — ManifestLogSpec pins that.
-    */
-  val driverFooterOpens = new java.util.concurrent.atomic.AtomicLong(0L)
 
   sealed trait Mode
 
@@ -808,7 +800,7 @@ object ManifestStore {
     tagFieldIds(df, stageFieldIds(root, table, df.schema))
 
   // ---------------------------------------------------------------
-  // Staged listing + footer stats (executor-side)
+  // Staged listing + footer stats (driver-side)
   // ---------------------------------------------------------------
 
   /** Decode the `%xx` escapes Spark's partitioned write applies to
@@ -838,8 +830,8 @@ object ManifestStore {
 
   /** List one staged directory's parquet files with their partition
     * values. The walk (name + size, no file opens) is a driver-side
-    * NIO pass — microseconds per file; the footers are opened by
-    * [[toActions]] in one Spark job.
+    * NIO pass — microseconds per file; [[toActions]] then opens each
+    * file's footer.
     */
   private def walkStaged(root: String, st: Staged): Seq[StagedFile] = {
     val rootUri = new org.apache.hadoop.fs.Path(root).toUri.getPath
@@ -871,28 +863,29 @@ object ManifestStore {
     }
   }
 
-  /** Open ONE parquet footer and build its [[FileEntry]] — row count
-    * plus integral and truncated-string (min, max). Runs inside Spark
-    * tasks on the commit path; the driver counter only moves when a
-    * caller (spec, diagnostic) invokes it outside a task.
+  /** Open ONE parquet footer on the driver and build its [[FileEntry]]
+    * — row count plus integral and truncated-string (min, max).
     */
-  private[sources] def footerEntry(
+  private def footerEntry(
       absPath: String,
       bytes: Long,
       rel: String
   ): FileEntry = {
-    if (org.apache.spark.TaskContext.get() == null)
-      driverFooterOpens.incrementAndGet()
     // NIO InputFile, not HadoopInputFile: the staged files are local
     // by the commit protocol's own contract (localPath rejects any
     // non-file: root), and Hadoop's path resolves a FileSystem from
-    // the synchronized FileSystem.CACHE per file — 32 footer tasks ×
-    // ~20 files each serialized on that monitor (footer stages showed
-    // run ≈ 2.6× cpu). LocalInputFile reads the footer straight
-    // through java.nio with no Configuration and no shared lock.
+    // the synchronized FileSystem.CACHE per file. LocalInputFile reads
+    // the footer straight through java.nio with no shared lock. The
+    // read options come from a plain configuration: the defaults that
+    // `open(file)` builds load a Hadoop Configuration on every call,
+    // ~2.3 ms, where the open and footer read take ~0.1 ms. Built per
+    // open, not shared: closing a reader releases its options' codecs.
     val in = new org.apache.parquet.io.LocalInputFile(
       java.nio.file.Paths.get(absPath))
-    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val options = org.apache.parquet.ParquetReadOptions
+      .builder(new org.apache.parquet.conf.PlainParquetConfiguration())
+      .build()
+    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(in, options)
     try {
       val (stats, strStats, groups) = footerRangeStats(rdr)
       FileEntry(rel, bytes, rdr.getRecordCount, stats, strStats,
@@ -911,7 +904,7 @@ object ManifestStore {
     * (a group missing a column's stats simply omits it — that group
     * is conservatively kept by that column).
     */
-  private def footerRangeStats(
+  private[sources] def footerRangeStats(
       rdr: org.apache.parquet.hadoop.ParquetFileReader
   ): (Map[String, (Long, Long)], Map[String, (String, String)],
       Seq[RowGroupStat]) = {
@@ -1111,41 +1104,17 @@ object ManifestStore {
     tables
   }
 
-  /** The commit's [[Action]]s: every staged table's files listed on
-    * the driver ([[walkStaged]]), then the footers of ALL of them
-    * opened in ONE Spark job ([[footerEntry]] runs in tasks, a few
-    * files per task) — so a multi-table commit (a merge's data and
-    * vector runs) pays one short job, not one per table, and the
-    * driver opens no footers: at an initial 100 TB corpus commit that
-    * is the difference between minutes of executor fan-out and
-    * millions of serial driver reads.
+  /** The commit's [[Action]]s: every staged table's files listed
+    * ([[walkStaged]]) and their footers opened ([[footerEntry]]), all
+    * on the driver, with no Spark job: the staged files are local by
+    * contract, and an open plus its footer read costs about 0.1 ms.
     */
-  private def toActions(
-      spark: SparkSession,
-      root: String,
-      staged: Seq[Staged]
-  ): Seq[Action] = {
-    val files: Seq[(Int, StagedFile)] = staged.zipWithIndex.flatMap {
-      case (st, i) => walkStaged(root, st).map(i -> _)
-    }
-    val opened: Map[Int, Seq[(Seq[String], FileEntry)]] =
-      if (files.isEmpty) Map.empty
-      else {
-        val slices = math.max(1, math.min(files.length / 4 + 1,
-          spark.sparkContext.defaultParallelism))
-        spark.sparkContext
-          .parallelize(files, slices)
-          .mapPartitions { it =>
-            it.map { case (i, (abs, bytes, rel, values)) =>
-              i -> (values, footerEntry(abs, bytes, rel))
-            }
-          }
-          .collect()
-          .toSeq
-          .groupMap(_._1)(_._2)
-      }
-    staged.zipWithIndex.map { case (st, i) =>
-      val partitions = opened.getOrElse(i, Seq.empty)
+  private def toActions(root: String, staged: Seq[Staged]): Seq[Action] =
+    staged.map { st =>
+      val partitions = walkStaged(root, st)
+        .map { case (abs, bytes, rel, values) =>
+          (values, footerEntry(abs, bytes, rel))
+        }
         .groupBy(e => keyOf(st.partitionCols, e._1))
         .map { case (key, group) =>
           // deterministic log content: files sorted by path
@@ -1155,7 +1124,6 @@ object ManifestStore {
       Action(st.table, st.mode, st.partitionCols, st.schemaDdl,
         partitions, st.drops)
     }
-  }
 
   /** Internal resolved state at a version (snapshot minus the spark
     * handle).
@@ -1268,7 +1236,7 @@ object ManifestStore {
     currentVersionOpt(root).map(stateAt(root, _))
 
   /** Publish staged writes as ONE new log version: list + stat each
-    * staged table ONCE (executor-side footers), merge into the
+    * staged table ONCE (footers read on the driver), merge into the
     * previous state per its [[Mode]], and atomically CREATE the delta
     * entry. All staged tables become visible together or — on any
     * failure or crash before the create — not at all; the previous
@@ -1295,7 +1263,7 @@ object ManifestStore {
           s"commit at $root expected version $expectedVersion " +
             s"but found ${prev.version} — another writer committed first; " +
             "stage is unpublished")
-      val actions = toActions(spark, root, staged)
+      val actions = toActions(root, staged)
       publish(root, prev, actions, None)
     }
   }
@@ -1425,7 +1393,7 @@ object ManifestStore {
     lockFor(root).synchronized {
       val cur = loadState(root).getOrElse(
         throw new IllegalStateException(s"no committed store at $root"))
-      val actions = toActions(spark, root, staged)
+      val actions = toActions(root, staged)
       if (cur.version != baseVersion) {
         val base = stateAt(root, baseVersion)
         def snapOf(st: StoreState) =
@@ -1484,7 +1452,7 @@ object ManifestStore {
             s"batch $batchId of sink '$sinkId' at $root was staged from " +
               s"version $expectedVersion but found ${prev.version} — another " +
               "writer committed first; stage is unpublished")
-        val actions = toActions(spark, root, staged)
+        val actions = toActions(root, staged)
         (publish(root, prev, actions, Some(sinkId -> batchId)), true)
       }
     }

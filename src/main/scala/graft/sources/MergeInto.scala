@@ -38,9 +38,9 @@ import org.apache.spark.sql.functions._
   * [[ManifestStore.ConcurrentCommitException]] and publishes nothing.
   *
   * Scale posture: a micro-batch is small, so every step runs in ONE
-  * task and no shuffle runs. An applied batch runs at most 5 Spark
+  * task and no shuffle runs. An applied batch runs at most 4 Spark
   * jobs whatever the store size or the number of keys (MergeIntoSpec
-  * pins ≤6, and no stage wider than one task per core):
+  * pins that, and no stage wider than one task per core):
   *   1. the local checkpoint of the net batch: the latest-wins window
   *      over the batch coalesced to one partition (a streaming batch
   *      arrives as one partition per producer write), which needs no
@@ -49,9 +49,9 @@ import org.apache.spark.sql.functions._
   *      driver, the payload stays in the checkpoint;
   *   3. the upsert rows' write;
   *   4. the vector run's write, its records built on the driver after
-  *      the zone-map screen (metadata only);
-  *   5. one footer job for every table the commit stages.
-  * A pure-delete batch skips 3; a batch of fresh inserts skips 4.
+  *      the zone-map screen (metadata only).
+  * The commit reads the staged files' footers on the driver, with no
+  * job. A pure-delete batch skips 3; a batch of fresh inserts skips 4.
   * Commit cost is O(batch): bytes written and log entries do not grow
   * with the store or the vector (Scale10x's `merge_store_scale` arm).
   */

@@ -3,14 +3,15 @@ package graft.tools
 /** Diagnostic main (NOT part of the driver contract): run one or more
   * declared queries under a [[Probe]] that attributes wall-clock to
   * individual Spark jobs by call site, so lifecycle queries' time can
-  * be split into their phases (stage writes, footer jobs, counts,
-  * readbacks). Usage:
+  * be split into their phases (stage writes, counts, readbacks). A job
+  * of a SQL execution is listed under the execution's call site, also
+  * when AQE submitted it from a pool thread. Usage:
   *
   *   SPARK_GRAFT_SF_DIR=... sbt "runMain graft.tools.JobProfile q109_compaction_execute"
   *
   * Prints per-job (duration, callsite) for the WARM run plus the gaps
-  * between jobs (driver-side work: planning, manifest IO, footer
-  * reads that don't run as jobs).
+  * between jobs (driver-side work: planning, manifest IO, commit
+  * footer reads).
   */
 object JobProfile {
   def main(args: Array[String]): Unit = {

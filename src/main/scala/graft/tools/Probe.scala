@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.graftshim.GraftSqlShims
 import org.apache.spark.sql.util.QueryExecutionListener
 
@@ -41,18 +41,22 @@ final class Probe private (spark: SparkSession) {
   private val stageLog = mutable.ArrayBuffer[Stage]()
   private val actionLog = mutable.ArrayBuffer[(String, QueryExecution)]()
   private val executionIds = new java.util.IdentityHashMap[QueryExecution, Long]()
+  private val executionSites = mutable.Map[Long, String]()
 
   private val events = new SparkListener {
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      val site = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("callSite.short")))
-        .filter(_.nonEmpty)
+    override def onJobStart(e: SparkListenerJobStart): Unit = lock.synchronized {
+      // a job of a SQL execution is named by the execution's site: AQE
+      // submits such jobs from a pool thread, whose own call site is
+      // the pool's, not the line that ran the query
+      def property(k: String) = Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+      val site = property("spark.sql.execution.id")
+        .flatMap(id => executionSites.get(id.toLong))
+        .orElse(property("callSite.short").filter(_.nonEmpty))
         .orElse(e.stageInfos.lastOption.map(si => firstLine(si.name)))
         .getOrElse("?")
-      val job = Job(e.jobId, site, nanos(e.time), None,
+      jobLog(e.jobId) = Job(e.jobId, site, nanos(e.time), None,
         e.stageInfos.map(_.numTasks).sum,
         e.stageInfos.map(si => (firstLine(si.name), si.numTasks)))
-      lock.synchronized { jobLog(e.jobId) = job }
     }
     override def onJobEnd(e: SparkListenerJobEnd): Unit = lock.synchronized {
       jobLog.get(e.jobId).foreach(j => jobLog(e.jobId) = j.copy(end = Some(nanos(e.time))))
@@ -74,6 +78,10 @@ final class Probe private (spark: SparkSession) {
     }
     // the action listener gets no execution id; this event carries both
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case start: SparkListenerSQLExecutionStart =>
+        Option(start.description).map(firstLine).filter(_.nonEmpty).foreach { d =>
+          lock.synchronized { executionSites(start.executionId) = d }
+        }
       case end: SparkListenerSQLExecutionEnd =>
         GraftSqlShims.executionOf(end).foreach { qe =>
           lock.synchronized { executionIds.put(qe, end.executionId) }
@@ -94,6 +102,7 @@ final class Probe private (spark: SparkSession) {
     GraftSqlShims.drainListeners(sc)
     lock.synchronized {
       jobLog.clear(); stageLog.clear(); actionLog.clear(); executionIds.clear()
+      executionSites.clear()
     }
   }
 

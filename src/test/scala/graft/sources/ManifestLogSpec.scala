@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** The LOG-STRUCTURED half of the [[ManifestStore]] contract: commits
   * persist O(changed files) delta entries (never a full snapshot),
   * checkpoints bound the replay tail, the commit point is an atomic
-  * CREATE-NEW (cross-process safe), footer stats are collected on the
-  * executors, commit clocks are strictly monotonic for
+  * CREATE-NEW (cross-process safe), footer stats are read on the
+  * driver with no Spark job, commit clocks are strictly monotonic for
   * `AS OF TIMESTAMP`, and string zone maps carry sound
   * truncate-and-increment bounds.
   */
@@ -201,30 +201,56 @@ class ManifestLogSpec extends SparkSpec {
     } finally Scratch.deleteRecursively(root)
   }
 
-  test("commits open no parquet footers on the driver; executor-derived " +
-    "stats match a driver derivation byte for byte") {
-    val root = Scratch.tempDir("graft-mlog-exec")
+  test("a commit of staged dirs runs no Spark job; its footer stats " +
+    "equal a default-options derivation") {
+    val root = Scratch.tempDir("graft-mlog-footers")
     try {
-      val before = ManifestStore.driverFooterOpens.get()
-      ManifestStore.write(docs, root, Seq("source"))
-      ManifestStore.append(docs.limit(40), root, Seq("source"))
-      assert(ManifestStore.driverFooterOpens.get() === before,
-        "the commit path must stat footers in Spark tasks, not on the driver")
-      // both derivations agree: re-derive one committed file's entry
-      // on the driver and compare to what the log recorded
-      val snap = ManifestStore.snapshot(spark, root)
-      val entries = snap.state(ManifestStore.MAIN)
-        .partitions.values.flatMap(_.files)
-      entries.take(3).foreach { f =>
-        val abs = new org.apache.hadoop.fs.Path(root + "/" + f.path)
-          .toUri.getPath
-        // `seq` is the log's own (the adding version), not a footer stat
-        val rederived = ManifestStore.footerEntry(abs, f.bytes, f.path)
-          .copy(seq = f.seq)
-        assert(rederived === f, s"stats drifted for ${f.path}")
+      // int columns and a non-ASCII string column (BMP, CJK and a
+      // supplementary code point), partitioned into several files
+      val tagged = docs
+        .withColumn("n32", col("n_chars").cast("int"))
+        .withColumn("tag", concat(lit("é雪\uD83D\uDE00-"), col("source"),
+          lit("-"), col("doc_id")))
+      // one id-sorted file with a small block size: many row groups
+      val wide = (0 until 20).map { i =>
+        docs.withColumn("doc_id", col("doc_id") * 2 + lit(1000L * i))
+      }.reduce(_ unionByName _)
+      val staged = Seq(
+        ManifestStore.stage(tagged, root, ManifestStore.MAIN, Seq("source"),
+          ManifestStore.Replace),
+        ManifestStore.stage(wide.coalesce(1).sortWithinPartitions("doc_id"),
+          root, "wide", Seq.empty, ManifestStore.Replace,
+          writerOptions = Map("parquet.block.size" -> (16 * 1024).toString,
+            "parquet.page.size" -> (4 * 1024).toString)))
+      val (_, probe) = graft.tools.Probe.around(spark) {
+        ManifestStore.commit(spark, root, staged)
       }
-      assert(ManifestStore.driverFooterOpens.get() === before + 3,
-        "the explicit driver derivation must be the ONLY driver footer IO")
+      assert(probe.jobs.isEmpty,
+        s"a commit of staged dirs ran Spark jobs: ${probe.jobs}")
+
+      val snap = ManifestStore.snapshot(spark, root)
+      val entries = Seq(ManifestStore.MAIN, "wide").flatMap { t =>
+        snap.state(t).partitions.values.flatMap(_.files)
+      }
+      assert(entries.exists(_.groups.length > 1), "no multi-group file")
+      assert(entries.exists(_.strStats.get("tag").exists(_._1.startsWith("é雪"))),
+        "no non-ASCII string bounds")
+      assert(entries.exists(f => f.stats.contains("n_chars") && f.stats.contains("n32")),
+        "no int32 and int64 bounds")
+      entries.foreach { f =>
+        // the reference derivation: the reader with parquet's default
+        // read options, which load a Hadoop configuration
+        val abs = new org.apache.hadoop.fs.Path(root + "/" + f.path).toUri.getPath
+        val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+          new org.apache.parquet.io.LocalInputFile(java.nio.file.Paths.get(abs)))
+        val reference = try {
+          val (stats, strStats, groups) = ManifestStore.footerRangeStats(rdr)
+          ManifestStore.FileEntry(f.path, java.nio.file.Files.size(
+            java.nio.file.Paths.get(abs)), rdr.getRecordCount, stats, strStats,
+            if (groups.length > 1) groups else Seq.empty, f.seq)
+        } finally rdr.close()
+        assert(reference === f, s"stats drifted for ${f.path}")
+      }
     } finally Scratch.deleteRecursively(root)
   }
 

@@ -215,7 +215,7 @@ class MergeIntoSpec extends SparkSpec {
     } finally Scratch.deleteRecursively(root)
   }
 
-  test("an applied merge of a 64-partition batch runs at most 6 Spark " +
+  test("an applied merge of a 64-partition batch runs at most 4 Spark " +
     "jobs and no stage wider than one task per core, above ISIN_MAX keys too") {
     val root = Scratch.tempDir("graft-merge-budget")
     try {
@@ -244,7 +244,7 @@ class MergeIntoSpec extends SparkSpec {
           val (_, applied) = MergeInto.merge(spark, root, batch, "budget", id.toLong)
           assert(applied)
         }
-        assert(jobs.size <= 6, s"applied merge $id ran ${jobs.size} Spark " +
+        assert(jobs.size <= 4, s"applied merge $id ran ${jobs.size} Spark " +
           jobs.mkString("jobs:\n", "\n", ""))
         assert(widest <= cores,
           s"a stage of merge $id ran $widest tasks on $cores cores")

@@ -2,12 +2,13 @@ package graft.tools
 
 import java.io.ByteArrayOutputStream
 
-import graft.{Explain, SparkEntry, SparkSpec}
+import graft.{Explain, SparkEntry, SparkSpec, Tables}
+import graft.sources.{ManifestStore, Scratch}
 import org.apache.spark.sql.functions._
 
 /** [[Probe]] reads: the builder plans `Explain` prints from it, the
   * shuffle figures `Scale10x` sums from its stages, and the job list
-  * `JobProfile` reads right after a query returns.
+  * and call sites `JobProfile` reads right after a query returns.
   */
 class ProbeSpec extends SparkSpec {
 
@@ -97,5 +98,21 @@ class ProbeSpec extends SparkSpec {
       assert(probe.stages.map(_.tasks) === Seq(40), s"round $round")
     }
     finally probe.close()
+  }
+
+  test("a job of a SQL execution is named by the execution's site, " +
+    "not by the pool thread that submitted it") {
+    val root = Scratch.tempDir("graft-probe-site")
+    try {
+      val docs = Tables(spark, sfDir).documents.select("doc_id", "n_chars", "source")
+      val (_, probe) = Probe.around(spark) {
+        ManifestStore.stage(docs, root, ManifestStore.MAIN, Seq("source"),
+          ManifestStore.Append)
+      }
+      val sites = probe.jobs.map(_.site)
+      assert(sites.nonEmpty)
+      assert(!sites.exists(_.contains("CompletableFuture")), sites)
+      assert(sites.forall(_.contains("ManifestStore.scala")), sites)
+    } finally Scratch.deleteRecursively(root)
   }
 }

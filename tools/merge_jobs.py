@@ -1,16 +1,20 @@
 #!/usr/bin/env python3
-"""Per-merge Spark job list from a traced perfbench cdc_ingest run.
+"""Per-span Spark job list from a traced perfbench run.
 
     python3 perfbench/run.py --workload cdc_ingest --seed 801 --trace 1
     python3 tools/merge_jobs.py .bench_build/results/cdc_ingest-seed801-spans.json
+    python3 perfbench/run.py --workload lifecycle --seed 901 --trace 1
+    python3 tools/merge_jobs.py --span build:q112_manifest_commit \
+        .bench_build/results/lifecycle-seed901-spans.json
 
-For every `merge` span it prints the wall time, the number of Spark jobs
-launched under it, the widest stage's task count, the driver gap (wall
-time not covered by any running job), the bytes its tasks wrote and, per
-job, its stages' task counts and its duration. The last line is one
-summary over all merges: the median jobs, wall time, driver gap and
-staged bytes per merge.
+For every span named NAME (`--span`, default `merge`) it prints the wall
+time, the number of Spark jobs launched under it, the widest stage's task
+count, the driver gap (wall time not covered by any running job), the
+bytes its tasks wrote and, per job, its stages' task counts and its
+duration. The last line is one summary over all those spans: the median
+jobs, wall time, driver gap and staged bytes per span.
 """
+import argparse
 import json
 import statistics
 import sys
@@ -29,7 +33,7 @@ def covered_ns(intervals):
     return total
 
 
-def main(path):
+def main(path, name):
     with open(path) as f:
         trace = json.load(f)
     spans = {s["id"]: s for s in trace["spans"]}
@@ -42,7 +46,7 @@ def main(path):
             span_id = spans[span_id]["parent"] if span_id in spans else 0
         return False
 
-    merges = sorted((s for s in trace["spans"] if s["name"] == "merge"), key=lambda s: s["start"])
+    merges = sorted((s for s in trace["spans"] if s["name"] == name), key=lambda s: s["start"])
     rows = []
     for n, m in enumerate(merges):
         jobs = sorted((j for j in trace["jobs"] if under(j["span"], m["id"])), key=lambda j: j["start"])
@@ -52,17 +56,21 @@ def main(path):
         widest = max((t for ts in tasks for t in ts), default=0)
         staged = sum(stages[s].get("output", 0) for j in jobs for s in j["stages"] if s in stages)
         rows.append((len(jobs), wall, gap, staged))
-        print(f"merge {n}: {wall:.3f} s, {len(jobs)} jobs, widest stage {widest} tasks, "
+        print(f"{name} {n}: {wall:.3f} s, {len(jobs)} jobs, widest stage {widest} tasks, "
               f"driver gap {gap:.3f} s, staged {staged} bytes")
         for j, ts in zip(jobs, tasks):
             print(f"  job {j['job']:4d}  stages {ts}  {(j['end'] - j['start']) / 1e9:.3f} s")
     if rows:
         med = [statistics.median(c) for c in zip(*rows)]
-        print(f"summary: {len(rows)} merges, median {med[0]:g} jobs, {med[1]:.3f} s wall, "
-              f"{med[2]:.3f} s driver gap, {med[3]:.0f} bytes staged per merge")
+        print(f"summary: {len(rows)} {name} spans, median {med[0]:g} jobs, {med[1]:.3f} s wall, "
+              f"{med[2]:.3f} s driver gap, {med[3]:.0f} bytes staged per span")
+    else:
+        sys.exit(f"no span named {name!r} in {path}")
 
 
 if __name__ == "__main__":
-    if len(sys.argv) != 2:
-        sys.exit(__doc__)
-    main(sys.argv[1])
+    ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
+    ap.add_argument("spans", help="a traced run's *-spans.json")
+    ap.add_argument("--span", default="merge", help="span name to list (default: merge)")
+    args = ap.parse_args()
+    main(args.spans, args.span)
