@@ -221,18 +221,18 @@ object Scale10x {
       val planted = ManifestStore.stage(
         docs, root, ManifestStore.MAIN, Seq("fid"), ManifestStore.Replace)
       val tp = System.nanoTime()
-      ManifestStore.commit(spark, root, Seq(planted))
+      ManifestStore.commit(root, Seq(planted))
       val plantSecs = (System.nanoTime() - tp) / 1e9
       val churn = docs.filter(col("fid") === 0).limit(100)
         .withColumn("doc_id", col("doc_id") + lit(2000000000L))
         .localCheckpoint(true)
       // warm the commit path (the stage write, the footer reader classes)
-      ManifestStore.commit(spark, root, Seq(ManifestStore.stage(
+      ManifestStore.commit(root, Seq(ManifestStore.stage(
         churn, root, ManifestStore.MAIN, Seq("fid"), ManifestStore.Append)))
       val staged = ManifestStore.stage(
         churn, root, ManifestStore.MAIN, Seq("fid"), ManifestStore.Append)
       val t0 = System.nanoTime()
-      ManifestStore.commit(spark, root, Seq(staged))
+      ManifestStore.commit(root, Seq(staged))
       val commitSecs = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val cur = ManifestStore.snapshot(spark, root)

@@ -273,7 +273,7 @@ object StorageQueries2 extends graft.QueryFamily {
       // one task). 2,000 rows per row group keeps the file
       // multi-group whatever its payloads weigh (10 groups at 500
       // documents, 100 at 5,000); a byte-sized block did not.
-      ManifestStore.commit(s, path, Seq(ManifestStore.stage(
+      ManifestStore.commit(path, Seq(ManifestStore.stage(
         wide.repartition(1).sortWithinPartitions("doc_id"),
         path, ManifestStore.MAIN, Seq.empty, ManifestStore.Replace,
         writerOptions = Map(

@@ -273,16 +273,8 @@ object StreamQueries extends graft.QueryFamily {
     * the pair log is append-only and dense (two longs per row).
     */
   private val neardupMaintain: Q = (s, dir) => {
+    import graft.streaming.{Fold, StreamMinhashDedup}
     val docs = Tables(s, dir).documents
-    val state = graft.streaming.StreamMinhashDedup.newState(s)
-    val parts = (0 until 4).map(i =>
-      graft.streaming.StreamMinhashDedup
-        .ingest(state, docs.filter(pmod(col("doc_id"), lit(4)) === i), i.toLong)
-    )
-    val reinserted = graft.streaming.StreamMinhashDedup
-      .ingest(state, docs.filter(pmod(col("doc_id"), lit(34)) === 3), 4L)
-    val pairs = (parts :+ reinserted).reduce(_ unionByName _)
-    state.close()
     val log = docs
       .select(col("doc_id"), lit("I").as("op"), lit(0L).as("ts"),
         col("doc_id").as("seq"))
@@ -297,9 +289,13 @@ object StreamQueries extends graft.QueryFamily {
     val live = graft.cdc.Materializer
       .materialize(log, keyCol = "doc_id")
       .select("doc_id")
-    pairs
-      .join(live.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_semi")
-      .join(live.withColumnRenamed("doc_id", "id_b"), Seq("id_b"), "left_semi")
+    val state = StreamMinhashDedup.newState(s)
+    val reinsert = docs.filter(pmod(col("doc_id"), lit(34)) === 3)
+    Fold.replay(Fold.byMod(docs, col("doc_id"), 4) :+ reinsert, state)(
+      (b, i) => StreamMinhashDedup.ingest(state, b, i.toLong))(
+      state.pairs
+        .join(live.withColumnRenamed("doc_id", "id_a"), Seq("id_a"), "left_semi")
+        .join(live.withColumnRenamed("doc_id", "id_b"), Seq("id_b"), "left_semi"))
       .orderBy("id_a", "id_b")
   }
 

@@ -180,7 +180,7 @@ object IvfStore {
   ): Unit = {
     val spark = embeddings.sparkSession
     if (!indexed) {
-      ManifestStore.commit(spark, path, Seq(
+      ManifestStore.commit(path, Seq(
         ManifestStore.stage(assign(embeddings, cents), path, STORE,
           Seq("cell"), ManifestStore.Replace)
       ))
@@ -190,7 +190,7 @@ object IvfStore {
       import spark.implicits._
       // store + sidecar + routing modulus appear TOGETHER or not at
       // all — the single-commit contract from the first version on
-      ManifestStore.commit(spark, path, Seq(
+      ManifestStore.commit(path, Seq(
         ManifestStore.stage(assigned, path, STORE, Seq("cell"),
           ManifestStore.Replace),
         ManifestStore.stage(
@@ -360,7 +360,7 @@ object IvfStore {
         idxFrame.map(f =>
           ManifestStore.stage(f, path, INDEX, Seq("ibucket"),
             ManifestStore.Upsert))
-    ManifestStore.commit(spark, path, staged, expectedVersion = baseVersion)
+    ManifestStore.commit(path, staged, expectedVersion = baseVersion)
     org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(storeFrame)
     idxFrame.foreach(
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(_))

@@ -111,7 +111,7 @@ object Compaction {
       .option("maxRecordsPerFile", 0L)
       .mode("overwrite")
       .parquet(staging)
-    ManifestStore.commit(spark, path, Seq(ManifestStore.Staged(
+    ManifestStore.commit(path, Seq(ManifestStore.Staged(
       ManifestStore.MAIN,
       staging,
       Seq(partitionCol),

@@ -112,7 +112,7 @@ object DeletionVectors {
       ids: DataFrame
   ): Long = {
     val seq = nextSeq(spark, root)
-    ManifestStore.commit(spark, root, Seq(
+    ManifestStore.commit(root, Seq(
       stageRecords(ids.select(col(idCol), lit(seq).as(SEQ_COL)),
         root, table, idCol)),
       expectedVersion = seq - 1)
@@ -310,7 +310,7 @@ object DeletionVectors {
     val snap = ManifestStore.snapshot(spark, root)
     val dvName = dvTable(table)
     require(snap.hasTable(dvName), s"no deletion vector for '$table'")
-    ManifestStore.commit(spark, root, Seq(
+    ManifestStore.commit(root, Seq(
       ManifestStore.stage(
         winning(snap.read(dvName), idCol).coalesce(1).sortWithinPartitions(idCol),
         root, dvName, Seq.empty, ManifestStore.Replace)),
@@ -353,7 +353,7 @@ object DeletionVectors {
       applyTo(snap.readEntries(st, files, fileSeq = true),
         broadcast(dv.records), idCol)
     if (st.partitionCols.isEmpty)
-      ManifestStore.commit(spark, root, Seq(
+      ManifestStore.commit(root, Seq(
         ManifestStore.stage(kept(st.partitions.values.flatMap(_.files).toSeq),
           root, table, Seq.empty, ManifestStore.Replace),
         dvStage
@@ -365,7 +365,7 @@ object DeletionVectors {
       }
       if (touched.isEmpty)
         // nothing to rewrite — still clear the vector (it kills nothing)
-        ManifestStore.commit(spark, root, Seq(dvStage),
+        ManifestStore.commit(root, Seq(dvStage),
           expectedVersion = snap.version)
       else
         // EVERY touched partition is first dropped, then re-added by
@@ -380,7 +380,7 @@ object DeletionVectors {
         // UNTOUCHED entry already holds — Append merges the files into
         // that entry, where Upsert's whole-entry replace would silently
         // drop the untouched files
-        ManifestStore.commit(spark, root, Seq(
+        ManifestStore.commit(root, Seq(
           ManifestStore.stage(kept(touched.values.flatMap(_.files).toSeq),
             root, table, st.partitionCols, ManifestStore.Append)
             .copy(drops = touched.keys.toSeq.sorted),

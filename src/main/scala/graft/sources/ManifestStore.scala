@@ -1250,7 +1250,6 @@ object ManifestStore {
     * create-new commit point backstops the check across processes.
     */
   def commit(
-      spark: SparkSession,
       root: String,
       staged: Seq[Staged],
       expectedVersion: Long = ANY_VERSION
@@ -1327,7 +1326,7 @@ object ManifestStore {
     else {
       val keys = old.keys.toSeq.sorted
       val df = snap.readPartitionKeys(table, keys)
-      commit(spark, root, Seq(
+      commit(root, Seq(
         stage(df, root, table, st.partitionCols, Append)
           .copy(drops = keys)),
         expectedVersion = snap.version)
@@ -1434,7 +1433,6 @@ object ManifestStore {
     * redelivery re-stages from the fresh version.
     */
   def commitBatch(
-      spark: SparkSession,
       root: String,
       staged: Seq[Staged],
       sinkId: String,
@@ -2161,7 +2159,7 @@ object ManifestStore {
       partitionCols: Seq[String],
       table: String = MAIN
   ): Long =
-    commit(df.sparkSession, root,
+    commit(root,
       Seq(stage(df, root, table, partitionCols, Replace)))
 
   def upsertPartitions(
@@ -2170,7 +2168,7 @@ object ManifestStore {
       partitionCols: Seq[String],
       table: String = MAIN
   ): Long =
-    commit(batch.sparkSession, root,
+    commit(root,
       Seq(stage(batch, root, table, partitionCols, Upsert)))
 
   def append(
@@ -2179,7 +2177,7 @@ object ManifestStore {
       partitionCols: Seq[String],
       table: String = MAIN
   ): Long =
-    commit(batch.sparkSession, root,
+    commit(root,
       Seq(stage(batch, root, table, partitionCols, Append)))
 
   def read(spark: SparkSession, root: String, table: String = MAIN): DataFrame =

@@ -139,7 +139,7 @@ object MergeInto {
         else Seq(DeletionVectors.stageRecords(
           DeletionVectors.localRecords(spark, idCol, seq, killed),
           root, table, idCol))
-      ManifestStore.commitBatch(spark, root, dataStages ++ dvStages,
+      ManifestStore.commitBatch(root, dataStages ++ dvStages,
         sinkId, batchId, expectedVersion = snap.version)
     } finally
       org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(net)

@@ -26,28 +26,21 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 object CdcStream {
 
   /** Strategy 1: foreachBatch upsert. Returns the query plus a state
-    * handle that always holds the current materialized table.
+    * slot that always holds the current materialized table; it starts
+    * at `initial`, which stays the caller's.
     */
-  final class StateHandle(@volatile var state: DataFrame)
-
   def upsertQuery(
       events: Dataset[ChangeEvent],
       initial: DataFrame,
       checkpoint: String
-  ): (StreamingQuery, StateHandle) = {
-    val handle = new StateHandle(initial)
+  ): (StreamingQuery, Fold.Slot) = {
+    val handle = new Fold.Slot(initial)
     val q = events.writeStream
       .outputMode(OutputMode.Update())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[ChangeEvent], _: Long) =>
         // reduce the batch to its per-key winners, then merge into state
-        val merged = Materializer.merge(handle.state, batch.toDF())
-        // materialize eagerly so the handle is stable across batches,
-        // then release the superseded state's checkpoint blocks — a
-        // long-running stream otherwise strands one block set per batch
-        val prev = handle.state
-        handle.state = merged.localCheckpoint(true)
-        org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(prev)
+        handle.set(Materializer.merge(handle.value, batch.toDF()))
         ()
       }
       .start()
@@ -104,9 +97,9 @@ object CdcStream {
       .start()
 
   /** Serving view over a foreachBatch state handle. */
-  def asMessages(spark: SparkSession, handle: StateHandle): Dataset[Message] = {
+  def asMessages(spark: SparkSession, handle: Fold.Slot): Dataset[Message] = {
     import spark.implicits._
-    handle.state
+    handle.value
       .select(col("id").cast("long"), col("content").cast("string"))
       .as[Message]
   }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftSqlShims
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
@@ -40,7 +39,7 @@ object StreamAggMaintain {
 
   private def dec(c: Column): Column = c.cast(DecimalType(18, 2))
 
-  final class State(spark: SparkSession) {
+  final class State(spark: SparkSession) extends Fold.State {
     private val keySchema = StructType(Seq(
       StructField("id", LongType),
       StructField("op", StringType),
@@ -55,36 +54,18 @@ object StreamAggMaintain {
       StructField("sum_dec", DecimalType(28, 2))
     ))
 
-    private def empty(schema: StructType): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-    @volatile private[streaming] var keyState: DataFrame = empty(keySchema)
-    @volatile private[streaming] var aggState: DataFrame = empty(aggSchema)
+    private[streaming] val keyState = slot(Fold.empty(spark, keySchema))
+    private[streaming] val aggState = slot(Fold.empty(spark, aggSchema))
 
     /** The maintained view (live groups only, double-rendered sum). */
     def aggregate: DataFrame =
-      aggState
+      aggState.value
         .filter(col("n_rows") > 0)
         .select(
           col("content"),
           col("n_rows"),
           col("sum_dec").cast("double").as("sum_value")
         )
-
-    private[streaming] def swap(newKey: DataFrame, newAgg: DataFrame): Unit = {
-      val oldK = keyState
-      val oldA = aggState
-      keyState = newKey.localCheckpoint(true)
-      aggState = newAgg.localCheckpoint(true)
-      GraftSqlShims.unpersistCheckpoint(oldK)
-      GraftSqlShims.unpersistCheckpoint(oldA)
-    }
-
-    private[streaming] def close(): Unit = {
-      GraftSqlShims.unpersistCheckpoint(keyState)
-      GraftSqlShims.unpersistCheckpoint(aggState)
-    }
   }
 
   def newState(spark: SparkSession): State = new State(spark)
@@ -100,7 +81,7 @@ object StreamAggMaintain {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-    val prev = state.keyState.select(
+    val prev = state.keyState.value.select(
       col("id"),
       col("op").as("prev_op"),
       col("content").as("prev_content"),
@@ -146,7 +127,7 @@ object StreamAggMaintain {
         col("d.dn").as("n_rows"),
         col("d.dv").cast(DecimalType(28, 2)).as("sum_dec")
       )
-    val newAgg = state.aggState
+    val newAgg = state.aggState.value
       .unionByName(deltas)
       .groupBy(col("content"))
       .agg(
@@ -156,10 +137,10 @@ object StreamAggMaintain {
       .filter(col("n_rows") =!= 0)
     val acceptedKeys = accepted
       .select("id", "op", "content", "value", "ts", "seq")
-    val newKey = state.keyState
+    val newKey = state.keyState.value
       .join(acceptedKeys.select("id"), Seq("id"), "left_anti")
       .unionByName(acceptedKeys)
-    state.swap(newKey, newAgg)
+    Fold.set(state.keyState -> newKey, state.aggState -> newAgg)
     state.aggregate
   }
 
@@ -186,26 +167,18 @@ object StreamAggMaintain {
   /** Deterministic replay of a change log in `splits` micro-batches
     * sliced by `seq mod splits` — a key's events SPREAD across
     * batches, so the cross-batch retract path is genuinely exercised
-    * (id-sliced batches would keep each key whole). `ordered = false`
-    * reverses the slice order, delivering many events after newer
-    * ones for their key — the adversarial order for the late-arrival
-    * gate.
+    * (id-sliced batches would keep each key whole).
     */
-  def replay(log: DataFrame, splits: Int = 4, ordered: Boolean = true): DataFrame = {
-    val spark = log.sparkSession
-    val state = newState(spark)
-    val idx = if (ordered) 0 until splits else (0 until splits).reverse
-    idx.foreach { i =>
-      ingest(state, log.filter(pmod(col("seq"), lit(splits)) === i))
-    }
-    val out = state.aggregate.orderBy("content")
-    // materialize before releasing the state blocks the view reads
-    val rows = out.collect()
-    state.close()
-    val spark2 = spark
-    import spark2.implicits._
-    rows.toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .toDF("content", "n_rows", "sum_value")
+  def replay(log: DataFrame, splits: Int = 4): DataFrame =
+    replay(Fold.byMod(log, col("seq"), splits))
+
+  /** Replay `batches` in the order given; a reversed slicing delivers
+    * many events after newer ones for their key — the adversarial
+    * order for the late-arrival gate.
+    */
+  def replay(batches: Seq[DataFrame]): DataFrame = {
+    val state = newState(batches.head.sparkSession)
+    Fold.replay(batches, state)((b, _) => ingest(state, b))(
+      state.aggregate.orderBy("content"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Streaming uniform sampling by bottom-k hash order — the sample a
@@ -30,51 +31,29 @@ object StreamBottomK {
     */
   private[graft] val SEED = 1223
 
-  final class State(private[streaming] val spark: SparkSession) {
-    @volatile private[streaming] var kept: Option[DataFrame] = None
+  /** The kept set: (source, doc_id, h), at most k rows per source. */
+  type State = Fold.Slot
 
-    private[streaming] def fold(batch: DataFrame, k: Long): Unit = {
-      import org.apache.spark.sql.expressions.Window
-      val merged = kept match {
-        case None      => batch
-        case Some(cur) => cur.unionByName(batch)
-      }
-      val w = Window
-        .partitionBy(col("source"))
-        .orderBy(col("h").asc, col("doc_id").asc)
-      val next = merged
-        .withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") <= k)
-        .drop("__rn")
-        .localCheckpoint(true)
-      kept.foreach(
-        org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(_)
-      )
-      kept = Some(next)
-    }
-
-    def close(): Unit = {
-      kept.foreach(
-        org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(_)
-      )
-      kept = None
-    }
-  }
-
-  def newState(spark: SparkSession): State = new State(spark)
+  def newState(spark: SparkSession): State = new Fold.Slot
 
   /** Fold one micro-batch of (source, doc_id) into the sample. */
-  def ingest(state: State, batch: DataFrame, k: Long = SAMPLE_K): Unit =
-    state.fold(
-      batch.select(
-        col("source"),
-        col("doc_id"),
-        graft.functions.PortableHash
-          .h32(col("doc_id").cast("string"), SEED)
-          .as("h")
-      ),
-      k
+  def ingest(state: State, batch: DataFrame, k: Long = SAMPLE_K): Unit = {
+    val hashed = batch.select(
+      col("source"),
+      col("doc_id"),
+      graft.functions.PortableHash
+        .h32(col("doc_id").cast("string"), SEED)
+        .as("h")
     )
+    val w = Window
+      .partitionBy(col("source"))
+      .orderBy(col("h").asc, col("doc_id").asc)
+    state.set(
+      state.get.fold(hashed)(_.unionByName(hashed))
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") <= k)
+        .drop("__rn"))
+  }
 
   /** The serving read: per source, the sample size, its hash span,
     * the order-free Σh fingerprint, and the KMV distinct estimate
@@ -84,7 +63,7 @@ object StreamBottomK {
     * applies once the k-th minimum is a real order statistic.
     */
   def serve(state: State, k: Long = SAMPLE_K): DataFrame =
-    state.kept.get
+    state.value
       .groupBy(col("source"))
       .agg(
         count(lit(1)).as("n_kept"),
@@ -102,19 +81,12 @@ object StreamBottomK {
   /** Deterministic replay in `splits` doc_id-sliced micro-batches;
     * must equal the batch bottom-k for ANY `splits` and any order.
     */
-  def replay(
-      docs: DataFrame,
-      splits: Int = 5,
-      reversed: Boolean = false
-  ): DataFrame = {
-    val spark = docs.sparkSession
-    val state = newState(spark)
-    val order = if (reversed) (splits - 1) to 0 by -1 else 0 until splits
-    order.foreach { i =>
-      ingest(state, docs.filter(pmod(col("doc_id"), lit(splits)) === i))
-    }
-    val out = serve(state).localCheckpoint(true)
-    state.close()
-    out
+  def replay(docs: DataFrame, splits: Int = 5): DataFrame =
+    replay(Fold.byMod(docs, col("doc_id"), splits))
+
+  /** Replay `batches` in the order given. */
+  def replay(batches: Seq[DataFrame]): DataFrame = {
+    val state = newState(batches.head.sparkSession)
+    Fold.replay(batches, state)((b, _) => ingest(state, b))(serve(state))
   }
 }

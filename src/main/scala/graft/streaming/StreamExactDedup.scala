@@ -43,42 +43,27 @@ object StreamExactDedup {
       .dropDuplicatesWithinWatermark("fp")
 
   /** Deterministic batch-mode replay of the ingest (the oracle-checked
-    * face of [[dedup]], same device as StreamMinhashDedup.replay):
-    * slice `docs` into `nBatches` contiguous doc_id ranges — arrival
-    * order follows doc_id — and apply the operator's exact semantics
-    * per micro-batch: collapse within-batch duplicates to the first
-    * arrival (the min doc_id — what a single-partition stream would
-    * do; done explicitly because the state op's within-batch pick is
-    * partition-order-dependent), then anti-join the seen-fingerprint
-    * state, emit survivors, append their fingerprints to state.
-    * Survivors are therefore exactly `min(doc_id) per fingerprint` —
-    * the batch dedup01 identity — for ANY slicing, which is what the
-    * oracle pins.
+    * face of [[dedup]]): slice `docs` into `nBatches` equal doc_id
+    * ranges — arrival order follows doc_id — and apply the operator's
+    * exact semantics per micro-batch: collapse within-batch duplicates
+    * to the first arrival (the min doc_id — what a single-partition
+    * stream would do; done explicitly because the state op's
+    * within-batch pick is partition-order-dependent), then anti-join
+    * the survivors so far on the fingerprint and append the batch's
+    * own. Survivors are therefore exactly `min(doc_id) per
+    * fingerprint` — the batch dedup01 identity — for ANY slicing,
+    * which is what the oracle pins.
     */
   def replay(docs: DataFrame, nBatches: Int = 5): DataFrame = {
     val withFp = docs.select(col("doc_id"), fingerprint(col("text")).as("fp"))
-    // empty input: max() is one NULL row, not zero rows — return the
-    // empty result instead of NPEing on getLong (the heaps discipline)
-    val maxRow = withFp.agg(max(col("doc_id"))).collect()(0)
-    if (maxRow.isNullAt(0)) return withFp.limit(0)
-    val maxId = maxRow.getLong(0)
-    val width = maxId / nBatches + 1L
-    var seen: DataFrame = null
-    var out: DataFrame = null
-    (0 until nBatches).foreach { i =>
-      val batch = withFp.filter(col("doc_id") >= i * width && col("doc_id") < (i + 1L) * width)
-      val firstInBatch =
-        batch.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
-      val survivors =
-        (if (seen == null) firstInBatch
-         else firstInBatch.join(seen, Seq("fp"), "left_anti"))
-          .select(col("doc_id"), col("fp"))
-          .localCheckpoint(true)
-      out = if (out == null) survivors else out.unionByName(survivors)
-      seen =
-        if (seen == null) survivors.select("fp")
-        else seen.unionByName(survivors.select("fp"))
-    }
-    out
+    val survivors = new Fold.Slot
+    Fold.replay(Fold.byRange(withFp, col("doc_id"), nBatches), survivors) { (batch, _) =>
+      val firstInBatch = batch
+        .groupBy(col("fp"))
+        .agg(min(col("doc_id")).as("doc_id"))
+        .select(col("doc_id"), col("fp"))
+      survivors.set(survivors.get.fold(firstInBatch)(seen =>
+        seen.unionByName(firstInBatch.join(seen, Seq("fp"), "left_anti"))))
+    }(survivors.value)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftSqlShims
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
 
@@ -90,23 +89,11 @@ object StreamFunnel {
     StructField("stage_ts_us", LongType)
   ))
 
-  final class State(spark: SparkSession) {
-    @volatile private[streaming] var frame: DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
+  /** Per-user machines: (user_id, stage, stage_ts_us). */
+  type State = Fold.Slot
 
-    private[streaming] def swap(next: DataFrame): Unit = {
-      val old = frame
-      frame = next.localCheckpoint(true)
-      GraftSqlShims.unpersistCheckpoint(old)
-    }
-
-    private[streaming] def close(): Unit = {
-      GraftSqlShims.unpersistCheckpoint(frame)
-    }
-  }
-
-  def newState(spark: SparkSession): State = new State(spark)
+  def newState(spark: SparkSession): State =
+    new Fold.Slot(Fold.empty(spark, stateSchema))
 
   /** Apply one micro-batch of `(user_id, ts_us, event_type)` rows.
     * The machine advances one stage per round; [[STAGES]] rounds make
@@ -115,11 +102,11 @@ object StreamFunnel {
     */
   def ingest(state: State, batch: DataFrame): Unit = {
     val users = batch.select(col("user_id")).distinct()
-    var st = state.frame
+    var st = state.value
       .unionByName(
         // open a stage-0 machine for first-seen users
         users
-          .join(state.frame.select("user_id"), Seq("user_id"), "left_anti")
+          .join(state.value.select("user_id"), Seq("user_id"), "left_anti")
           .select(
             col("user_id"),
             lit(0).as("stage"),
@@ -151,7 +138,7 @@ object StreamFunnel {
             .otherwise(col("stage_ts_us")).as("stage_ts_us")
         )
     }
-    state.swap(st)
+    state.set(st)
   }
 
   /** Funnel counts from a state frame — q64's output shape. */
@@ -180,31 +167,13 @@ object StreamFunnel {
     * must equal batch q64 for ANY `splits` (pinned in spec + gate).
     */
   def replay(events: DataFrame, splits: Int = 4): DataFrame = {
-    val spark = events.sparkSession
     val ev = events.select(
       col("user_id"),
       unix_micros(col("ts")).as("ts_us"),
       col("event_type")
     )
-    val Array(lo, hi) = ev
-      .agg(min(col("ts_us")), max(col("ts_us")))
-      .head() match {
-      case r if r.isNullAt(0) => Array(0L, 0L)
-      case r                  => Array(r.getLong(0), r.getLong(1))
-    }
-    val span = hi - lo + 1
-    val state = newState(spark)
-    (0 until splits).foreach { i =>
-      val b0 = lo + span * i / splits
-      val b1 = lo + span * (i + 1) / splits
-      ingest(state, ev.filter(col("ts_us") >= b0 && col("ts_us") < b1))
-    }
-    val out = summarize(state.frame)
-    val rows = out.collect() // materialize before releasing state blocks
-    state.close()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq),
-      out.schema
-    )
+    val state = newState(events.sparkSession)
+    Fold.replay(Fold.byRange(ev, col("ts_us"), splits), state)(
+      (b, _) => ingest(state, b))(summarize(state.value))
   }
 }

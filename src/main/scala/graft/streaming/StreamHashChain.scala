@@ -39,22 +39,11 @@ object StreamHashChain {
     StructField("tail", StringType)
   ))
 
-  final class State(spark: SparkSession) {
-    @volatile private[streaming] var chains: DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], chainSchema)
+  /** Per-key chains: (id, n_ops, tail). */
+  type State = Fold.Slot
 
-    private[streaming] def swap(c: DataFrame): Unit = {
-      val old = chains
-      chains = c.localCheckpoint(true)
-      GraftSqlShims.unpersistCheckpoint(old)
-    }
-
-    private[streaming] def close(): Unit =
-      GraftSqlShims.unpersistCheckpoint(chains)
-  }
-
-  def newState(spark: SparkSession): State = new State(spark)
+  def newState(spark: SparkSession): State =
+    new Fold.Slot(Fold.empty(spark, chainSchema))
 
   /** Apply one micro-batch of change-log rows (op, id, content, ts,
     * seq): extend each touched key's chain tail and op count; keys
@@ -78,7 +67,7 @@ object StreamHashChain {
       )
       .localCheckpoint(true)
     val folded = g
-      .join(state.chains, Seq("id"), "left")
+      .join(state.value, Seq("id"), "left")
       .select(
         col("id"),
         (coalesce(col("n_ops"), lit(0L)) + col("b_ops")).as("n_ops"),
@@ -86,9 +75,9 @@ object StreamHashChain {
           .chainFold(col("ops"), coalesce(col("tail"), lit("")))
           .as("tail")
       )
-    val untouched = state.chains
+    val untouched = state.value
       .join(g.select("id"), Seq("id"), "left_anti")
-    state.swap(untouched.unionByName(folded))
+    state.set(untouched.unionByName(folded))
     GraftSqlShims.unpersistCheckpoint(g)
   }
 
@@ -107,27 +96,8 @@ object StreamHashChain {
     * maintained chains must equal batch cdc17 for ANY `splits`.
     */
   def replay(changeLog: DataFrame, splits: Int = 5): DataFrame = {
-    val spark = changeLog.sparkSession
-    val ev = changeLog.withColumn("__ts_us", unix_micros(col("ts")))
-    val Array(lo, hi) = ev.agg(min(col("__ts_us")), max(col("__ts_us")))
-      .head() match {
-      case r if r.isNullAt(0) => Array(0L, 0L)
-      case r                  => Array(r.getLong(0), r.getLong(1))
-    }
-    val span = hi - lo + 1
-    val state = newState(spark)
-    (0 until splits).foreach { i =>
-      val b0 = lo + span * i / splits
-      val b1 = lo + span * (i + 1) / splits
-      // NULL-ts rows ride the first batch (coalesce to lo) so replay
-      // ingests exactly the rows batch cdc17 sees — a null-hostile
-      // range filter would silently drop them from every slice.
-      val k = coalesce(col("__ts_us"), lit(lo))
-      ingest(state, ev.filter(k >= b0 && k < b1))
-    }
-    val out = summarize(state.chains).orderBy("id")
-    val rows = out.collect()
-    state.close()
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq), out.schema)
+    val state = newState(changeLog.sparkSession)
+    Fold.replay(Fold.byRange(changeLog, unix_micros(col("ts")), splits), state)(
+      (b, _) => ingest(state, b))(summarize(state.value).orderBy("id"))
   }
 }

@@ -25,38 +25,19 @@ import org.apache.spark.sql.functions._
   */
 object StreamHdrQuantiles {
 
-  final class State(private[streaming] val spark: SparkSession) {
-    @volatile private[streaming] var counts: Option[DataFrame] = None
+  /** The sketch: (groupCols, bucket, pw, cnt). */
+  type State = Fold.Slot
 
-    private[streaming] def merge(batchCounts: DataFrame, groupCols: Seq[String]): Unit = {
-      val merged = counts match {
-        case None => batchCounts
-        case Some(cur) =>
-          cur
-            .unionByName(batchCounts)
-            .groupBy((groupCols ++ Seq("bucket", "pw")).map(col): _*)
-            .agg(sum(col("cnt")).as("cnt"))
-      }
-      val next = merged.localCheckpoint(true)
-      counts.foreach(
-        org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(_)
-      )
-      counts = Some(next)
-    }
-
-    def close(): Unit = {
-      counts.foreach(
-        org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(_)
-      )
-      counts = None
-    }
-  }
-
-  def newState(spark: SparkSession): State = new State(spark)
+  def newState(spark: SparkSession): State = new Fold.Slot
 
   /** Fold one micro-batch (groupCols + BIGINT `v`) into the sketch. */
-  def ingest(state: State, batch: DataFrame, groupCols: Seq[String]): Unit =
-    state.merge(graft.ops.Relational10.hdrBucketCounts(batch, groupCols), groupCols)
+  def ingest(state: State, batch: DataFrame, groupCols: Seq[String]): Unit = {
+    val counts = graft.ops.Relational10.hdrBucketCounts(batch, groupCols)
+    state.set(state.get.fold(counts)(
+      _.unionByName(counts)
+        .groupBy((groupCols ++ Seq("bucket", "pw")).map(col): _*)
+        .agg(sum(col("cnt")).as("cnt"))))
+  }
 
   /** Deterministic replay sliced by `sliceCol` mod `slices`; returns
     * the (group, p, r, est) quantile read over the final sketch.
@@ -68,18 +49,10 @@ object StreamHdrQuantiles {
       slices: Int = 5
   ): DataFrame = {
     val state = newState(values.sparkSession)
-    (0 until slices).foreach { i =>
-      ingest(
-        state,
-        values.filter(pmod(col(sliceCol), lit(slices)) === i).drop(sliceCol),
-        groupCols
-      )
-    }
-    val read = graft.ops.Relational10
-      .hdrTargets(state.counts.get, groupCols)
-      .select((groupCols ++ Seq("p", "r", "est")).map(col): _*)
-      .localCheckpoint(true)
-    state.close()
-    read
+    Fold.replay(Fold.byMod(values, col(sliceCol), slices), state)(
+      (b, _) => ingest(state, b.drop(sliceCol), groupCols))(
+      graft.ops.Relational10
+        .hdrTargets(state.value, groupCols)
+        .select((groupCols ++ Seq("p", "r", "est")).map(col): _*))
   }
 }

@@ -45,7 +45,7 @@ import org.apache.spark.sql.types._
   */
 object StreamJoinMaintain {
 
-  final class State(spark: SparkSession) {
+  final class State(spark: SparkSession) extends Fold.State {
     private val keySchema = StructType(Seq(
       StructField("id", LongType),
       StructField("op", StringType),
@@ -65,13 +65,9 @@ object StreamJoinMaintain {
       StructField("group_n", LongType)
     ))
 
-    private def empty(schema: StructType): DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-    @volatile private[streaming] var keyState: DataFrame = empty(keySchema)
-    @volatile private[streaming] var countState: DataFrame = empty(countSchema)
-    @volatile private[streaming] var viewState: DataFrame = empty(viewSchema)
+    private[streaming] val keyState = slot(Fold.empty(spark, keySchema))
+    private[streaming] val countState = slot(Fold.empty(spark, countSchema))
+    private[streaming] val viewState = slot(Fold.empty(spark, viewSchema))
 
     /** Rows recomputed by the last batch (the delta-join's touched
       * set) — what a MERGE would write; the spec pins it against
@@ -80,23 +76,7 @@ object StreamJoinMaintain {
     @volatile var lastRewritten: Long = 0L
 
     /** The maintained join view (live rows only). */
-    def view: DataFrame = viewState
-
-    private[streaming] def swap(
-        newKey: DataFrame,
-        newCount: DataFrame,
-        newView: DataFrame
-    ): Unit = {
-      val old = Seq(keyState, countState, viewState)
-      keyState = newKey.localCheckpoint(true)
-      countState = newCount.localCheckpoint(true)
-      viewState = newView.localCheckpoint(true)
-      old.foreach(GraftSqlShims.unpersistCheckpoint(_))
-    }
-
-    private[streaming] def close(): Unit =
-      Seq(keyState, countState, viewState)
-        .foreach(GraftSqlShims.unpersistCheckpoint(_))
+    def view: DataFrame = viewState.value
   }
 
   def newState(spark: SparkSession): State = new State(spark)
@@ -111,7 +91,7 @@ object StreamJoinMaintain {
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__rn")
-    val prev = state.keyState.select(
+    val prev = state.keyState.value.select(
       col("id"),
       col("op").as("prev_op"),
       col("content").as("prev_content"),
@@ -146,7 +126,7 @@ object StreamJoinMaintain {
       .filter(col("d").isNotNull)
       .groupBy(col("d.content").as("content"))
       .agg(sum(col("d.dn")).as("dn"))
-    val newCount = state.countState
+    val newCount = state.countState.value
       .join(deltas, Seq("content"), "full_outer")
       .select(
         col("content"),
@@ -158,7 +138,7 @@ object StreamJoinMaintain {
     // its group_n rewritten even if the row itself didn't change
     val changed = deltas.filter(col("dn") =!= 0).select("content")
     val acceptedKeys = accepted.select("id", "op", "content", "value", "ts", "seq")
-    val newKey = state.keyState
+    val newKey = state.keyState.value
       .join(acceptedKeys.select("id"), Seq("id"), "left_anti")
       .unionByName(acceptedKeys)
     val liveNew = newKey
@@ -167,9 +147,9 @@ object StreamJoinMaintain {
     // rewrite set = accepted keys ∪ members of changed groups,
     // recomputed from (live state ⋈ new counts); the complement is
     // carried over verbatim — the delta-join's touched-only discipline
-    // materialized ONCE (eager): the view swap reads it, and counting
+    // materialized ONCE (eager): the view update reads it, and counting
     // it afterwards must not re-derive lineage through state frames
-    // the swap has already unpersisted
+    // the set has already released
     val rewriteRows = liveNew
       .join(acceptedKeys.select("id"), Seq("id"), "left_semi")
       .unionByName(
@@ -180,11 +160,12 @@ object StreamJoinMaintain {
       .join(newCount, Seq("content"))
       .select("id", "content", "value", "group_n")
       .localCheckpoint(true)
-    val carried = state.viewState
+    val carried = state.viewState.value
       .join(acceptedKeys.select("id"), Seq("id"), "left_anti")
       .join(changed, Seq("content"), "left_anti")
     val newView = carried.unionByName(rewriteRows)
-    state.swap(newKey, newCount, newView)
+    Fold.set(state.keyState -> newKey, state.countState -> newCount,
+      state.viewState -> newView)
     state.lastRewritten = rewriteRows.count()
     Seq(accepted, rewriteRows).foreach(GraftSqlShims.unpersistCheckpoint(_))
     state.view
@@ -210,19 +191,15 @@ object StreamJoinMaintain {
   }
 
   /** Deterministic replay in `splits` seq-sliced micro-batches (a
-    * key's events spread across batches; `ordered = false` reverses
-    * the slice order — the adversarial case for the late-arrival
-    * gate).
+    * key's events spread across batches).
     */
-  def replay(log: DataFrame, splits: Int = 5, ordered: Boolean = true): DataFrame = {
-    val spark = log.sparkSession
-    val state = newState(spark)
-    val idx = if (ordered) 0 until splits else (0 until splits).reverse
-    idx.foreach { i =>
-      ingest(state, log.filter(pmod(col("seq"), lit(splits)) === i))
-    }
-    val out = state.view.localCheckpoint(true)
-    state.close()
-    out
+  def replay(log: DataFrame, splits: Int = 5): DataFrame =
+    replay(Fold.byMod(log, col("seq"), splits))
+
+  /** Replay `batches` in the order given (a reversed slicing is the
+    * adversarial case for the late-arrival gate). */
+  def replay(batches: Seq[DataFrame]): DataFrame = {
+    val state = newState(batches.head.sparkSession)
+    Fold.replay(batches, state)((b, _) => ingest(state, b))(state.view)
   }
 }

@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftSqlShims
 import org.apache.spark.sql.types._
 
 /** Streaming last-touch attribution — the live face of batch q104:
@@ -43,26 +42,9 @@ object StreamLastTouch {
     StructField("revenue_dec", DecimalType(18, 2))
   ))
 
-  final class State(spark: SparkSession) {
-    @volatile private[streaming] var touch: DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], touchSchema)
-    @volatile private[streaming] var totals: DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], totalsSchema)
-
-    private[streaming] def swap(t: DataFrame, tot: DataFrame): Unit = {
-      val (o1, o2) = (touch, totals)
-      touch = t.localCheckpoint(true)
-      totals = tot.localCheckpoint(true)
-      GraftSqlShims.unpersistCheckpoint(o1)
-      GraftSqlShims.unpersistCheckpoint(o2)
-    }
-
-    private[streaming] def close(): Unit = {
-      GraftSqlShims.unpersistCheckpoint(touch)
-      GraftSqlShims.unpersistCheckpoint(totals)
-    }
+  final class State(spark: SparkSession) extends Fold.State {
+    private[streaming] val touch = slot(Fold.empty(spark, touchSchema))
+    private[streaming] val totals = slot(Fold.empty(spark, totalsSchema))
   }
 
   def newState(spark: SparkSession): State = new State(spark)
@@ -90,7 +72,7 @@ object StreamLastTouch {
     // are time-ordered), so it wins when present
     val purchases = withBatchTouch
       .filter(col("event_type") === "purchase")
-      .join(state.touch, Seq("user_id"), "left")
+      .join(state.touch.value, Seq("user_id"), "left")
       .select(
         coalesce(col("bt_type"), col("s_type")).as("eff_type"),
         coalesce(col("bt_ts_us"), col("s_ts_us")).as("eff_ts_us"),
@@ -111,7 +93,7 @@ object StreamLastTouch {
         count(lit(1)).as("n_purchases"),
         sum(col("value").cast(DecimalType(18, 2))).as("revenue_dec")
       )
-    val newTotals = state.totals
+    val newTotals = state.totals.value
       .unionByName(delta)
       .groupBy(col("channel"))
       .agg(
@@ -131,10 +113,10 @@ object StreamLastTouch {
         col("event_type").as("s_type"),
         col("ts_us").as("s_ts_us")
       )
-    val newTouch = state.touch
+    val newTouch = state.touch.value
       .join(batchTouches.select("user_id"), Seq("user_id"), "left_anti")
       .unionByName(batchTouches)
-    state.swap(newTouch, newTotals)
+    Fold.set(state.touch -> newTouch, state.totals -> newTotals)
   }
 
   /** Channel totals in q104's exact output shape. */
@@ -149,7 +131,6 @@ object StreamLastTouch {
     * accumulated attribution must equal batch q104 for ANY `splits`.
     */
   def replay(events: DataFrame, splits: Int = 4): DataFrame = {
-    val spark = events.sparkSession
     val ev = events.select(
       col("user_id"),
       unix_micros(col("ts")).as("ts_us"),
@@ -157,25 +138,8 @@ object StreamLastTouch {
       col("event_type"),
       col("value")
     )
-    val Array(lo, hi) = ev
-      .agg(min(col("ts_us")), max(col("ts_us")))
-      .head() match {
-      case r if r.isNullAt(0) => Array(0L, 0L)
-      case r                  => Array(r.getLong(0), r.getLong(1))
-    }
-    val span = hi - lo + 1
-    val state = newState(spark)
-    (0 until splits).foreach { i =>
-      val b0 = lo + span * i / splits
-      val b1 = lo + span * (i + 1) / splits
-      ingest(state, ev.filter(col("ts_us") >= b0 && col("ts_us") < b1))
-    }
-    val out = summarize(state.totals).orderBy("channel")
-    val rows = out.collect()
-    state.close()
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq),
-      out.schema
-    )
+    val state = newState(events.sparkSession)
+    Fold.replay(Fold.byRange(ev, col("ts_us"), splits), state)(
+      (b, _) => ingest(state, b))(summarize(state.totals.value).orderBy("channel"))
   }
 }

@@ -92,15 +92,13 @@ object StreamLateQuarantine {
 
   /** Sink state of the live runner: quarantined rows, on-time hourly
     * counts, and the watermark clock. Read AFTER
-    * `processAllAvailable()` — mid-batch reads see a consistent
-    * PREVIOUS state (volatile swap), never a torn one.
+    * `processAllAvailable()` — mid-batch reads see the previous
+    * batch's slots or this one's, never released blocks.
     */
-  final class Handle(spark: SparkSession) {
+  final class Handle(spark: SparkSession) extends Fold.State {
     import spark.implicits._
-    @volatile var late: DataFrame =
-      Seq.empty[(Long, Long, Long)].toDF("event_id", "user_id", "ts_us")
-    @volatile var counts: DataFrame =
-      Seq.empty[(Long, Long)].toDF("hour_us", "n")
+    val late = slot(Seq.empty[(Long, Long, Long)].toDF("event_id", "user_id", "ts_us"))
+    val counts = slot(Seq.empty[(Long, Long)].toDF("hour_us", "n"))
     @volatile var maxSeenUs: Long = Long.MinValue
   }
 
@@ -133,7 +131,7 @@ object StreamLateQuarantine {
           else handle.maxSeenUs - DELAY_US
         val late = b.filter(col("ts_us") < wmUs)
         val onTime = b.filter(col("ts_us") >= wmUs)
-        val newCounts = handle.counts
+        val newCounts = handle.counts.value
           .unionByName(
             onTime.select(
               expr(s"(ts_us div ${3600L * 1000000}L) * ${3600L * 1000000}L")
@@ -143,19 +141,15 @@ object StreamLateQuarantine {
           )
           .groupBy(col("hour_us"))
           .agg(sum(col("n")).as("n"))
-          .localCheckpoint(true)
-        val newLate = handle.late.unionByName(late).localCheckpoint(true)
+        Fold.set(handle.counts -> newCounts,
+          handle.late -> handle.late.value.unionByName(late))
         val batchMax = b
           .agg(max(col("ts_us")).as("m"))
           .collect()(0)
-        val oldCounts = handle.counts
-        val oldLate = handle.late
-        handle.counts = newCounts
-        handle.late = newLate
         if (!batchMax.isNullAt(0))
           handle.maxSeenUs = math.max(handle.maxSeenUs, batchMax.getLong(0))
-        org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(oldCounts)
-        org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(oldLate)
+        // the batch's own checkpoint: both slots now hold their rows
+        org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(b)
         ()
       }
       .start()

@@ -48,7 +48,6 @@ object StreamManifestIngest {
     if (applied) false
     else
       ManifestStore.commitBatch(
-        spark,
         root,
         Seq(ManifestStore.stage(batch, root, ManifestStore.MAIN,
           Seq("source"), ManifestStore.Append)),
@@ -62,19 +61,18 @@ object StreamManifestIngest {
     * delivered twice (the crash-between-commit-and-checkpoint case
     * applied to each batch — harsher than any real failure schedule).
     * The store must read back as the plain corpus, and the manifest
-    * version must count only the first deliveries.
+    * version must count only the first deliveries. The store is the
+    * state; the returned readback is detached from its files.
     */
   def replay(docs: DataFrame, root: String, batches: Int = 4): DataFrame = {
     val slim = docs.select(
       col("doc_id"), col("source"),
       col("n_chars").cast("long").as("n_chars"))
-    (0 until batches).foreach { b =>
-      val slice = slim.filter(pmod(col("doc_id"), lit(batches)) === b)
+    Fold.replay(Fold.byMod(slim, col("doc_id"), batches)) { (slice, b) =>
       val first = applyBatch(slice, root, b.toLong)
       assert(first, s"first delivery of batch $b must publish")
       val second = applyBatch(slice, root, b.toLong)
       assert(!second, s"redelivery of batch $b must be recognized")
-    }
-    ManifestStore.read(docs.sparkSession, root)
+    }(ManifestStore.read(docs.sparkSession, root))
   }
 }

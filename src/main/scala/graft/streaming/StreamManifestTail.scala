@@ -102,7 +102,7 @@ object StreamManifestTail {
             ManifestStore.MAIN, Seq.empty, ManifestStore.Replace)
         else ManifestStore.stage(view0, targetRoot, ManifestStore.MAIN,
           viewPartitionCols, ManifestStore.Replace)
-      ManifestStore.commitBatch(spark, targetRoot, Seq(staged), sinkId, v0)
+      ManifestStore.commitBatch(targetRoot, Seq(staged), sinkId, v0)
       Seq(v0)
     }
 
@@ -138,7 +138,7 @@ object StreamManifestTail {
             val curView = ManifestStore.read(spark, targetRoot)
             val next = fold(curView, feed)
             // view + cursor in ONE swap: batchId IS the source version
-            ManifestStore.commitBatch(spark, targetRoot, Seq(
+            ManifestStore.commitBatch(targetRoot, Seq(
               ManifestStore.stage(next.coalesce(1), targetRoot,
                 ManifestStore.MAIN, Seq.empty, ManifestStore.Replace)),
               sinkId, b)
@@ -160,7 +160,7 @@ object StreamManifestTail {
               val curSlice = tgtSnap.readPartitionKeys(
                 ManifestStore.MAIN, touched)
               val next = fold(curSlice, feedChk)
-              ManifestStore.commitBatch(spark, targetRoot, Seq(
+              ManifestStore.commitBatch(targetRoot, Seq(
                 ManifestStore.stage(next, targetRoot, ManifestStore.MAIN,
                   viewPartitionCols, ManifestStore.Upsert)
                   .copy(drops = touched)),

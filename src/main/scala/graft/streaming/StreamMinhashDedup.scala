@@ -41,9 +41,9 @@ import org.apache.spark.sql.types._
   * log is rewritten only by compaction, every `compactEvery` appends
   * (amortized O(state / compactEvery) per batch), which also keeps
   * the union view's plan width bounded. Emitted pair frames are
-  * eagerly materialized and never retired while the handle is live,
-  * so a reader may hold any previously returned `pairs` view across
-  * batch boundaries.
+  * eagerly materialized and kept by the state until it closes, so a
+  * reader may hold any previously returned pairs across batch
+  * boundaries.
   *
   * The accumulated pair set is arrival-order independent (bands are a
   * pure function of text; every co-bucket pair is emitted exactly
@@ -64,21 +64,30 @@ object StreamMinhashDedup {
     StructField("kept", BooleanType)
   ))
 
+  private val pairSchema = StructType(Seq(
+    StructField("id_a", LongType),
+    StructField("id_b", LongType)
+  ))
+
   /** Log-structured accumulated bucket membership: an append-only
     * vector of checkpointed (band, band_sig, doc_id, seq, kept)
     * segments, compacted into one segment every `compactEvery`
-    * appends.
+    * appends; plus the pairs each batch emitted, one slot per batch.
     */
-  final class State(spark: SparkSession, val cap: Int, val compactEvery: Int) {
-    @volatile private[streaming] var segments: Vector[DataFrame] = Vector.empty
+  final class State(spark: SparkSession, val cap: Int, val compactEvery: Int)
+      extends AutoCloseable {
+    @volatile private[streaming] var segments: Vector[Fold.Slot] = Vector.empty
+    @volatile private var emitted: Vector[Fold.Slot] = Vector.empty
 
-    private def emptyLog: DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logSchema)
+    private def union(slots: Vector[Fold.Slot], schema: StructType): DataFrame =
+      if (slots.isEmpty) Fold.empty(spark, schema)
+      else slots.map(_.value).reduce(_ unionByName _)
 
     /** The full membership log (kept and over-cap rows). */
-    private[streaming] def log: DataFrame =
-      if (segments.isEmpty) emptyLog else segments.reduce(_ unionByName _)
+    private[streaming] def log: DataFrame = union(segments, logSchema)
+
+    /** Every candidate pair emitted so far (id_a < id_b). */
+    def pairs: DataFrame = union(emitted, pairSchema)
 
     /** The bucket members (kept rows only) — what a bucket's
       * co-member set is drawn from, and what `cap` bounds.
@@ -86,25 +95,34 @@ object StreamMinhashDedup {
     def bands: DataFrame = log.filter(col("kept")).drop("kept")
 
     private[streaming] def append(segment: DataFrame): Unit = {
-      segments = segments :+ segment.localCheckpoint(true)
-      if (segments.size >= compactEvery) compact()
+      segments = segments :+ slotOf(segment)
+      if (segments.size >= compactEvery) {
+        val old = segments
+        segments = Vector(slotOf(log))
+        old.foreach(_.close())
+      }
     }
 
-    private def compact(): Unit = {
-      val merged = segments.reduce(_ unionByName _).localCheckpoint(true)
-      val old = segments
-      segments = Vector(merged)
-      old.foreach(GraftSqlShims.unpersistCheckpoint(_))
+    private[streaming] def emit(batchPairs: DataFrame): DataFrame = {
+      val s = slotOf(batchPairs)
+      emitted = emitted :+ s
+      s.value
     }
 
-    /** Release all retained state blocks (end-of-life). Public: a
-      * caller composing ingest batches directly (cdc12's churn
-      * replay) owns the state lifecycle; pairs returned by `ingest`
-      * have their own checkpoints and stay readable after close.
+    private def slotOf(df: DataFrame): Fold.Slot = {
+      val s = new Fold.Slot
+      s.set(df)
+      s
+    }
+
+    /** Release every segment and every emitted pair frame. Public: a
+      * caller composing ingest batches directly (cdc12's churn replay)
+      * owns the state lifecycle.
       */
     def close(): Unit = {
-      segments.foreach(GraftSqlShims.unpersistCheckpoint(_))
+      (segments ++ emitted).foreach(_.close())
       segments = Vector.empty
+      emitted = Vector.empty
     }
   }
 
@@ -112,7 +130,8 @@ object StreamMinhashDedup {
     new State(spark, cap, compactEvery)
 
   /** Apply one micro-batch of (idCol, textCol) docs; returns the new
-    * candidate pairs (id_a < id_b), eagerly materialized.
+    * candidate pairs (id_a < id_b), eagerly materialized and kept by
+    * `state` (readable until it closes).
     */
   def ingest(
       state: State,
@@ -160,15 +179,14 @@ object StreamMinhashDedup {
       .unionByName(
         newRows.select(col("band"), col("band_sig"), col("doc_id").as("other"))
       )
-    val pairs = newRows
+    val pairs = state.emit(newRows
       .join(coMembers, Seq("band", "band_sig"))
       .filter(col("other") =!= col("doc_id"))
       .select(
         least(col("doc_id"), col("other")).as("id_a"),
         greatest(col("doc_id"), col("other")).as("id_b")
       )
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // cap accounting touches only this batch's buckets: count each
     // touched bucket's kept members (a tiny aggregate — broadcast to
     // the new rows), rank new arrivals by id, and flag the overflow
@@ -196,46 +214,26 @@ object StreamMinhashDedup {
     pairs
   }
 
-  /** Streaming wrapper: foreachBatch over a documents stream; emitted
-    * pairs accumulate in the returned handle as an append-only vector
-    * of materialized per-batch frames — `pairs` is a view over them,
-    * and every previously returned view stays readable (segments are
-    * never retired while the handle is live).
+  /** Streaming wrapper: foreachBatch over a documents stream; the
+    * returned state's `pairs` is every pair emitted so far, an
+    * append-only vector of per-batch frames (each batch's write is
+    * O(new pairs), never a rewrite of a growing union).
     */
-  final class PairsHandle(spark: SparkSession) {
-    @volatile private[streaming] var segments: Vector[DataFrame] = Vector.empty
-
-    def pairs: DataFrame =
-      if (segments.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("id_a", LongType),
-            StructField("id_b", LongType)
-          )))
-      else segments.reduce(_ unionByName _)
-  }
-
   def dedupQuery(
       docs: DataFrame,
       checkpoint: String,
       cap: Int = 1024
-  ): (StreamingQuery, PairsHandle) = {
-    val spark = docs.sparkSession
-    val state = newState(spark, cap)
-    val handle = new PairsHandle(spark)
+  ): (StreamingQuery, State) = {
+    val state = newState(docs.sparkSession, cap)
     val q = docs.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // ingest() returns an already-checkpointed frame; appending it
-        // (rather than re-checkpointing a growing union) keeps the
-        // per-batch write O(new pairs)
-        handle.segments = handle.segments :+ ingest(state, batch, batchId)
+        ingest(state, batch, batchId)
         ()
       }
       .start()
-    (q, handle)
+    (q, state)
   }
 
   /** Deterministic full-corpus replay in `splits` micro-batches
@@ -244,13 +242,8 @@ object StreamMinhashDedup {
     * regardless of the slicing.
     */
   def replay(docs: DataFrame, splits: Int = 5, cap: Int = 1024): DataFrame = {
-    val spark = docs.sparkSession
-    val state = newState(spark, cap)
-    val parts = (0 until splits).map(i =>
-      ingest(state, docs.filter(pmod(col("doc_id"), lit(splits)) === i), i.toLong)
-    )
-    val out = parts.reduce(_ unionByName _)
-    state.close()
-    out
+    val state = newState(docs.sparkSession, cap)
+    Fold.replay(Fold.byMod(docs, col("doc_id"), splits), state)(
+      (b, i) => ingest(state, b, i.toLong))(state.pairs)
   }
 }

@@ -78,28 +78,18 @@ object StreamSegments {
       .option("checkpointLocation", checkpoint)
       .start()
 
-  /** Mutable per-run state for the DataFrame fold form. */
-  final class State(spark: SparkSession) {
-    import spark.implicits._
-    private[streaming] var flags: DataFrame =
-      Seq.empty[(Long, Boolean, Boolean, Boolean)]
-        .toDF("user_id", "did_click", "did_purchase", "did_error")
+  /** Per-user flags for the DataFrame fold form:
+    * (user_id, did_click, did_purchase, did_error).
+    */
+  type State = Fold.Slot
 
-    /** Release the live state checkpoint (call after the last read —
-      * the StreamWindowHll discipline; without it each run retains
-      * its final block set for the session lifetime).
-      */
-    def close(): Unit =
-      org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(flags)
+  def newState(spark: SparkSession): State = {
+    import spark.implicits._
+    new Fold.Slot(Seq.empty[(Long, Boolean, Boolean, Boolean)]
+      .toDF("user_id", "did_click", "did_purchase", "did_error"))
   }
 
-  def newState(spark: SparkSession): State = new State(spark)
-
-  /** Fold one micro-batch: one dense user_id aggregate, OR-merged.
-    * The superseded state checkpoint is released once the new one is
-    * materialized (the Clusters.scala round discipline — otherwise a
-    * long-running ingest accumulates one dead block set per batch).
-    */
+  /** Fold one micro-batch: one dense user_id aggregate, OR-merged. */
   def ingest(state: State, batch: DataFrame): Unit = {
     val b = batch
       .groupBy(col("user_id"))
@@ -108,22 +98,20 @@ object StreamSegments {
         max(col("event_type") === "purchase").as("did_purchase"),
         max(col("event_type") === "error").as("did_error")
       )
-    val prev = state.flags
-    state.flags = prev
-      .unionByName(b)
-      .groupBy(col("user_id"))
-      .agg(
-        max(col("did_click")).as("did_click"),
-        max(col("did_purchase")).as("did_purchase"),
-        max(col("did_error")).as("did_error")
-      )
-      .localCheckpoint(true)
-    org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(prev)
+    state.set(
+      state.value
+        .unionByName(b)
+        .groupBy(col("user_id"))
+        .agg(
+          max(col("did_click")).as("did_click"),
+          max(col("did_purchase")).as("did_purchase"),
+          max(col("did_error")).as("did_error")
+        ))
   }
 
   /** The 2³ overlap cells of the current state — q96's output shape. */
   def cells(state: State): DataFrame =
-    state.flags
+    state.value
       .groupBy(col("did_click"), col("did_purchase"), col("did_error"))
       .agg(count(lit(1)).as("n_users"))
       .orderBy("did_click", "did_purchase", "did_error")
@@ -134,13 +122,7 @@ object StreamSegments {
     */
   def replay(events: DataFrame, slices: Int = 4): DataFrame = {
     val state = newState(events.sparkSession)
-    (0 until slices).foreach { i =>
-      ingest(state, events.filter(pmod(col("event_id"), lit(slices)) === i))
-    }
-    // materialize the (8-row) cells, then release the per-user state
-    // so the run leaves no live checkpoint behind
-    val out = cells(state).localCheckpoint(true)
-    state.close()
-    out
+    Fold.replay(Fold.byMod(events, col("event_id"), slices), state)(
+      (b, _) => ingest(state, b))(cells(state))
   }
 }

@@ -37,26 +37,9 @@ object StreamUrlQuota {
     StructField("n_refs", LongType)
   ))
 
-  final class State(spark: SparkSession) {
-    @volatile private[streaming] var admitted: DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], admittedSchema)
-    @volatile private[streaming] var refs: DataFrame =
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], refsSchema)
-
-    private[streaming] def swap(a: DataFrame, r: DataFrame): Unit = {
-      val (o1, o2) = (admitted, refs)
-      admitted = a.localCheckpoint(true)
-      refs = r.localCheckpoint(true)
-      GraftSqlShims.unpersistCheckpoint(o1)
-      GraftSqlShims.unpersistCheckpoint(o2)
-    }
-
-    private[streaming] def close(): Unit = {
-      GraftSqlShims.unpersistCheckpoint(admitted)
-      GraftSqlShims.unpersistCheckpoint(refs)
-    }
+  final class State(spark: SparkSession) extends Fold.State {
+    private[streaming] val admitted = slot(Fold.empty(spark, admittedSchema))
+    private[streaming] val refs = slot(Fold.empty(spark, refsSchema))
   }
 
   def newState(spark: SparkSession): State = new State(spark)
@@ -68,7 +51,8 @@ object StreamUrlQuota {
     */
   def ingest(state: State, rawBatch: DataFrame, quota: Long): Unit = {
     val batch = rawBatch.localCheckpoint(true)
-    val newRefs = state.refs
+    val admitted = state.admitted.value
+    val newRefs = state.refs.value
       .unionByName(batch.groupBy(col("domain")).agg(count(lit(1)).as("n_refs")))
       .groupBy(col("domain"))
       .agg(sum(col("n_refs")).as("n_refs"))
@@ -77,8 +61,8 @@ object StreamUrlQuota {
     val fresh = batch
       .groupBy(col("domain"), col("nurl"))
       .agg(min(col("event_id")).as("fe"))
-      .join(state.admitted, Seq("domain", "nurl"), "left_anti")
-    val counts = state.admitted
+      .join(admitted, Seq("domain", "nurl"), "left_anti")
+    val counts = admitted
       .groupBy(col("domain"))
       .agg(count(lit(1)).as("n_adm"))
     val w = Window
@@ -89,7 +73,7 @@ object StreamUrlQuota {
       .join(counts, Seq("domain"), "left")
       .filter(col("rn") + coalesce(col("n_adm"), lit(0L)) <= quota)
       .select(col("domain"), col("nurl"))
-    state.swap(state.admitted.unionByName(admittedNew), newRefs)
+    Fold.set(state.admitted -> admitted.unionByName(admittedNew), state.refs -> newRefs)
     GraftSqlShims.unpersistCheckpoint(batch)
   }
 
@@ -97,9 +81,9 @@ object StreamUrlQuota {
     * the order-free Σ h32(nurl) over the admitted set.
     */
   def summarize(state: State): DataFrame =
-    state.refs
+    state.refs.value
       .join(
-        state.admitted
+        state.admitted.value
           .groupBy(col("domain"))
           .agg(
             count(lit(1)).as("n_admitted"),
@@ -120,25 +104,8 @@ object StreamUrlQuota {
     * must equal the batch first-arrival quota for ANY `splits`.
     */
   def replay(urls: DataFrame, quota: Long, splits: Int = 5): DataFrame = {
-    val spark = urls.sparkSession
-    val Array(lo, hi) = urls.agg(min(col("event_id")), max(col("event_id")))
-      .head() match {
-      case r if r.isNullAt(0) => Array(0L, 0L)
-      case r                  => Array(r.getLong(0), r.getLong(1))
-    }
-    val span = hi - lo + 1
-    val state = newState(spark)
-    (0 until splits).foreach { i =>
-      val b0 = lo + span * i / splits
-      val b1 = lo + span * (i + 1) / splits
-      // NULL event_id rides the first batch (coalesce to lo) so no row
-      // is silently dropped from every slice by a null-hostile range.
-      val k = coalesce(col("event_id"), lit(lo))
-      ingest(state, urls.filter(k >= b0 && k < b1), quota)
-    }
-    val out = summarize(state).orderBy("domain")
-    val rows = out.collect()
-    state.close()
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq), out.schema)
+    val state = newState(urls.sparkSession)
+    Fold.replay(Fold.byRange(urls, col("event_id"), splits), state)(
+      (b, _) => ingest(state, b, quota))(summarize(state).orderBy("domain"))
   }
 }

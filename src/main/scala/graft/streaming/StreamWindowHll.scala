@@ -33,37 +33,12 @@ import org.apache.spark.sql.functions._
   */
 object StreamWindowHll {
 
-  /** Register-table accumulator (sink-owned state, checkpointed per
-    * merge so lineage never grows with batch count).
+  /** The register table (window_start, bucket, rho), sink-owned state
+    * checkpointed per merge so lineage never grows with batch count.
     */
-  final class State(private[streaming] val spark: SparkSession) {
-    @volatile private[streaming] var regs: Option[DataFrame] = None
+  type State = Fold.Slot
 
-    private[streaming] def merge(batchRegs: DataFrame): Unit = {
-      val merged = regs match {
-        case None => batchRegs
-        case Some(cur) =>
-          cur
-            .unionByName(batchRegs)
-            .groupBy(col("window_start"), col("bucket"))
-            .agg(max(col("rho")).as("rho"))
-      }
-      val next = merged.localCheckpoint(true)
-      regs.foreach(
-        org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(_)
-      )
-      regs = Some(next)
-    }
-
-    def close(): Unit = {
-      regs.foreach(
-        org.apache.spark.sql.graftshim.GraftSqlShims.unpersistCheckpoint(_)
-      )
-      regs = None
-    }
-  }
-
-  def newState(spark: SparkSession): State = new State(spark)
+  def newState(spark: SparkSession): State = new Fold.Slot
 
   /** (window_start, bucket, rho) registers of one slice of events —
     * the per-batch map-side work; one dense groupBy over the batch.
@@ -88,8 +63,13 @@ object StreamWindowHll {
       .agg(max(col("rho")).as("rho"))
 
   /** Fold one micro-batch into the state. */
-  def ingest(state: State, batch: DataFrame, m: Int, maxRho: Int): Unit =
-    state.merge(registers(batch, m, maxRho))
+  def ingest(state: State, batch: DataFrame, m: Int, maxRho: Int): Unit = {
+    val regs = registers(batch, m, maxRho)
+    state.set(state.get.fold(regs)(
+      _.unionByName(regs)
+        .groupBy(col("window_start"), col("bucket"))
+        .agg(max(col("rho")).as("rho"))))
+  }
 
   /** Read-time estimate over an accumulated register table. */
   def estimate(regs: DataFrame, m: Int, maxRho: Int): DataFrame = {
@@ -122,16 +102,8 @@ object StreamWindowHll {
     * registers as one batch pass — which is what the oracle checks.
     */
   def replay(events: DataFrame, m: Int, maxRho: Int, slices: Int = 5): DataFrame = {
-    val spark = events.sparkSession
-    val state = newState(spark)
-    (0 until slices).foreach { i =>
-      ingest(state, events.filter(pmod(col("event_id"), lit(slices)) === i), m, maxRho)
-    }
-    val est = estimate(state.regs.get, m, maxRho)
-    // the estimate is tiny (one row per window); materialize it so the
-    // state's checkpoint blocks can be released before the caller reads
-    val out = est.localCheckpoint(true)
-    state.close()
-    out
+    val state = newState(events.sparkSession)
+    Fold.replay(Fold.byMod(events, col("event_id"), slices), state)(
+      (b, _) => ingest(state, b, m, maxRho))(estimate(state.value, m, maxRho))
   }
 }

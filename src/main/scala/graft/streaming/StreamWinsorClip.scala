@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Streaming face of q106's sketch-guided winsorization: the
   * per-(series, bucket) HDR counts are the ONLY maintained state
-  * ([[StreamHdrQuantiles.State]] — bounded at ~1K rows per series
+  * ([[StreamHdrQuantiles]]' sketch slot — bounded at ~1K rows per series
   * regardless of feed length, merged by plain count addition), so cut
   * LOCATION is continuously current with no sort anywhere; the exact
   * cut VALUE is read at SERVING time by the one bucket-pruned pass
@@ -44,20 +44,15 @@ object StreamWinsorClip {
     graft.ops.Relational11.winsorSketchAudit(
       values.sparkSession,
       values,
-      state.counts.get
+      state.value
     )
 
   /** Deterministic replay in `splits` event_id-sliced micro-batches;
     * must equal batch q106 for ANY `splits`.
     */
   def replay(values: DataFrame, splits: Int = 5): DataFrame = {
-    val spark = values.sparkSession
-    val state = newState(spark)
-    (0 until splits).foreach { i =>
-      ingest(state, values.filter(pmod(col("event_id"), lit(splits)) === i))
-    }
-    val out = serve(state, values).localCheckpoint(true)
-    state.close()
-    out
+    val state = newState(values.sparkSession)
+    Fold.replay(Fold.byMod(values, col("event_id"), splits), state)(
+      (b, _) => ingest(state, b))(serve(state, values))
   }
 }

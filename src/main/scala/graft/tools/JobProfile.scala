@@ -71,7 +71,7 @@ object JobProfile {
       // a job's time often hides one slow stage (e.g. a many-small-files
       // write) behind cheap ones
       probe.stages.sortBy(-_.wallMs).take(15).foreach { s =>
-        println(f"   stage ${s.id}%4d wall=${s.wallMs / 1e3}%7.3f run=${s.runMs / 1e3}%8.3f cpu=${s.cpuMs / 1e3}%8.3f tasks=${s.tasks}%4d out=${s.outputBytes / 1024}%8dKiB recs=${s.outputRecords}%8d  ${s.name}%s")
+        println(f"   stage ${s.id}%4d wall=${s.wallMs / 1e3}%7.3f run=${s.runMs / 1e3}%8.3f cpu=${s.cpuMs / 1e3}%8.3f tasks=${s.tasks}%4d out=${s.outputBytes / 1024}%8dKiB recs=${s.outputRecords}%8d  ${s.site}%s")
       }
     }
     spark.stop()

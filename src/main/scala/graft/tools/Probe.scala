@@ -42,6 +42,7 @@ final class Probe private (spark: SparkSession) {
   private val actionLog = mutable.ArrayBuffer[(String, QueryExecution)]()
   private val executionIds = new java.util.IdentityHashMap[QueryExecution, Long]()
   private val executionSites = mutable.Map[Long, String]()
+  private val stageSites = mutable.Map[Int, String]()
 
   private val events = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit = lock.synchronized {
@@ -54,6 +55,7 @@ final class Probe private (spark: SparkSession) {
         .orElse(property("callSite.short").filter(_.nonEmpty))
         .orElse(e.stageInfos.lastOption.map(si => firstLine(si.name)))
         .getOrElse("?")
+      e.stageInfos.foreach(si => stageSites(si.stageId) = site)
       jobLog(e.jobId) = Job(e.jobId, site, nanos(e.time), None,
         e.stageInfos.map(_.numTasks).sum,
         e.stageInfos.map(si => (firstLine(si.name), si.numTasks)))
@@ -66,15 +68,17 @@ final class Probe private (spark: SparkSession) {
       val m = si.taskMetrics
       val wallMs = (for { s <- si.submissionTime; c <- si.completionTime } yield c - s)
         .getOrElse(0L)
-      val stage =
-        if (m == null) Stage(si.stageId, firstLine(si.name), si.numTasks, wallMs,
-          0L, 0L, 0L, 0L, 0L, 0L, 0L)
-        else Stage(si.stageId, firstLine(si.name), si.numTasks, wallMs,
-          m.executorRunTime, m.executorCpuTime / 1000000L,
-          m.outputMetrics.bytesWritten, m.outputMetrics.recordsWritten,
-          m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
-          m.memoryBytesSpilled + m.diskBytesSpilled)
-      lock.synchronized { stageLog += stage }
+      lock.synchronized {
+        val site = stageSites.getOrElse(si.stageId, firstLine(si.name))
+        stageLog +=
+          (if (m == null) Stage(si.stageId, firstLine(si.name), site, si.numTasks,
+            wallMs, 0L, 0L, 0L, 0L, 0L, 0L, 0L)
+          else Stage(si.stageId, firstLine(si.name), site, si.numTasks, wallMs,
+            m.executorRunTime, m.executorCpuTime / 1000000L,
+            m.outputMetrics.bytesWritten, m.outputMetrics.recordsWritten,
+            m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten,
+            m.memoryBytesSpilled + m.diskBytesSpilled))
+      }
     }
     // the action listener gets no execution id; this event carries both
     override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
@@ -102,7 +106,7 @@ final class Probe private (spark: SparkSession) {
     GraftSqlShims.drainListeners(sc)
     lock.synchronized {
       jobLog.clear(); stageLog.clear(); actionLog.clear(); executionIds.clear()
-      executionSites.clear()
+      executionSites.clear(); stageSites.clear()
     }
   }
 
@@ -147,10 +151,13 @@ object Probe {
   }
 
   /** A completed stage's wall time (submission to completion) and its
-    * tasks' summed metrics; bytes are bytes, times milliseconds. */
+    * tasks' summed metrics; bytes are bytes, times milliseconds. `site`
+    * is the site of the job that submitted the stage (see [[Job]]), or
+    * the stage's own name when no job of it started under this Probe. */
   final case class Stage(
       id: Int,
       name: String,
+      site: String,
       tasks: Int,
       wallMs: Long,
       runMs: Long,

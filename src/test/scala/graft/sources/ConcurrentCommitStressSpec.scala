@@ -42,7 +42,7 @@ class ConcurrentCommitStressSpec extends SparkSpec {
               val staged = ManifestStore.stage(batch, root,
                 ManifestStore.MAIN, Seq("source"), ManifestStore.Append)
               val v = ManifestStore.snapshot(spark, root).version
-              try ManifestStore.commit(spark, root, Seq(staged),
+              try ManifestStore.commit(root, Seq(staged),
                 expectedVersion = v)
               catch {
                 case _: ManifestStore.ConcurrentCommitException =>
@@ -79,9 +79,9 @@ class ConcurrentCommitStressSpec extends SparkSpec {
         ManifestStore.MAIN, Seq("source"), ManifestStore.Upsert)
       val stB = ManifestStore.stage(shifted(2000000L), root,
         ManifestStore.MAIN, Seq("source"), ManifestStore.Upsert)
-      ManifestStore.commit(spark, root, Seq(stA), expectedVersion = 1L)
+      ManifestStore.commit(root, Seq(stA), expectedVersion = 1L)
       intercept[ManifestStore.ConcurrentCommitException] {
-        ManifestStore.commit(spark, root, Seq(stB), expectedVersion = 1L)
+        ManifestStore.commit(root, Seq(stB), expectedVersion = 1L)
       }
       intercept[ManifestStore.ConcurrentCommitException] {
         ManifestStore.commitRebase(spark, root, Seq(stB), baseVersion = 1L)

@@ -196,7 +196,7 @@ class ManifestLogSpec extends SparkSpec {
       val st = ManifestStore.stage(docs.limit(10), root,
         ManifestStore.MAIN, Seq("source"), ManifestStore.Append)
       intercept[ManifestStore.ConcurrentCommitException] {
-        ManifestStore.commit(spark, root, Seq(st), expectedVersion = 1L)
+        ManifestStore.commit(root, Seq(st), expectedVersion = 1L)
       }
     } finally Scratch.deleteRecursively(root)
   }
@@ -223,7 +223,7 @@ class ManifestLogSpec extends SparkSpec {
           writerOptions = Map("parquet.block.size" -> (16 * 1024).toString,
             "parquet.page.size" -> (4 * 1024).toString)))
       val (_, probe) = graft.tools.Probe.around(spark) {
-        ManifestStore.commit(spark, root, staged)
+        ManifestStore.commit(root, staged)
       }
       assert(probe.jobs.isEmpty,
         s"a commit of staged dirs ran Spark jobs: ${probe.jobs}")

@@ -93,7 +93,7 @@ class ManifestStoreSpec extends SparkSpec {
       val store0 = docs.withColumn("v", lit(1L))
       val index0 = docs.select(col("doc_id"), col("source"))
         .withColumn("v", lit(1L))
-      ManifestStore.commit(spark, root, Seq(
+      ManifestStore.commit(root, Seq(
         ManifestStore.stage(store0, root, "store", Seq("source"),
           ManifestStore.Replace),
         ManifestStore.stage(index0, root, "index", Seq("source"),
@@ -113,7 +113,7 @@ class ManifestStoreSpec extends SparkSpec {
         .map(_.getLong(0)).toSeq === Seq(1L))
 
       // the completed commit swaps both tables at once
-      ManifestStore.commit(spark, root, Seq(
+      ManifestStore.commit(root, Seq(
         ManifestStore.stage(store0.withColumn("v", lit(2L)), root, "store",
           Seq("source"), ManifestStore.Upsert),
         ManifestStore.stage(index0.withColumn("v", lit(2L)), root, "index",
@@ -133,7 +133,7 @@ class ManifestStoreSpec extends SparkSpec {
     try {
       val base = docs.limit(200).localCheckpoint(true)
       def tagged(v: Long) = base.withColumn("v", lit(v))
-      ManifestStore.commit(spark, root, Seq(
+      ManifestStore.commit(root, Seq(
         ManifestStore.stage(tagged(1), root, "store", Seq("source"),
           ManifestStore.Replace),
         ManifestStore.stage(tagged(1), root, "index", Seq("source"),
@@ -157,7 +157,7 @@ class ManifestStoreSpec extends SparkSpec {
       reader.start()
       try
         (2 to rounds).foreach { v =>
-          ManifestStore.commit(spark, root, Seq(
+          ManifestStore.commit(root, Seq(
             ManifestStore.stage(tagged(v.toLong), root, "store",
               Seq("source"), ManifestStore.Upsert),
             ManifestStore.stage(tagged(v.toLong), root, "index",
@@ -254,10 +254,10 @@ class ManifestStoreSpec extends SparkSpec {
         ManifestStore.MAIN, Seq("source"), ManifestStore.Upsert)
       val stB = ManifestStore.stage(shifted(2000000L), root,
         ManifestStore.MAIN, Seq("source"), ManifestStore.Upsert)
-      assert(ManifestStore.commit(spark, root, Seq(stA),
+      assert(ManifestStore.commit(root, Seq(stA),
         expectedVersion = 1L) === 2L)
       intercept[ManifestStore.ConcurrentCommitException] {
-        ManifestStore.commit(spark, root, Seq(stB), expectedVersion = 1L)
+        ManifestStore.commit(root, Seq(stB), expectedVersion = 1L)
       }
       // the loser published NOTHING: current state is exactly A's
       val cur = ManifestStore.snapshot(spark, root)
@@ -307,24 +307,24 @@ class ManifestStoreSpec extends SparkSpec {
         .withColumn("doc_id", col("doc_id") + lit(1000000L * (b + 1)))
       def stagedFor(b: Long) = Seq(ManifestStore.stage(batch(b), root,
         ManifestStore.MAIN, Seq("source"), ManifestStore.Append))
-      assert(ManifestStore.commitBatch(spark, root, stagedFor(0),
+      assert(ManifestStore.commitBatch(root, stagedFor(0),
         "sink", 0L) === ((1L, true)))
-      assert(ManifestStore.commitBatch(spark, root, stagedFor(1),
+      assert(ManifestStore.commitBatch(root, stagedFor(1),
         "sink", 1L) === ((2L, true)))
       val afterTwo = ManifestStore.read(spark, root).count()
       assert(afterTwo === 60L)
       // the crash-redelivery case: batch 1 arrives again — recognized
       // through the manifest's own ledger, NOT re-applied
-      assert(ManifestStore.commitBatch(spark, root, stagedFor(1),
+      assert(ManifestStore.commitBatch(root, stagedFor(1),
         "sink", 1L) === ((2L, false)))
       assert(ManifestStore.read(spark, root).count() === afterTwo)
       assert(ManifestStore.snapshot(spark, root).version === 2L)
       // progress resumes past the redelivery
-      assert(ManifestStore.commitBatch(spark, root, stagedFor(2),
+      assert(ManifestStore.commitBatch(root, stagedFor(2),
         "sink", 2L) === ((3L, true)))
       assert(ManifestStore.read(spark, root).count() === 90L)
       // a DIFFERENT sink's ledger is independent
-      assert(ManifestStore.commitBatch(spark, root, stagedFor(10),
+      assert(ManifestStore.commitBatch(root, stagedFor(10),
         "other", 1L) === ((4L, true)))
     } finally Scratch.deleteRecursively(root)
   }

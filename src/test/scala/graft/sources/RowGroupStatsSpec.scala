@@ -33,7 +33,7 @@ class RowGroupStatsSpec extends SparkSpec {
           col("n_chars").cast("long").as("n_chars"))
         .withColumn("doc_id", col("doc_id") * 2 + lit(1000L * i))
     }.reduce(_ unionByName _).localCheckpoint(true)
-    ManifestStore.commit(spark, root, Seq(ManifestStore.stage(
+    ManifestStore.commit(root, Seq(ManifestStore.stage(
       wide.coalesce(1).sortWithinPartitions("doc_id"),
       root, ManifestStore.MAIN, Seq.empty, ManifestStore.Replace,
       writerOptions = Map(
@@ -118,7 +118,7 @@ class RowGroupStatsSpec extends SparkSpec {
             col("n_chars").cast("long").as("n_chars"))
           .withColumn("doc_id", col("doc_id") + lit(500L * i))
       }.reduce(_ unionByName _).localCheckpoint(true)
-      ManifestStore.commit(spark, root, Seq(ManifestStore.stage(
+      ManifestStore.commit(root, Seq(ManifestStore.stage(
         wide.coalesce(1).sortWithinPartitions("source", "doc_id"),
         root, ManifestStore.MAIN, Seq.empty, ManifestStore.Replace,
         writerOptions = Map(

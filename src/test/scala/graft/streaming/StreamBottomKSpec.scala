@@ -22,7 +22,7 @@ class StreamBottomKSpec extends SparkSpec {
     Seq(4, 7).foreach { n =>
       assert(canon(StreamBottomK.replay(docs, n)) === batch, s"splits=$n")
       assert(
-        canon(StreamBottomK.replay(docs, n, reversed = true)) === batch,
+        canon(StreamBottomK.replay(Fold.byMod(docs, col("doc_id"), n).reverse)) === batch,
         s"splits=$n reversed — the sample depends on arrival order"
       )
     }
@@ -33,7 +33,7 @@ class StreamBottomKSpec extends SparkSpec {
     val state = StreamBottomK.newState(spark)
     (0 until 4).foreach { i =>
       StreamBottomK.ingest(state, docs.filter(pmod(col("doc_id"), lit(4)) === i))
-      val perSource = state.kept.get
+      val perSource = state.value
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n"))
         .collect()
@@ -41,7 +41,7 @@ class StreamBottomKSpec extends SparkSpec {
         assert(r.getAs[Long]("n") <= k, s"fold $i: ${r.mkString(",")}"))
     }
     // the fixture saturates k somewhere, else the bound is vacuous
-    val full = state.kept.get
+    val full = state.value
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n"))
       .collect()

@@ -48,7 +48,7 @@ class StreamFunnelSpec extends SparkSpec {
     val df = evs.toDF()
     val state = StreamFunnel.newState(spark)
     StreamFunnel.ingest(state, df)
-    val got = state.frame
+    val got = state.value
       .select("user_id", "stage")
       .collect()
       .map(r => (r.getLong(0), r.getInt(1)))
@@ -62,7 +62,7 @@ class StreamFunnelSpec extends SparkSpec {
     val df = Seq(Ev(1L, 10L, "view"), Ev(1L, 10L, "click")).toDF()
     val state = StreamFunnel.newState(spark)
     StreamFunnel.ingest(state, df)
-    val got = state.frame.select("stage").head().getInt(0)
+    val got = state.value.select("stage").head().getInt(0)
     state.close()
     assert(got === 1)
   }

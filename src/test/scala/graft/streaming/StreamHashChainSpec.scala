@@ -43,10 +43,10 @@ class StreamHashChainSpec extends SparkSpec {
         log.filter(col("__ts_us") >= b0 && col("__ts_us") < b1)
       )
     }
-    val stateRows = state.chains.count()
+    val stateRows = state.value.count()
     assert(stateRows === nKeys, s"state rows $stateRows != keys $nKeys")
     // and the summarized chains agree with the one-shot batch fold
-    val got = canon(StreamHashChain.summarize(state.chains).orderBy("id"))
+    val got = canon(StreamHashChain.summarize(state.value).orderBy("id"))
     val batch = canon(graft.SparkEntry.queries("cdc17_hash_chain")(spark, sfDir))
     assert(got === batch)
     state.close()

@@ -36,8 +36,8 @@ class StreamJoinMaintainSpec extends SparkSpec {
 
   test("reversed replay equals the batch rejoin") {
     val got = asSet(
-      StreamJoinMaintain.replay(
-        graft.cdc.CdcQueries.changeLog(spark, sfDir), ordered = false))
+      StreamJoinMaintain.replay(Fold.byMod(
+        graft.cdc.CdcQueries.changeLog(spark, sfDir), col("seq"), 5).reverse))
     assert(got === batchTruth)
   }
 
@@ -63,9 +63,9 @@ class StreamJoinMaintainSpec extends SparkSpec {
     (0 until splits).foreach { i =>
       val batch = log.filter(pmod(col("seq"), lit(splits)) === i)
       val acceptedUpper = batch.select("id").distinct().count()
-      val prevLive = state.viewState.count()
+      val prevLive = state.viewState.value.count()
       StreamJoinMaintain.ingest(state, batch)
-      val liveNow = state.viewState.count()
+      val liveNow = state.viewState.value.count()
       // every batch here inserts/updates keys, so groups do change —
       // but the rewrite must never exceed the whole live set, and a
       // batch can only rewrite rows it touched or whose group grew:

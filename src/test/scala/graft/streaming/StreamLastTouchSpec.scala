@@ -21,4 +21,21 @@ class StreamLastTouchSpec extends SparkSpec {
       assert(canon(StreamLastTouch.replay(events, n)) === batch, s"splits=$n")
     }
   }
+
+  test("a purchase whose ts is null is attributed, not dropped from every slice") {
+    import org.apache.spark.sql.functions._
+    val events = graft.Tables(spark, sfDir).events
+    val nullTs = events
+      .filter(col("event_type") === "purchase")
+      .limit(1)
+      .withColumn("ts", lit(null).cast("timestamp"))
+    val withNull = events.unionByName(nullTs)
+    val purchases = withNull.filter(col("event_type") === "purchase").count()
+    val attributed = StreamLastTouch
+      .replay(withNull, 4)
+      .agg(sum(col("n_purchases")))
+      .head()
+      .getLong(0)
+    assert(attributed === purchases)
+  }
 }

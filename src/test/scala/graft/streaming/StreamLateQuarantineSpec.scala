@@ -59,7 +59,7 @@ class StreamLateQuarantineSpec extends SparkSpec {
     val expected = StreamLateQuarantine
       .quarantined(events)
       .select("event_id", "user_id", "ts_us")
-    val got = handle.late
+    val got = handle.late.value
     assert(got.count() > 0, "fixture should produce late rows")
     assert(got.exceptAll(expected).isEmpty && expected.exceptAll(got).isEmpty,
       "quarantine diverged from the replay face")
@@ -72,14 +72,14 @@ class StreamLateQuarantineSpec extends SparkSpec {
       .groupBy("hour_us")
       .agg(count(lit(1)).as("n"))
     assert(
-      handle.counts.exceptAll(onTimeExpected).isEmpty &&
-        onTimeExpected.exceptAll(handle.counts).isEmpty,
+      handle.counts.value.exceptAll(onTimeExpected).isEmpty &&
+        onTimeExpected.exceptAll(handle.counts.value).isEmpty,
       "on-time counts diverged from the batch aggregate"
     )
 
     // the no-silent-drop partition: counted + quarantined = ingested
     val counted =
-      handle.counts.agg(sum(col("n"))).collect()(0).getLong(0)
+      handle.counts.value.agg(sum(col("n"))).collect()(0).getLong(0)
     assert(counted + got.count() === events.count())
   }
 
@@ -93,12 +93,12 @@ class StreamLateQuarantineSpec extends SparkSpec {
     // wildly out-of-order FIRST batch: nothing can be late
     input.addData((1L, 1L, t(50)), (2L, 1L, t(0)), (3L, 1L, t(25)))
     q.processAllAvailable()
-    assert(handle.late.count() === 0L)
+    assert(handle.late.value.count() === 0L)
     // second batch: 10:05 is > 10 min behind the 10:50 clock -> late;
     // 10:45 is within the delay -> on time
     input.addData((4L, 1L, t(5)), (5L, 1L, t(45)))
     q.processAllAvailable()
     q.stop()
-    assert(handle.late.select("event_id").as[Long].collect().toSeq === Seq(4L))
+    assert(handle.late.value.select("event_id").as[Long].collect().toSeq === Seq(4L))
   }
 }

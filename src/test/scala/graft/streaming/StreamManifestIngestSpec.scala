@@ -77,7 +77,7 @@ class StreamManifestIngestSpec extends SparkSpec {
       // nothing
       val restaged = ManifestStore.stage(slice(1), root,
         ManifestStore.MAIN, Seq("source"), ManifestStore.Append)
-      assert(ManifestStore.commitBatch(spark, root, Seq(restaged),
+      assert(ManifestStore.commitBatch(root, Seq(restaged),
         StreamManifestIngest.SINK, 1L) === ((2L, false)))
       assert(ManifestStore.snapshot(spark, root).version === 2L)
 

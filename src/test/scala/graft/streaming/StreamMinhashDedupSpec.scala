@@ -134,7 +134,7 @@ class StreamMinhashDedupSpec extends SparkSpec {
       .map(i => (i, s"unique document number $i carrying its own distinct words $i"))
       .toDF("doc_id", "text")
     StreamMinhashDedup.ingest(state, big, 0L)
-    val stateRows = state.segments.head.count()
+    val stateRows = state.segments.head.value.count()
     assert(stateRows >= 400L)
     // a tiny late batch must materialize ONLY its own segment — the
     // big resident state is not rewritten (the O(state)-per-batch
@@ -142,7 +142,7 @@ class StreamMinhashDedupSpec extends SparkSpec {
     StreamMinhashDedup.ingest(
       state, Seq((9001L, "tiny late arrival document")).toDF("doc_id", "text"), 1L)
     assert(state.segments.size === 2)
-    assert(state.segments.last.count() <= 8L) // one doc x 8 bands
+    assert(state.segments.last.value.count() <= 8L) // one doc x 8 bands
     // two more appends hit compactEvery=4: the log collapses to one
     // segment with every membership row preserved
     StreamMinhashDedup.ingest(

@@ -70,7 +70,7 @@ class StreamUrlQuotaSpec extends SparkSpec {
         q
       )
     }
-    val perDomain = state.admitted
+    val perDomain = state.admitted.value
       .groupBy(col("domain"))
       .agg(count(lit(1)).as("n"))
       .collect()
@@ -81,7 +81,7 @@ class StreamUrlQuotaSpec extends SparkSpec {
     assert(perDomain.exists(_.getAs[Long]("n") === q), "quota never filled")
     // and far more distinct URLs were SEEN than stored
     val seen = u.select(col("domain"), col("nurl")).distinct().count()
-    val stored = state.admitted.count()
+    val stored = state.admitted.value.count()
     assert(stored < seen, s"state stored $stored of $seen seen URLs")
     state.close()
   }

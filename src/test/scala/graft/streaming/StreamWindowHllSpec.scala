@@ -28,7 +28,7 @@ class StreamWindowHllSpec extends SparkSpec {
       StreamWindowHll
         .ingest(state, ev.filter(pmod(col("event_id"), lit(5)) === i), m, maxRho)
     }
-    val replayed = regsOf(state.regs.get)
+    val replayed = regsOf(state.value)
     state.close()
     assert(replayed === onePass)
     assert(replayed.nonEmpty)

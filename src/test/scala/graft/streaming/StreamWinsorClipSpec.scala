@@ -34,7 +34,7 @@ class StreamWinsorClipSpec extends SparkSpec {
           values.filter(pmod(col("event_id"), lit(splits)) === i)
         )
       }
-      val rows = canon(state.counts.get)
+      val rows = canon(state.value)
       state.close()
       rows
     }

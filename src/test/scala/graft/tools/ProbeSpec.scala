@@ -113,6 +113,11 @@ class ProbeSpec extends SparkSpec {
       assert(sites.nonEmpty)
       assert(!sites.exists(_.contains("CompletableFuture")), sites)
       assert(sites.forall(_.contains("ManifestStore.scala")), sites)
+      // AQE stages carry the pool thread's name; their job's site is
+      // the line that ran the write
+      val stageSites = probe.stages.map(_.site)
+      assert(stageSites.nonEmpty)
+      assert(stageSites.forall(_.contains("ManifestStore.scala")), probe.stages)
     } finally Scratch.deleteRecursively(root)
   }
 }

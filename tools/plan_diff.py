@@ -11,10 +11,17 @@ header. Before comparing, run-to-run noise is masked:
   - expression ids (`doc_id#17L` -> `doc_id#_L`), `plan_id=N` and RDD
     ids (`MapPartitionsRDD[842]`), which count what the session built
     before;
-  - scratch temp directories (`graft-exhibit-dv1373...` -> `graft-exhibit-dv_`)
+  - scratch temp directories (`graft-exhibit-dv1373...` -> `graft-exhibit-dv_`,
+    `graft_pipe02_7956...` -> `graft_pipe02_`)
     and the UUIDs in commit directories and part-file names;
   - lambda class names and object hashes (`$Lambda$7199/0x7f00ad84`,
-    `@6f2a1c3b`).
+    `@6f2a1c3b`);
+  - source line numbers in call sites (`localCheckpoint at
+    StreamQueries.scala:458`), which move with any edit above them;
+  - whole-stage codegen ids (`[codegen id : 3]`, `*(3) Project`) and
+    the stage number an AQE `ShuffleQueryStage`/`BroadcastQueryStage`/
+    `ResultQueryStage` node prints as its `Arguments: N` line, which
+    count the stages AQE built before.
 
 sbt status lines (`[success] Total time ...`) are dropped.
 
@@ -36,10 +43,16 @@ MASKS = [
     (re.compile(r"RDD\[\d+\]"), "RDD[_]"),
     (re.compile(r"[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"),
      "<uuid>"),
-    (re.compile(r"(graft-[A-Za-z0-9_.-]*?[A-Za-z_.-])\d{6,}"), r"\1_"),
+    (re.compile(r"(graft[-_][A-Za-z0-9_.-]*?[A-Za-z_.-])\d{6,}"), r"\1_"),
     (re.compile(r"\$Lambda\$\d+/0x[0-9a-f]+"), "$Lambda$_"),
     (re.compile(r"@[0-9a-f]{5,}\b"), "@_"),
+    (re.compile(r"(\w\.scala):\d+"), r"\1:_"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : _]"),
+    (re.compile(r"\*\(\d+\) "), "*(_) "),
 ]
+# a formatted-plan node header, and a query stage's numeric argument
+NODE = re.compile(r"^\(\d+\) (\S+)")
+STAGE_ARG = re.compile(r"^Arguments: \d+$")
 # sbt's own status lines around the program's output
 SBT_LINE = re.compile(r"^\[(success|info|warn|error)\] ")
 
@@ -53,6 +66,7 @@ def mask(line):
 def sections(path):
     out = {}
     name = None
+    node = None
     with open(path, encoding="utf-8", errors="replace") as f:
         for raw in f:
             m = HEADER.match(raw)
@@ -60,7 +74,13 @@ def sections(path):
                 name = m.group(1).rstrip("=").strip()
                 out[name] = []
             elif name is not None and not SBT_LINE.match(raw):
-                out[name].append(mask(raw.rstrip("\n")))
+                line = raw.rstrip("\n")
+                n = NODE.match(line)
+                if n:
+                    node = n.group(1)
+                elif node and node.endswith("QueryStage") and STAGE_ARG.match(line):
+                    line = "Arguments: _"
+                out[name].append(mask(line))
     # trailing blank lines are layout, not plan
     for body in out.values():
         while body and not body[-1]:
