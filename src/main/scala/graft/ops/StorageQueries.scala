@@ -244,18 +244,17 @@ object StorageQueries extends graft.QueryFamily {
   private val manifestIngest: Q = (s, dir) => {
     val docs = baseDocs(s, dir)
     graft.sources.Scratch.withTempDir("graft-stream24") { path =>
-      val out = graft.streaming.StreamManifestIngest.replay(docs, path)
-      val version = ManifestStore.snapshot(s, path).version
-      out
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_chars")).as("chars_sum"),
-          sum(h32l(col("doc_id"))).as("doc_fp")
-        )
-        .withColumn("version", lit(version))
-        .orderBy("source")
-        .localCheckpoint(true)
+      graft.streaming.StreamManifestIngest.replay(docs, path) { store =>
+        store
+          .groupBy(col("source"))
+          .agg(
+            count(lit(1)).as("n_docs"),
+            sum(col("n_chars")).as("chars_sum"),
+            sum(h32l(col("doc_id"))).as("doc_fp")
+          )
+          .withColumn("version", lit(ManifestStore.snapshot(s, path).version))
+          .orderBy("source")
+      }
     }
   }
 

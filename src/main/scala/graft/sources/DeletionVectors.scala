@@ -68,26 +68,12 @@ object DeletionVectors {
     if (!ManifestStore.exists(spark, root)) 1L
     else ManifestStore.snapshot(spark, root).version + 1
 
-  /** Records `(id, seq)` for `ids`, built on the driver from the ids
-    * it already holds — a local relation, so staging it scans no
-    * input.
-    */
-  private[sources] def localRecords(
-      spark: SparkSession,
-      idCol: String,
-      seq: Long,
-      ids: Seq[Long]
-  ): DataFrame = {
-    import spark.implicits._
-    ids.map(_ -> seq).toDF(idCol, SEQ_COL)
-  }
-
   /** One sorted single-file staged run of records — O(batch) data
     * bytes and one O(batch) write task per commit, never O(vector):
     * parquet's delta encoding collapses dense runs and the file's
     * (min, max) stays a tight zone map.
     */
-  private[sources] def stageRecords(
+  private def stageRecords(
       records: DataFrame,
       root: String,
       table: String,

@@ -799,6 +799,16 @@ object ManifestStore {
   def tagForStage(df: DataFrame, root: String, table: String): DataFrame =
     tagFieldIds(df, stageFieldIds(root, table, df.schema))
 
+  /** [[tagForStage]] for a write that takes a schema, not a frame:
+    * `schema` with the table's field ids.
+    */
+  private[sources] def stageSchema(
+      schema: StructType,
+      root: String,
+      table: String
+  ): StructType =
+    withFieldIds(schema, stageFieldIds(root, table, schema))
+
   // ---------------------------------------------------------------
   // Staged listing + footer stats (driver-side)
   // ---------------------------------------------------------------

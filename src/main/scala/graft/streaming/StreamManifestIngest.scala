@@ -62,9 +62,11 @@ object StreamManifestIngest {
     * applied to each batch — harsher than any real failure schedule).
     * The store must read back as the plain corpus, and the manifest
     * version must count only the first deliveries. The store is the
-    * state; the returned readback is detached from its files.
+    * state; `read` shapes its readback after the last batch, and that
+    * result is what the one checkpoint detaches from the files.
     */
-  def replay(docs: DataFrame, root: String, batches: Int = 4): DataFrame = {
+  def replay(docs: DataFrame, root: String, batches: Int = 4)(
+      read: DataFrame => DataFrame = identity): DataFrame = {
     val slim = docs.select(
       col("doc_id"), col("source"),
       col("n_chars").cast("long").as("n_chars"))
@@ -73,6 +75,6 @@ object StreamManifestIngest {
       assert(first, s"first delivery of batch $b must publish")
       val second = applyBatch(slice, root, b.toLong)
       assert(!second, s"redelivery of batch $b must be recognized")
-    }(ManifestStore.read(docs.sparkSession, root))
+    }(read(ManifestStore.read(docs.sparkSession, root)))
   }
 }

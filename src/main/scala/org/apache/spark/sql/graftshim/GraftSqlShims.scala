@@ -9,8 +9,11 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession}
   * extension libraries (graft.plans.AsOfJoin builds its custom
   * logical node through this) — plus the checkpoint-block release
   * that `Dataset.localCheckpoint` has no public inverse for, the
-  * listener-bus drain and the query execution an execution-end event
-  * carries. Nothing else from the private surface is touched.
+  * listener-bus drain, the query execution an execution-end event
+  * carries, and what a task that writes its own files needs: a
+  * one-task job under an SQL execution, the session's Hadoop
+  * configuration and the task's output metrics. Nothing else from
+  * the private surface is touched.
   */
 object GraftSqlShims {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -57,6 +60,40 @@ object GraftSqlShims {
           case _ => ()
         }
       case _ => ()
+    }
+
+  /** Run `task` over the physical rows of `df`, which must have ONE
+    * partition, as one Spark job under one SQL execution named
+    * `action` — the context a Dataset action runs in: the session's
+    * SQL conf reaches the task, and listeners see the plan. Returns
+    * what the task returned.
+    */
+  def runOneTask[T: scala.reflect.ClassTag](df: DataFrame, action: String)(
+      task: Iterator[org.apache.spark.sql.catalyst.InternalRow] => T): T = {
+    val qe = df.asInstanceOf[Dataset[_]].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some(action)) {
+      val rdd = qe.toRdd
+      require(rdd.getNumPartitions == 1,
+        s"$action runs one task, got ${rdd.getNumPartitions} partitions")
+      val Array(out) = qe.sparkSession.sparkContext.runJob(rdd, task)
+      out
+    }
+  }
+
+  /** The session's Hadoop configuration with its SQL conf applied —
+    * what a DataFrameWriter hands its file format.
+    */
+  def hadoopConf(spark: org.apache.spark.sql.SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[SparkSession].sessionState.newHadoopConfWithOptions(Map.empty)
+
+  /** Add a task's file output to its output metrics, as Spark's own
+    * file writers do, so stage listeners count the bytes written.
+    */
+  def reportTaskOutput(bytes: Long, records: Long): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach { tc =>
+      val m = tc.taskMetrics().outputMetrics
+      m.setBytesWritten(m.bytesWritten + bytes)
+      m.setRecordsWritten(m.recordsWritten + records)
     }
 
   /** Re-tag a batch DataFrame's plan as STREAMING — what a V1

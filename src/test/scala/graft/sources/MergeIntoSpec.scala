@@ -215,12 +215,13 @@ class MergeIntoSpec extends SparkSpec {
     } finally Scratch.deleteRecursively(root)
   }
 
-  test("an applied merge of a 64-partition batch runs at most 4 Spark " +
-    "jobs and no stage wider than one task per core, above ISIN_MAX keys too") {
+  test("an applied merge of a 64-partition batch runs ONE Spark job of " +
+    "one task: mixed, above ISIN_MAX keys, pure deletes and fresh inserts") {
     val root = Scratch.tempDir("graft-merge-budget")
     try {
       ManifestStore.write(docs, root, Seq("source"))
       val k = col("doc_id")
+      val dvName = DeletionVectors.dvTable(ManifestStore.MAIN)
       // a vector already exists: the merge's records pile on it
       val killed = docs.filter(pmod(k, lit(9)) === 4)
       DeletionVectors.delete(spark, root, ManifestStore.MAIN, "doc_id",
@@ -236,24 +237,121 @@ class MergeIntoSpec extends SparkSpec {
       val wide = ev(docs.filter(pmod(k, lit(3)) =!= 0)
         .withColumn("n_chars", col("n_chars") + lit(3L)), "U", 2, 1)
       assert(wide.count() > ManifestStore.ISIN_MAX)
-      val cores = spark.sparkContext.defaultParallelism
-      Seq(mixed, wide).zipWithIndex.foreach { case (b, id) =>
-        val batch = spread(b, 64)
-        assert(batch.rdd.getNumPartitions === 64)
-        val (jobs, widest) = jobBudget {
-          val (_, applied) = MergeInto.merge(spark, root, batch, "budget", id.toLong)
-          assert(applied)
+      // deletes only: no upsert file; fresh inserts only, above every
+      // file's max key: no vector run
+      val deletes = ev(docs.filter(pmod(k, lit(11)) === 5), "D", 3, 1)
+      val fresh = ev(docs.filter(pmod(k, lit(10)) === 7)
+        .withColumn("doc_id", k + lit(90000L)), "I", 4, 1)
+      Seq(mixed -> "mixed", wide -> "wide", deletes -> "deletes", fresh -> "fresh")
+        .zipWithIndex.foreach { case ((b, name), id) =>
+          val batch = spread(b, 64)
+          assert(batch.rdd.getNumPartitions === 64)
+          val pre = ManifestStore.snapshot(spark, root)
+          val (jobs, widest) = jobBudget {
+            val (_, applied) = MergeInto.merge(spark, root, batch, "budget", id.toLong)
+            assert(applied)
+          }
+          assert(jobs.size === 1, s"applied merge $name ran ${jobs.size} Spark " +
+            jobs.mkString("jobs:\n", "\n", ""))
+          assert(widest === 1, s"a stage of merge $name ran $widest tasks")
+          val post = ManifestStore.snapshot(spark, root)
+          val data = ManifestStore.fileDiff(pre, post, ManifestStore.MAIN)._1
+          val runs = ManifestStore.fileDiff(pre, post, dvName)._1
+          assert(data.nonEmpty === (name != "deletes"), s"$name: upsert files $data")
+          assert(runs.size === (if (name == "fresh") 0 else 1), s"$name: vector runs $runs")
         }
-        assert(jobs.size <= 4, s"applied merge $id ran ${jobs.size} Spark " +
-          jobs.mkString("jobs:\n", "\n", ""))
-        assert(widest <= cores,
-          s"a stage of merge $id ran $widest tasks on $cores cores")
-      }
       val expect = Materializer.materialize(
         ev(docs, "I", 0, 0).unionByName(ev(killed, "D", 0, 1))
-          .unionByName(mixed).unionByName(wide), keyCol = "doc_id")
+          .unionByName(mixed).unionByName(wide).unionByName(deletes)
+          .unionByName(fresh), keyCol = "doc_id")
       assert(canon(DeletionVectors.read(ManifestStore.snapshot(spark, root)))
         === canon(expect))
+    } finally Scratch.deleteRecursively(root)
+  }
+
+  test("a merge-staged file has the parquet schema, field ids, codec and " +
+    "Spark footer metadata a DataFrameWriter writes for the same rows") {
+    val root = Scratch.tempDir("graft-merge-files")
+    try {
+      ManifestStore.write(docs, root, Seq("source"))
+      val k = col("doc_id")
+      val dvName = DeletionVectors.dvTable(ManifestStore.MAIN)
+      val b = ev(docs.filter(pmod(k, lit(5)) === 0)
+        .withColumn("n_chars", col("n_chars") + lit(1L)), "U", 1, 1)
+        .unionByName(ev(docs.filter(pmod(k, lit(7)) === 3), "D", 1, 2))
+      val pre = ManifestStore.snapshot(spark, root)
+      MergeInto.merge(spark, root, b, "files", 0L)
+      val post = ManifestStore.snapshot(spark, root)
+      val Seq(run) = ManifestStore.fileDiff(pre, post, dvName)._1
+      val data = ManifestStore.fileDiff(pre, post, ManifestStore.MAIN)._1
+      assert(data.nonEmpty)
+      val out = Scratch.tempDir("graft-merge-files-ref")
+      // the reference: the same rows, as the frame the table's stage
+      // path tags and hands a DataFrameWriter
+      def written(df: DataFrame, table: String, name: String) = {
+        ManifestStore.tagForStage(df, root, table).coalesce(1)
+          .write.parquet(s"$out/$name")
+        new java.io.File(s"$out/$name").listFiles()
+          .filter(_.getName.endsWith(".parquet")).head.getPath
+      }
+      val schema = post.state(ManifestStore.MAIN).schemaDdl
+      val cast = org.apache.spark.sql.types.StructType.fromDDL(schema).fields
+        .map(f => col(f.name).cast(f.dataType)).toSeq
+      data.foreach { f =>
+        val part = MergeIntoSpec.footer(s"$root/${f.path}")
+        val src = spark.read.parquet(s"$root/${f.path}").select("source").head().getString(0)
+        val ref = MergeIntoSpec.footer(written(b.filter(col("op") =!= "D" &&
+          col("source") === src).select(cast: _*), ManifestStore.MAIN, src))
+        assert(part === ref, s"upsert file ${f.path}")
+      }
+      val killed = recordsAt(post)
+      import spark.implicits._
+      val ref = MergeIntoSpec.footer(written(killed.map(_ -> post.version)
+        .toDF("doc_id", DeletionVectors.SEQ_COL), dvName, "dv"))
+      assert(MergeIntoSpec.footer(s"$root/${run.path}") === ref, s"vector run ${run.path}")
+      Scratch.deleteRecursively(out)
+    } finally Scratch.deleteRecursively(root)
+  }
+
+  test("a failed task attempt's files are never committed: the " +
+    "redelivered batch reads back ≡ Materializer") {
+    val root = Scratch.tempDir("graft-merge-attempt")
+    try {
+      ManifestStore.write(docs, root, Seq("source"))
+      val k = col("doc_id")
+      val b = ev(docs.filter(pmod(k, lit(4)) === 1)
+        .withColumn("n_chars", col("n_chars") + lit(1L)), "U", 1, 1)
+        .unionByName(ev(docs.filter(pmod(k, lit(4)) === 3), "D", 1, 2))
+      // the same batch with its greatest upserted key moved to a
+      // partition value too long for a directory name: the task has
+      // written the upsert files of lower keys when that open fails
+      val last = b.filter(col("op") === "U").agg(max(k)).head().getLong(0)
+      val bad = b.withColumn("source",
+        when(k === last, lit("x" * 300)).otherwise(col("source")))
+      intercept[Exception](MergeInto.merge(spark, root, bad, "attempt", 0L))
+      val committed = ManifestStore.snapshot(spark, root)
+      assert(committed.version === 1L, "the failed merge must publish nothing")
+      def onDisk = {
+        import scala.jdk.CollectionConverters._
+        val w = java.nio.file.Files.walk(java.nio.file.Paths.get(root, "_data"))
+        try w.iterator().asScala.map(_.toString)
+          .filter(_.endsWith(".parquet")).toSet
+        finally w.close()
+      }
+      def referenced(s: ManifestStore.Snapshot) =
+        (s.filePaths() ++ (if (s.hasTable(DeletionVectors.dvTable(ManifestStore.MAIN)))
+          s.filePaths(DeletionVectors.dvTable(ManifestStore.MAIN)) else Nil))
+          .map(p => new java.io.File(s"$root/$p").getCanonicalPath).toSet
+      val left = onDisk.map(p => new java.io.File(p).getCanonicalPath) -- referenced(committed)
+      assert(left.nonEmpty, "the failed attempt left no file behind")
+      val (_, applied) = MergeInto.merge(spark, root, b, "attempt", 0L)
+      assert(applied)
+      val snap = ManifestStore.snapshot(spark, root)
+      assert((referenced(snap) intersect left).isEmpty,
+        s"committed a failed attempt's files: ${referenced(snap) intersect left}")
+      assert(left.forall(p => new java.io.File(p).exists))
+      assert(canon(DeletionVectors.read(snap)) === canon(Materializer.materialize(
+        ev(docs, "I", 0, 0).unionByName(b), keyCol = "doc_id")))
     } finally Scratch.deleteRecursively(root)
   }
 
@@ -472,6 +570,25 @@ class MergeIntoSpec extends SparkSpec {
 }
 
 object MergeIntoSpec {
+
+  /** What a parquet file's footer says of how it was written: its
+    * schema (field ids included), every column chunk's codec, its
+    * key-value metadata keys and the schema Spark stored in them.
+    */
+  def footer(path: String): (String, Set[String], Set[String], String) = {
+    import scala.jdk.CollectionConverters._
+    val rdr = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(java.nio.file.Paths.get(path)))
+    try {
+      val meta = rdr.getFooter.getFileMetaData
+      val kv = meta.getKeyValueMetaData.asScala
+      (meta.getSchema.toString,
+        rdr.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+          .map(_.getCodec.name).toSet,
+        kv.keySet.toSet,
+        kv.getOrElse("org.apache.spark.sql.parquet.row.metadata", ""))
+    } finally rdr.close()
+  }
 
   /** A latch pair a UDF inside a merge's first job waits on, so a test
     * can commit between the merge's snapshot and its publish.

@@ -82,10 +82,12 @@ class FoldSpec extends SparkSpec {
       StreamBottomK.replay(docs.select(col("source"), col("doc_id")))),
     "stream24 StreamManifestIngest" -> (() => {
       val root = Scratch.tempDir("graft-fold-leak")
-      try StreamManifestIngest.replay(docs, root)
+      try StreamManifestIngest.replay(docs, root)()
       finally Scratch.deleteRecursively(root)
     }),
-    "cdc13 StreamJoinMaintain" -> (() => StreamJoinMaintain.replay(changeLog))
+    "cdc13 StreamJoinMaintain" -> (() => StreamJoinMaintain.replay(changeLog)),
+    "stream24 query builder" -> (() =>
+      graft.SparkEntry.queries("stream24_manifest_ingest")(spark, sfDir))
   )
 
   replays.foreach { case (name, run) =>

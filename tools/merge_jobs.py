@@ -11,8 +11,11 @@ For every span named NAME (`--span`, default `merge`) it prints the wall
 time, the number of Spark jobs launched under it, the widest stage's task
 count, the driver gap (wall time not covered by any running job), the
 bytes its tasks wrote and, per job, its stages' task counts and its
-duration. The last line is one summary over all those spans: the median
-jobs, wall time, driver gap and staged bytes per span.
+duration. The last line is one summary over all those spans: the first
+(cold) span on its own, then the median over the rest (warm) of jobs,
+wall time, driver gap and staged bytes per span. The cold span pays the
+session's first-use costs (code generation, class loading), so a median
+over all spans would hide it, and it alone can set a run's tail.
 """
 import argparse
 import json
@@ -60,12 +63,16 @@ def main(path, name):
               f"driver gap {gap:.3f} s, staged {staged} bytes")
         for j, ts in zip(jobs, tasks):
             print(f"  job {j['job']:4d}  stages {ts}  {(j['end'] - j['start']) / 1e9:.3f} s")
-    if rows:
-        med = [statistics.median(c) for c in zip(*rows)]
-        print(f"summary: {len(rows)} {name} spans, median {med[0]:g} jobs, {med[1]:.3f} s wall, "
-              f"{med[2]:.3f} s driver gap, {med[3]:.0f} bytes staged per span")
-    else:
+    if not rows:
         sys.exit(f"no span named {name!r} in {path}")
+
+    def cells(jobs, wall, gap, staged):
+        return f"{jobs:g} jobs, {wall:.3f} s wall, {gap:.3f} s driver gap, {staged:.0f} bytes staged"
+
+    line = f"summary: {len(rows)} {name} spans; cold (first): {cells(*rows[0])}"
+    if len(rows) > 1:
+        line += f"; warm median of {len(rows) - 1}: {cells(*(statistics.median(c) for c in zip(*rows[1:])))}"
+    print(line)
 
 
 if __name__ == "__main__":
